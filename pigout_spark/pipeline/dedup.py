@@ -18,11 +18,14 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import logging
 import random
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+log = logging.getLogger(__name__)
 
 #: Mersenne prime modulus for the MinHash permutation family.
 MINHASH_P = 2_147_483_647
@@ -798,15 +801,32 @@ def simhash16(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 #: Edge count past which :func:`dedup_clusters` layers a key-partitioned
-#: DISK_ONLY cache over the checkpointed symmetric edge list so the
-#: per-round message join plans zero edge-side exchange (r15, VERDICT
-#: r14 #2).  Keyed to the measured crossover, not the core count: at
-#: 4.2 M edges the cached path wins ~20% (interleaved A/B in the
-#: dedup_clusters source comment), at 40 k it loses ~4 s to the cache
-#: machinery's fixed cost.  1 M sits conservatively between the two —
-#: at 100 TB every real dup graph is far above it, so production always
-#: takes the cached (shuffle-free) path.
+#: DISK_ONLY cache over the checkpointed symmetric edge list, so the
+#: per-round request join plans zero edge-side exchange.  Keyed to the
+#: measured crossover, not the core count: at 4.2 M edges the cached
+#: path ran the CC stage ~20% faster, at 40 k it lost ~4 s to the cache
+#: machinery's fixed per-round cost.  1 M sits between the two; at
+#: 100 TB every real dup graph is far above it.
 _CC_EDGE_CACHE_MIN = 1_000_000
+
+
+def _without_size_estimate(df: DataFrame) -> DataFrame:
+    """``df``'s rows under a plan with no optimizer size estimate.
+
+    A checkpoint keeps the size estimate of the plan it cuts, and a
+    join's estimate is the product of its inputs'.  A loop that joins
+    its state with itself therefore squares the estimate every round:
+    its digit count doubles, and the driver's big-integer arithmetic on
+    it grew from 0.4 s per round at round 15 to 70 s at round 23 on a
+    64-node chain.  Without an estimate Spark assumes its default size;
+    the round's plan does not change (its one join is hinted)."""
+    session = df.sparkSession
+    return DataFrame(
+        session._jsparkSession.internalCreateDataFrame(
+            df._jdf.queryExecution().toRdd(), df._jdf.schema(), False
+        ),
+        session,
+    )
 
 
 def dedup_clusters(
@@ -822,226 +842,144 @@ def dedup_clusters(
     step every pair generator above feeds: near-dup dedup keeps one doc
     per CLUSTER, not per pair (pair relations aren't transitive-closed).
 
-    Min-label propagation with pointer jumping, driver-coordinated
-    (iterative CC is the one legitimately loop-shaped op in this
-    module).  Per iteration: neighbor messages (edges ⋈ labels — one
-    shuffle), label-of-label jumping (labels ⋈ labels on lbl=id), and
-    one min-aggregate; ``localCheckpoint`` truncates lineage so plan
-    depth stays constant.  Pointer jumping halves path lengths each
-    round, so convergence is O(log diameter) iterations, not
-    O(diameter) — an adversarial million-doc chain needs ~20 rounds,
-    and real dup clusters (near-cliques from threshold pairing)
-    converge in 2–3.  Convergence detection for numeric ids is
-    joinless: labels are monotonically non-increasing per doc, so ANY
-    change strictly decreases Σlabel — one decimal aggregate per round
-    on the already-checkpointed state instead of an old⋈new comparison.
-    Non-numeric ids (string/hash/UUID) can't be summed, so they use an
-    old⋈new changed-label probe (key-equi join, ``limit(1)``) — never
-    the silent one-iteration false convergence a NULL-summing probe
-    would give.  Exceeding ``max_iter`` raises rather than returning
-    half-merged clusters.
+    Min-label propagation with pointer jumping and parent hooking
+    (after Shiloach–Vishkin, J. Algorithms 1982), driver-coordinated.
+    The state is ``(id, lbl, old)``, ``old`` being the label before the
+    last round, so a node changed iff ``lbl < old`` — for any orderable
+    id type.  The initial state is round 0 (each node's label is the
+    smallest of itself and its neighbors).  Each further round sends:
+
+    - a changed node's label along its edges (an unchanged node already
+      delivered its label, and labels only shrink, so only the frontier
+      sends);
+    - to every node the label of its label's node (pointer jumping);
+    - a changed node's new label to its old label's node (hooking: the
+      old parent adopts the smaller root, so trees merge whole).
+
+    Edges and pointers form ONE request relation joined once with the
+    state on ``id``; one min-aggregate folds the answers, the hook rows
+    and each node's own row.  It converges when no node changed; more
+    than ``max_iter`` rounds raises rather than returning half-merged
+    clusters.  Measured rounds after round 0: 7 on a 64-node chain with
+    sorted ids, 12 with ids shuffled by ``random.Random(3)``, 6-7 on
+    sf0.1 MinHash star graphs (8 k edges over 4.6 k docs).
 
     100 TB: every step is a key-equi join or partial agg on doc ids —
     no broadcast of anything data-sized, no driver materialization;
-    state per round is one (id, lbl) row per doc in any pair.  The
-    symmetric edge list is cached DISK_ONLY already partitioned on the
-    join key (r15) — the per-round message join re-exchanges only the
-    frontier-pruned sender side, never the edges.
-    Checkpoint storage is DISK_ONLY (r14): checkpoint blocks are the
-    ONLY copy of their data (lineage is truncated), so the block
-    manager can never evict them — with the default memory-first
-    level, a large edge relation plus one label snapshot per round
-    pins unified memory until EXECUTION cannot acquire a page (the
-    sf3 sweep reproduced exactly that: SparkOutOfMemoryError
-    UNABLE_TO_ACQUIRE_MEMORY on the 130M-edge symmetric list).
-    Disk-backed checkpoints cost one serialized write/read per round
-    and keep the whole memory region for the joins; on a real cluster
-    the same reasoning picks reliable (HDFS/object-store) checkpoints.
+    state per round is one row per doc in any pair.  Above
+    ``_CC_EDGE_CACHE_MIN`` edges the edge list is cached already
+    partitioned on the join key, so no round re-exchanges it.  All
+    checkpoints are DISK_ONLY: a checkpoint block is the only copy of
+    its data, so the block manager can never evict it, and memory-first
+    checkpoints of a 130 M-edge list plus one state per round starved
+    execution memory (SparkOutOfMemoryError UNABLE_TO_ACQUIRE_MEMORY).
     """
     disk = StorageLevel.DISK_ONLY
+    sc = pairs.sparkSession.sparkContext
     npart = int(
         pairs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
     )
-    # materialize the symmetric edge list ONCE: it is joined every
-    # round, and without the materialization the whole upstream pair
-    # generation (minhash/jaccard/simhash) would re-execute per round —
-    # measured 28 s → 12 s on the sf0.1 minhash graph (2M edges).
-    # r14 (guide §2.3/§2.4), three shape changes, output-identical:
-    # - BOTH edge directions are emitted IN-TASK (explode of a 2-array)
-    #   instead of union-of-two-projections, which planned the entire
-    #   upstream pair generation TWICE (no common-subexpression reuse
-    #   across union branches) — one pass over the pair relation, not
-    #   two.
-    # - The edge relation is LANDED ON THE JOIN KEY (explicit-count
-    #   repartition on u, AQE-coalesce-exempt) before materializing.
-    # - The former ``.distinct()`` (a second full-width exchange) is
-    #   gone: min-label CC is idempotent to parallel edges, so dedup of
-    #   a pair relation that generators already emit exactly-once was
-    #   pure overhead — duplicate-heavy inputs just add message volume
-    #   that the map-side partial min absorbs.
-    # r15 (VERDICT r14 #2, guide §2.4): checkpoint, then — for graphs
-    # where it pays — cache-on-key.  A localCheckpoint surfaces as
-    # LogicalRDD with UnknownPartitioning (measured on this Spark
-    # build), so every round RE-EXCHANGED the whole edge relation onto
-    # the join key (an edge-sized shuffle per round at 100 TB).  Two
-    # attempted fixes, both A/B-measured at sf0.1:
-    # - a bare ``persist`` instead of the checkpoint preserves the
-    #   partitioning but leaves the full pair-generation lineage in
-    #   every round's logical plan — measured +1.5 s of per-round
-    #   driver analysis/canonicalization (CacheManager matches by
-    #   canonicalized plan, so each round re-canonicalized the whole
-    #   LSH subtree).  Rejected.
-    # - checkpoint THEN a one-exchange repartition+persist on top: the
-    #   checkpoint truncates lineage (tiny per-round plans) and the
-    #   InMemoryRelation carries HashPartitioning(u, npart), so the
-    #   per-round join plans ZERO edge-side exchange — the round's only
-    #   exchange is the frontier-pruned sender side.  Interleaved A/B
-    #   (3 reps/arm, same session): the 4.2 M-edge pair-clique graph
-    #   runs the CC stage 22.6/24.0/28.2 s vs 28.1/31.6/49.1 s
-    #   checkpoint-only (~20% faster); the 40 k-edge star graph LOSES
-    #   ~4 s to the cache machinery's fixed per-round cost (columnar
-    #   cache read + CacheManager lookup + one extra materialization
-    #   job dominate a sub-MB exchange).
-    # So the cache is SIZE-GATED on the materialized edge count (one
-    # cheap count over the just-written checkpoint blocks): big graphs
-    # — where the per-round edge exchange is real data, and the only
-    # regime that exists at 100 TB — take the cached path; small ones
-    # keep the r14 shape.  The cache copy doubles transient edge
-    # storage on disk; both copies drop when the call returns.
-    # The r14 objection to persist() — CacheManager serves rebuilt
-    # bench runs by canonicalized-plan match, i.e. silent result
-    # caching — is closed by the ``finally`` unpersist below: the cache
-    # entry lives only inside THIS call (the loop runs its own
-    # per-round actions), is deregistered before returning, and the
-    # returned labels are checkpoint-backed, independent of it.
-    edges = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col(left).alias("u"), F.col(right).alias("v")
-                    ),
-                    F.struct(
-                        F.col(right).alias("u"), F.col(left).alias("v")
-                    ),
-                )
-            ).alias("__e")
-        )
-        .select(F.col("__e.u").alias("u"), F.col("__e.v").alias("v"))
-        .localCheckpoint(storageLevel=disk)
-    )
+    # The symmetric edge list is read every round, so it is materialized
+    # once (else the whole pair generation re-runs per round: 28 s →
+    # 12 s on a 2 M-edge minhash graph).  Both directions come from one
+    # in-task explode: a union of two projections planned the pair
+    # generation twice.  No distinct: min-label CC is idempotent to
+    # parallel edges.  A checkpoint has no known partitioning, so big
+    # graphs also get a cache repartitioned on the join key; a bare
+    # persist without the checkpoint kept the pair-generation lineage
+    # in every round's plan (+1.5 s of per-round analysis at sf0.1).
+    prev_desc = sc.getLocalProperty("spark.job.description")
     cached_edges = None
-    if edges.count() >= _CC_EDGE_CACHE_MIN:
-        edges = edges.repartition(npart, "u").persist(disk)
-        cached_edges = edges
-    labels = (
-        edges.select("u").distinct()
-        .select(F.col("u").alias("id"), F.col("u").alias("lbl"))
-        .localCheckpoint(storageLevel=disk)
-    )
-
-    def _total(lbls: DataFrame):
-        # exact Σlabel (decimal accumulator — no int64 overflow at any
-        # corpus size); strictly decreases while any label can shrink.
-        # try_cast, not cast: ANSI mode throws on non-numeric ids, and
-        # the NULL result is exactly the signal that selects the
-        # join-probe path below
-        return lbls.agg(
-            F.sum(F.col("lbl").try_cast("decimal(38,0)"))
-        ).first()[0]
-
-    # Convergence probe selection: the joinless Σlabel probe only works
-    # when labels cast to a number.  String/hash/UUID doc ids (common in
-    # dedup) cast to NULL — every round's Σ would be None and
-    # None == None would declare convergence after ONE iteration,
-    # silently returning half-merged clusters.  Probe the cast once up
-    # front: numeric ids keep the one-aggregate fast path; otherwise
-    # fall back to an old⋈new changed-label check (one key-equi join on
-    # two checkpointed (id,lbl) frames, short-circuited by limit(1)) —
-    # correct for ANY orderable id type.
-    prev_total = _total(labels)
-    numeric_probe = prev_total is not None or labels.isEmpty()
-    # Delta messaging (r14, guide §2.3 — shuffle fewer bytes): a node
-    # whose label did NOT change last round already delivered that
-    # label to its neighbors in an earlier round (labels are monotone
-    # non-increasing and min is idempotent), so only CHANGED nodes need
-    # to send.  Per-round label states are bit-identical to the
-    # all-nodes scheme (round 0 sends everything); what shrinks is the
-    # message relation — after the first round it is delta-sized, not
-    # edge-sized, which at corpus scale is the difference between
-    # re-shuffling the whole graph every round and shuffling only the
-    # frontier.
-    changed = labels
     try:
-        for _ in range(max_iter):
-            # r14 (guide §3.1): the sender side is node-sized
-            # (delta-sized after round 0); SHUFFLE_HASH builds that
-            # small slice per partition (never a broadcast of a
-            # node-sized relation) and STREAMS the cached edges — no
-            # per-round sort of the edge list, which the default
-            # sort-merge paid every round.  r15: the edge side is an
-            # InMemoryRelation carrying HashPartitioning(u, npart), so
-            # the round's ONLY exchange is the sender side.
-            msgs = edges.join(
-                changed.hint("shuffle_hash"), edges["u"] == changed["id"]
-            ).select(F.col("v").alias("id"), F.col("lbl"))
-            jump = (
-                labels.alias("a")
-                .join(labels.alias("b"), F.col("a.lbl") == F.col("b.id"))
-                .select(
-                    F.col("a.id").alias("id"), F.col("b.lbl").alias("lbl")
-                )
+        sc.setJobDescription("dedup_clusters round 0")
+        edges = (
+            pairs.select(
+                F.explode(
+                    F.array(
+                        F.struct(
+                            F.col(left).alias("u"), F.col(right).alias("v")
+                        ),
+                        F.struct(
+                            F.col(right).alias("u"), F.col(left).alias("v")
+                        ),
+                    )
+                ).alias("__e")
             )
-            # eager=False (r14): the convergence probe right below is
-            # the round's first action and materializes the checkpoint
-            # as a side effect — ONE Spark job per round instead of two
-            # (the eager default materialized in its own job, then the
-            # probe ran a second; at bench scale the per-job fixed cost
-            # was ~half the round wall).
-            new_labels = (
-                labels.select("id", "lbl")
-                .union(msgs)
-                .union(jump)
+            .select(F.col("__e.u").alias("u"), F.col("__e.v").alias("v"))
+            .localCheckpoint(storageLevel=disk)
+        )
+        n_edges = edges.count()
+        if n_edges >= _CC_EDGE_CACHE_MIN:
+            edges = edges.repartition(npart, "u").persist(disk)
+            cached_edges = edges
+        state = (
+            edges.groupBy("u")
+            .agg(F.least(F.col("u"), F.min("v")).alias("lbl"))
+            .select(F.col("u").alias("id"), "lbl", F.col("u").alias("old"))
+            .localCheckpoint(eager=False, storageLevel=disk)
+        )
+        requests = edges.select(
+            F.col("u").alias("key"),
+            F.col("v").alias("dst"),
+            F.lit(True).alias("edge"),
+        )
+        no_old = F.lit(None).cast(state.schema["old"].dataType).alias("old")
+        changed = F.col("lbl") < F.col("old")
+        rounds = 0
+        while not state.where(changed).isEmpty():
+            if rounds == max_iter:
+                raise RuntimeError(
+                    f"dedup_clusters did not converge in {rounds} rounds "
+                    f"(max_iter={max_iter}) — pathological graph "
+                    "topology; raise max_iter"
+                )
+            rounds += 1
+            sc.setJobDescription(f"dedup_clusters round {rounds}")
+            pointers = state.where(F.col("lbl") < F.col("id")).select(
+                F.col("lbl").alias("key"),
+                F.col("id").alias("dst"),
+                F.lit(False).alias("edge"),
+            )
+            if cached_edges is not None:
+                # a union keeps HashPartitioning(key) only when both
+                # sides carry it; without this the cached edges would
+                # be re-exchanged every round
+                pointers = pointers.repartition(npart, "key")
+            # SHUFFLE_HASH builds the node-sized state per partition and
+            # streams the requests: no per-round sort of the edge list
+            answers = (
+                requests.union(pointers)
+                .join(state.hint("shuffle_hash"), F.col("key") == F.col("id"))
+                .where(~F.col("edge") | changed)
+                .select(F.col("dst").alias("id"), "lbl", no_old)
+            )
+            hooks = state.where(changed).select(
+                F.col("old").alias("id"), "lbl", no_old
+            )
+            # eager=False: next round's probe is the first action on it
+            state = _without_size_estimate(
+                state.select("id", "lbl", F.col("lbl").alias("old"))
+                .union(answers)
+                .union(hooks)
                 .groupBy("id")
-                .agg(F.min("lbl").alias("lbl"))
+                .agg(F.min("lbl").alias("lbl"), F.min("old").alias("old"))
                 .localCheckpoint(eager=False, storageLevel=disk)
             )
-            # next round's senders: nodes whose label shrank this round
-            # (node-sized join of two checkpointed label frames,
-            # evaluated lazily inside next round's single job).  r15
-            # (ADVICE r14 dedup.py:930): ONE definition — the
-            # non-numeric convergence probe now derives from it instead
-            # of building the identical old⋈new join a second time.
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), F.col("n.id") == F.col("o.id"))
-                .where(F.col("n.lbl") != F.col("o.lbl"))
-                .select(
-                    F.col("n.id").alias("id"), F.col("n.lbl").alias("lbl")
-                )
-            )
-            if numeric_probe:
-                total = _total(new_labels)
-                converged = total == prev_total
-                prev_total = total
-            else:
-                converged = changed.isEmpty()
-            labels = new_labels
-            if converged:
-                return labels.select(
-                    F.col("id").alias(out_id), F.col("lbl").alias(out_root)
-                )
-        raise RuntimeError(
-            f"dedup_clusters did not converge in {max_iter} iterations — "
-            "pathological graph topology; raise max_iter"
+        log.debug(
+            "dedup_clusters converged after %d rounds "
+            "(%d directed edges, edge cache %s)",
+            rounds,
+            n_edges,
+            "off" if cached_edges is None else "on",
+        )
+        return state.select(
+            F.col("id").alias(out_id), F.col("lbl").alias(out_root)
         )
     finally:
-        # Deregister the edge cache before returning: the returned
-        # labels are checkpoint-backed (independent of it), and leaving
-        # it registered would (a) squat on block-manager storage and
-        # (b) let a REBUILT bench run hit the CacheManager by
-        # canonicalized-plan match — exactly the cross-run result
-        # caching the bench contract forbids.
+        sc.setLocalProperty("spark.job.description", prev_desc)
+        # the returned labels are checkpoint-backed, independent of the
+        # cache; left registered, it would squat on storage and let a
+        # rebuilt plan hit the CacheManager by canonicalized-plan match
         if cached_edges is not None:
             cached_edges.unpersist()
 

@@ -1,6 +1,6 @@
 """Graph analytics on edge relations: PageRank (fixed-iteration).
 
-Connected components (min-label propagation + pointer jumping) live in
+Connected components (min-label propagation, pointer jumping, hooking) live in
 pipeline/dedup.py:dedup_clusters — this module holds the rank side.
 
 Determinism contract (oracle-hash discipline): ranks are FIXED-POINT

@@ -508,11 +508,16 @@ def qdigest_build(
 def _assert_qdigest_params(
     digest: DataFrame, k: int, levels: int, keys: list[str] | None = None
 ) -> DataFrame:
+    # node ids are heap-numbered from the root (nid 1); the quantile
+    # walk's right-endpoint arithmetic is defined only for nid >= 1
     return digest.filter(
         F.assert_true(
             (F.col("k") == F.lit(int(k)))
             & (F.col("levels") == F.lit(int(levels))),
             F.lit(f"qdigest parameter mismatch: expected k={k}, levels={levels}"),
+        ).isNull()
+        & F.assert_true(
+            F.col("nid") >= 1, F.lit("malformed qdigest: node id below 1")
         ).isNull()
     ).select(*(keys or []), "nid", "cnt")
 

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import sys
+import warnings
 from pathlib import Path
 
 import pytest
@@ -29,6 +30,26 @@ def pytest_collection_modifyitems(config, items):
     for item in items:
         if item.nodeid in _SLOW_IDS:
             item.add_marker(pytest.mark.slow)
+    # A renamed or deleted test leaves a stale slow_tests.txt entry
+    # behind.  Checked against whole collected files and missing files;
+    # a run that selects single tests by node id collects part of a file.
+    if any("::" in str(arg) for arg in config.args):
+        return
+    collected = {item.nodeid for item in items}
+    files = {nodeid.split("::", 1)[0] for nodeid in collected}
+    stale = sorted(
+        nodeid
+        for nodeid in _SLOW_IDS - collected
+        if (path := nodeid.split("::", 1)[0]) in files
+        or not (config.rootpath / path).exists()
+    )
+    if stale:
+        warnings.warn(
+            pytest.PytestWarning(
+                f"{_SLOW_FILE.name} lists {len(stale)} test(s) that were "
+                "not collected: " + ", ".join(stale)
+            )
+        )
 
 
 @pytest.fixture(scope="session")

@@ -627,10 +627,13 @@ def test_token_budget_select(spark):
 
 
 def test_dedup_clusters_topologies(spark):
-    """Connected components over pair graphs: a 64-node chain (worst
-    case for plain label propagation — pointer jumping must converge in
-    O(log n) rounds, well under the 25-iteration cap), a clique, and
-    disjoint small components."""
+    """Connected components over pair graphs: 64-node chains (worst
+    case for plain label propagation — pointer jumping and hooking must
+    converge in O(log n) rounds, well under the 25-round cap) with
+    sorted ids, with shuffled ids, and with the shuffled ids as
+    strings; a clique; disjoint small components."""
+    import random
+
     from pigout_spark.pipeline.dedup import dedup_clusters
 
     chain = [(i, i + 1) for i in range(1, 64)]
@@ -646,6 +649,63 @@ def test_dedup_clusters_topologies(spark):
     assert all(got[i] == 100 for i in range(100, 106))
     assert got[200] == got[201] == 200 and got[300] == got[301] == 300
     assert len(got) == 64 + 6 + 4
+
+    # sorted ids are a chain's best case; shuffled ids need hooking to
+    # finish under the default cap (46 rounds without it, 12 with)
+    ids = list(range(1000, 1064))
+    random.Random(3).shuffle(ids)
+    for walk in (ids, [f"doc-{i}" for i in ids]):
+        pairs = spark.createDataFrame(
+            list(zip(walk, walk[1:])), ["doc_a", "doc_b"]
+        )
+        got = {
+            r.doc_id: r.cluster_id for r in dedup_clusters(pairs).collect()
+        }
+        assert got == dict.fromkeys(walk, min(walk))
+
+
+def test_dedup_clusters_cached_edge_path(spark, monkeypatch, caplog):
+    """Both branches of the edge-cache size gate give union-find's
+    components; the cached branch leaves no cache entry and no
+    non-checkpoint RDD persisted, and the caller's job description is
+    restored.  The result's optimizer size estimate does not compound
+    across rounds (squared per round, it stalled the driver for minutes
+    by round ~20).  A round limit too small for the graph raises with
+    the number of rounds run."""
+    import logging
+
+    import pytest
+
+    from pigout_spark.pipeline import dedup
+
+    edges = [(9, 4), (4, 7), (7, 2), (5, 6), (6, 5), (3, 3), (8, 1), (1, 8)]
+    want = {9: 2, 4: 2, 7: 2, 2: 2, 5: 5, 6: 5, 3: 3, 8: 1, 1: 1}
+    pairs = spark.createDataFrame(edges, ["doc_a", "doc_b"])
+    sc = spark.sparkContext
+    sc.setJobDescription("outer")
+    caplog.set_level(logging.DEBUG, logger=dedup.__name__)
+    persisted = set(sc._jsc.getPersistentRDDs())
+    try:
+        for gate, branch in ((dedup._CC_EDGE_CACHE_MIN, "off"), (0, "on")):
+            monkeypatch.setattr(dedup, "_CC_EDGE_CACHE_MIN", gate)
+            caplog.clear()
+            out = dedup.dedup_clusters(pairs)
+            got = {r.doc_id: r.cluster_id for r in out.collect()}
+            assert got == want
+            stats = out._jdf.queryExecution().optimizedPlan().stats()
+            assert stats.sizeInBytes() < 2**63
+            assert f"edge cache {branch}" in caplog.text
+            assert sc.getLocalProperty("spark.job.description") == "outer"
+        assert all(
+            rdd.isCheckpointed()
+            for rid, rdd in sc._jsc.getPersistentRDDs().items()
+            if rid not in persisted
+        )
+        with pytest.raises(RuntimeError, match="in 1 rounds"):
+            dedup.dedup_clusters(pairs, max_iter=1)
+        assert sc.getLocalProperty("spark.job.description") == "outer"
+    finally:
+        sc.setJobDescription(None)
 
 
 def test_minhash_star_edges_same_clusters(spark):
@@ -710,10 +770,8 @@ def test_dedup_clusters_merges_across_pair_sources(spark):
 
 def test_dedup_clusters_string_ids(spark):
     """Non-numeric doc ids (string/hash/UUID — the common case in
-    dedup) must use the changed-label join probe: casting them for the
-    Σlabel probe yields NULL, and a naive ``None == None`` comparison
-    would declare convergence after ONE round, silently returning a
-    half-merged chain (ADVICE r4)."""
+    dedup) must not converge early: an 8-hop chain that stops after
+    one round comes back half-merged."""
     from pigout_spark.pipeline.dedup import dedup_clusters
 
     # an 8-hop chain needs multiple propagation rounds — exactly the
@@ -2281,6 +2339,23 @@ def test_qdigest_rejects_bad_params(spark):
         qdigest_build(df, "v", levels=30)
     with pytest.raises(ValueError, match="k must"):
         qdigest_build(df, "v", k=1)
+
+
+def test_qdigest_rejects_malformed_node_id(spark):
+    """A digest row with nid < 1 (outside the root-numbered node heap)
+    fails the query loudly instead of yielding a negative estimate."""
+    import pytest
+
+    from pigout_spark.pipeline.sketches import qdigest_merge, qdigest_quantiles
+
+    bad = spark.createDataFrame(
+        [(0, 5, 64, 12), (1, 5, 64, 12)],
+        "nid long, cnt long, k int, levels int",
+    )
+    with pytest.raises(Exception, match="malformed qdigest"):
+        qdigest_quantiles(bad, [0.5], k=64, levels=12).collect()
+    with pytest.raises(Exception, match="malformed qdigest"):
+        qdigest_merge([bad], k=64, levels=12).collect()
 
 
 def test_sketchctl_cli_build_and_query(tmp_path):
