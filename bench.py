@@ -10,6 +10,7 @@ One shared SparkSession; a warmup action amortizes JVM/codegen startup
 from __future__ import annotations
 
 import json
+import logging
 import os
 import sys
 import time
@@ -18,6 +19,8 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from pigout_spark.session import get_spark  # noqa: E402
+
+log = logging.getLogger("bench")
 
 #: Headline set: the scan→group→agg spine, the big shuffling joins, the
 #: window/top-k path, cube, tokenize-explode, and the extension pillars
@@ -153,13 +156,18 @@ def _sweep_persisted(spark) -> None:
     re-execute."""
     import gc
 
+    from py4j.protocol import Py4JError
+
     gc.collect()  # drop py4j refs so the JVM side can release the plans
+    swept = []
     try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for jrdd in jmap.values().toArray():
+        for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
             jrdd.unpersist(False)
-    except Exception:
-        pass  # best-effort hygiene — never fail the bench over it
+            swept.append(jrdd.id())
+    except Py4JError:
+        # best-effort hygiene: never fail the bench over it, but say so
+        log.warning("sweeping persisted RDDs failed", exc_info=True)
+    log.debug("swept persisted RDDs %s", swept)
 
 
 def _needs_rebuild(probe) -> bool:

@@ -31,6 +31,7 @@ log = logging.getLogger(__name__)
 MINHASH_P = 2_147_483_647
 
 
+from pigout_spark.pipeline.iterate import checkpoint, fixpoint  # noqa: E402
 from pigout_spark.plans.partitioning import pin_partitions as _pin_partitions  # noqa: E402
 
 
@@ -810,25 +811,6 @@ def simhash16(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 _CC_EDGE_CACHE_MIN = 1_000_000
 
 
-def _without_size_estimate(df: DataFrame) -> DataFrame:
-    """``df``'s rows under a plan with no optimizer size estimate.
-
-    A checkpoint keeps the size estimate of the plan it cuts, and a
-    join's estimate is the product of its inputs'.  A loop that joins
-    its state with itself therefore squares the estimate every round:
-    its digit count doubles, and the driver's big-integer arithmetic on
-    it grew from 0.4 s per round at round 15 to 70 s at round 23 on a
-    64-node chain.  Without an estimate Spark assumes its default size;
-    the round's plan does not change (its one join is hinted)."""
-    session = df.sparkSession
-    return DataFrame(
-        session._jsparkSession.internalCreateDataFrame(
-            df._jdf.queryExecution().toRdd(), df._jdf.schema(), False
-        ),
-        session,
-    )
-
-
 def dedup_clusters(
     pairs: DataFrame,
     left: str = "doc_a",
@@ -860,19 +842,20 @@ def dedup_clusters(
     state on ``id``; one min-aggregate folds the answers, the hook rows
     and each node's own row.  It converges when no node changed; more
     than ``max_iter`` rounds raises rather than returning half-merged
-    clusters.  Measured rounds after round 0: 7 on a 64-node chain with
-    sorted ids, 12 with ids shuffled by ``random.Random(3)``, 6-7 on
-    sf0.1 MinHash star graphs (8 k edges over 4.6 k docs).
+    clusters; the rounds run under
+    :func:`~pigout_spark.pipeline.iterate.fixpoint`, which checkpoints
+    the state every round.  Measured rounds after round 0: 7 on a
+    64-node chain with sorted ids, 12 with ids shuffled by
+    ``random.Random(3)``, 6-7 on sf0.1 MinHash star graphs (8 k edges
+    over 4.6 k docs).
 
     100 TB: every step is a key-equi join or partial agg on doc ids —
     no broadcast of anything data-sized, no driver materialization;
     state per round is one row per doc in any pair.  Above
     ``_CC_EDGE_CACHE_MIN`` edges the edge list is cached already
     partitioned on the join key, so no round re-exchanges it.  All
-    checkpoints are DISK_ONLY: a checkpoint block is the only copy of
-    its data, so the block manager can never evict it, and memory-first
-    checkpoints of a 130 M-edge list plus one state per round starved
-    execution memory (SparkOutOfMemoryError UNABLE_TO_ACQUIRE_MEMORY).
+    checkpoints are DISK_ONLY, for the reason given at
+    :func:`~pigout_spark.pipeline.iterate.checkpoint`.
     """
     disk = StorageLevel.DISK_ONLY
     sc = pairs.sparkSession.sparkContext
@@ -912,11 +895,15 @@ def dedup_clusters(
         if n_edges >= _CC_EDGE_CACHE_MIN:
             edges = edges.repartition(npart, "u").persist(disk)
             cached_edges = edges
-        state = (
+        log.debug(
+            "dedup_clusters: %d directed edges, edge cache %s",
+            n_edges,
+            "off" if cached_edges is None else "on",
+        )
+        state = checkpoint(
             edges.groupBy("u")
             .agg(F.least(F.col("u"), F.min("v")).alias("lbl"))
             .select(F.col("u").alias("id"), "lbl", F.col("u").alias("old"))
-            .localCheckpoint(eager=False, storageLevel=disk)
         )
         requests = edges.select(
             F.col("u").alias("key"),
@@ -925,16 +912,8 @@ def dedup_clusters(
         )
         no_old = F.lit(None).cast(state.schema["old"].dataType).alias("old")
         changed = F.col("lbl") < F.col("old")
-        rounds = 0
-        while not state.where(changed).isEmpty():
-            if rounds == max_iter:
-                raise RuntimeError(
-                    f"dedup_clusters did not converge in {rounds} rounds "
-                    f"(max_iter={max_iter}) — pathological graph "
-                    "topology; raise max_iter"
-                )
-            rounds += 1
-            sc.setJobDescription(f"dedup_clusters round {rounds}")
+
+        def step(state: DataFrame) -> DataFrame:
             pointers = state.where(F.col("lbl") < F.col("id")).select(
                 F.col("lbl").alias("key"),
                 F.col("id").alias("dst"),
@@ -956,21 +935,20 @@ def dedup_clusters(
             hooks = state.where(changed).select(
                 F.col("old").alias("id"), "lbl", no_old
             )
-            # eager=False: next round's probe is the first action on it
-            state = _without_size_estimate(
+            return (
                 state.select("id", "lbl", F.col("lbl").alias("old"))
                 .union(answers)
                 .union(hooks)
                 .groupBy("id")
                 .agg(F.min("lbl").alias("lbl"), F.min("old").alias("old"))
-                .localCheckpoint(eager=False, storageLevel=disk)
             )
-        log.debug(
-            "dedup_clusters converged after %d rounds "
-            "(%d directed edges, edge cache %s)",
-            rounds,
-            n_edges,
-            "off" if cached_edges is None else "on",
+
+        state = fixpoint(
+            "dedup_clusters",
+            state,
+            step,
+            rounds=max_iter,
+            converged=lambda state: state.where(changed).isEmpty(),
         )
         return state.select(
             F.col("id").alias(out_id), F.col("lbl").alias(out_root)

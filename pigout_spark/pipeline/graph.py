@@ -1,7 +1,18 @@
-"""Graph analytics on edge relations: PageRank (fixed-iteration).
+"""Graph analytics on edge relations.
 
-Connected components (min-label propagation, pointer jumping, hooking) live in
-pipeline/dedup.py:dedup_clusters — this module holds the rank side.
+- ranking: :func:`pagerank` (plain, weighted and personalized) and
+  :func:`hits` (hubs and authorities);
+- triangles: :func:`triangle_count` (exact), :func:`triangle_count_sampled`
+  (DOULION estimate) and :func:`clustering_coefficient`;
+- structure: :func:`k_core` (peeling) and :func:`label_propagation`
+  (communities);
+- link prediction: :func:`common_neighbors`;
+- distance: :func:`bfs_distances` (hops) and :func:`shortest_paths`
+  (weighted Bellman-Ford).
+
+Connected components live in pipeline/dedup.py:dedup_clusters.  The
+iterative ones run their rounds through pipeline/iterate.py:fixpoint,
+which owns the checkpoint cadence and the job labels.
 
 Determinism contract (oracle-hash discipline): ranks are FIXED-POINT
 int64 "picorank" units (10^-12).  Every step is integer arithmetic —
@@ -16,12 +27,32 @@ any practical tolerance.
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pigout_spark.pipeline.iterate import fixpoint
 
 #: fixed-point scale: 1 rank = 10^12 units (int64-safe: total mass
 #: ≤ 10^13 units; the damping multiply peaks at 85·10^12 « 2^63)
 PAGERANK_UNIT = 10**12
+
+
+def _checked_weights(df: DataFrame, col: str, what: str, headroom: str) -> DataFrame:
+    """``df`` failing loudly unless every ``col`` is an integer in
+    [1, 1e5]: positive, with int64 ``headroom``.  assert_true returns
+    NULL on success, so the filter keeps every valid row and the check
+    rides the existing scan — distributed, no extra pass."""
+    return df.filter(
+        F.assert_true(
+            F.col(col).cast("bigint").between(1, 100_000),
+            F.lit(
+                f"{what} must be an integer in [1, 1e5] (positive, with "
+                f"int64 {headroom} headroom)"
+            ),
+        ).isNull()
+    )
 
 
 def pagerank(
@@ -30,7 +61,6 @@ def pagerank(
     dst: str = "dst",
     iterations: int = 5,
     damping_pct: int = 85,
-    checkpoint_every: int = 4,
     weight_col: str | None = None,
     seeds: list | None = None,
 ) -> DataFrame:
@@ -65,14 +95,9 @@ def pagerank(
     ONE new exchange — the transpose (contributions regrouped by
     destination, map-side combined), which is inherent to PageRank.
     The edge↔rank join and the nodes↔sums join are co-partitioned
-    zero-shuffle joins (r6: the previous shape re-exchanged both join
-    inputs every round — 3 exchanges/round → 1).  Ranks are
-    localCheckpoint'ed every ``checkpoint_every`` rounds — often enough
-    to keep lineage constant-depth on long runs (the dedup_clusters
-    discipline), rare enough that short runs compile to ONE Catalyst
-    plan instead of a stage barrier per round (a per-round checkpoint
-    cost ~3× wall on a 3-iteration run).  The driver holds only N (a
-    scalar).
+    zero-shuffle joins.  The rounds run under
+    :func:`~pigout_spark.pipeline.iterate.fixpoint`, which checkpoints
+    the rank sums every 4 rounds.  The driver holds only N (a scalar).
     """
     # Materialize the (typically derived — a distinct, a projection of
     # a fact table) DEGREE-ANNOTATED edge relation once: a single
@@ -94,21 +119,12 @@ def pagerank(
         else F.lit(1).cast("bigint")
     )
     if weight_col is not None:
-        # Enforce the documented weight contract (positive integers
-        # with overflow headroom) instead of silently corrupting
-        # ranks: a zero-weight-only source used to make __deg 0 and
-        # swallow the null division; negatives flipped signs with no
-        # error (ADVICE r7).  assert_true returns NULL on success, so
-        # the filter keeps every valid row and the check rides the
-        # existing scan — distributed, no extra pass.
-        edges = edges.filter(
-            F.assert_true(
-                F.col(weight_col).cast("bigint").between(1, 100_000),
-                F.lit(
-                    f"pagerank: {weight_col} must be an integer in "
-                    "[1, 1e5] (positive, with int64 overflow headroom)"
-                ),
-            ).isNull()
+        # Enforce the documented weight contract instead of silently
+        # corrupting ranks: a zero-weight-only source used to make
+        # __deg 0 and swallow the null division; negatives flipped
+        # signs with no error.
+        edges = _checked_weights(
+            edges, weight_col, f"pagerank: {weight_col}", "overflow"
         )
     # NULL endpoints fail loudly (ADVICE r10): the degree fold is an
     # inner join on __s, so a NULL source would silently drop the edge
@@ -212,36 +228,28 @@ def pagerank(
     rank_expr = (
         f"(__sb + ({d} * coalesce(__sum, cast(0 as bigint))) div 100)"
     )
-    sums = None
-    for it in range(1, int(iterations) + 1):
-        if sums is None:
-            contrib = e.select(
-                F.col("__d").alias("node"),
-                F.expr("(__r0s * __w) div __deg").alias("__c"),
-            )
-        else:
-            # r15 (VERDICT r14 #5, guide §3.1): SHUFFLE_HASH on the
-            # node-sized sums side — the default sort-merge re-SORTED
-            # the degree-annotated edge list every round (the exchange
-            # below it is identical across rounds and runtime-reused,
-            # but each round's SMJ re-sorted its output; the r14 plan
-            # held one edge-list Sort per iteration).  The build side
-            # is the per-partition slice of the rank vector — bounded
-            # by nodes/partitions at any scale, never a broadcast.
-            # LeftOuter + BuildRight is the supported SHJ shape.
-            contrib = e.join(
-                sums.hint("shuffle_hash"), e["__s"] == sums["__n"], "left"
-            ).select(
-                F.col("__d").alias("node"),
-                F.expr(f"({rank_expr} * __w) div __deg").alias("__c"),
-            )
-        sums = (
-            contrib.groupBy("node")
-            .agg(F.sum("__c").alias("__sum"))
-            .select(F.col("node").alias("__n"), "__sum")
+
+    def spread(ranked: DataFrame, rank_sql: str) -> DataFrame:
+        """The round's sums: each edge sends rank·w div Σw to __d."""
+        return ranked.groupBy(F.col("__d").alias("__n")).agg(
+            F.expr(f"sum(({rank_sql} * __w) div __deg)").alias("__sum")
         )
-        if checkpoint_every and it % int(checkpoint_every) == 0:
-            sums = sums.localCheckpoint(eager=False)
+
+    # Round 1 spreads the initial ranks; the driver runs the rest.
+    # SHUFFLE_HASH on the node-sized sums side: a sort-merge join
+    # re-sorted the degree-annotated edge list every round.  The build
+    # side is the per-partition slice of the rank vector, never a
+    # broadcast; LeftOuter + BuildRight is the supported SHJ shape.
+    sums = fixpoint(
+        "pagerank",
+        spread(e, "__r0s"),
+        lambda sums: spread(
+            e.join(sums.hint("shuffle_hash"), e["__s"] == sums["__n"], "left"),
+            rank_expr,
+        ),
+        rounds=int(iterations) - 1,
+        every=4,
+    )
     final_rank = node_base("node", base_units_sql) + F.expr(
         f"({d} * coalesce(__sum, cast(0 as bigint))) div 100"
     )
@@ -256,6 +264,28 @@ def pagerank(
                 "rank"
             ),
         )
+    )
+
+
+def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The undirected simple graph of an edge relation as ``(a, b)``
+    bigint pairs with ``a < b``: NULL endpoints, self-loops, direction
+    and duplicates dropped."""
+    s, d = F.col(src).cast("bigint"), F.col(dst).cast("bigint")
+    return (
+        edges.filter(s.isNotNull() & d.isNotNull() & (s != d))
+        .select(F.least(s, d).alias("a"), F.greatest(s, d).alias("b"))
+        .distinct()
+    )
+
+
+def _degrees(und: DataFrame) -> DataFrame:
+    """``(n, deg)`` of an :func:`_undirected` edge relation."""
+    return (
+        und.select(F.col("a").alias("n"))
+        .unionByName(und.select(F.col("b").alias("n")))
+        .groupBy("n")
+        .agg(F.count(F.lit(1)).alias("deg"))
     )
 
 
@@ -323,22 +353,16 @@ def triangle_count(
         s.isNotNull() & d.isNotNull()
         & (s >= 0) & (s < lim) & (d >= 0) & (d < lim)
     )
-    und = (
+    und = _undirected(
         edges.filter(
             F.assert_true(
                 ok, F.lit(f"triangle_count node ids must be in [0, {lim})")
             ).isNull()
-        )
-        .filter(s != d)
-        .select(F.least(s, d).alias("a"), F.greatest(s, d).alias("b"))
-        .distinct()
+        ),
+        src,
+        dst,
     )
-    deg = (
-        und.select(F.col("a").alias("n"))
-        .unionByName(und.select(F.col("b").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    deg = _degrees(und)
     # comparison key: degree-major, id-minor — a total order
     key = (F.col("deg") * F.lit(lim) + F.col("n")).alias("ok")
     ranked = deg.select("n", key)
@@ -438,12 +462,7 @@ def triangle_count_sampled(
         )
     p_eff = kept / buckets
     inv_p3 = 1.0 / (p_eff ** 3)
-    s, d = F.col(src).cast("bigint"), F.col(dst).cast("bigint")
-    und = (
-        edges.filter(s.isNotNull() & d.isNotNull() & (s != d))
-        .select(F.least(s, d).alias("a"), F.greatest(s, d).alias("b"))
-        .distinct()
-    )
+    und = _undirected(edges, src, dst)
     key = F.concat_ws(
         "|", F.col("a").cast("string"), F.col("b").cast("string")
     )
@@ -475,19 +494,7 @@ def clustering_coefficient(
     degree join; all key-equi.
 
     Output: (n, deg, triangles, coef)."""
-    lim = 1 << 31
-    s, d = F.col(src).cast("bigint"), F.col(dst).cast("bigint")
-    und = (
-        edges.filter(s.isNotNull() & d.isNotNull()).filter(s != d)
-        .select(F.least(s, d).alias("a"), F.greatest(s, d).alias("b"))
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("a").alias("n"))
-        .unionByName(und.select(F.col("b").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    deg = _degrees(_undirected(edges, src, dst))
     tri = triangle_count(edges, src, dst, per_node=True)
     return deg.join(tri, "n").select(
         "n",
@@ -508,7 +515,6 @@ def k_core(
     src: str = "src",
     dst: str = "dst",
     max_rounds: int = 40,
-    checkpoint_every: int = 1,  # measured default - rationale in docstring
 ) -> DataFrame:
     """Nodes of the k-CORE of the undirected simple graph: the maximal
     subgraph where every node keeps degree ≥ k — computed by iterative
@@ -519,55 +525,38 @@ def k_core(
     Peeling is a FIXPOINT: running more rounds than needed is a no-op,
     which is what makes the op oracle-replayable — a SQL twin can
     unroll a fixed round count ≥ the convergence point and match
-    exactly.  Exceeding ``max_rounds`` raises (the dedup_clusters
-    discipline) rather than returning a half-peeled graph.
+    exactly.  A graph still peeling after ``max_rounds`` peels raises
+    (the dedup_clusters discipline) rather than returning a half-peeled
+    graph.
 
     Output: one row (n) per surviving node.
 
     100 TB: each round is one degree groupBy + two anti-joins, all
     key-equi on node ids; the live edge list shrinks monotonically and
-    is localCheckpoint'ed every ``checkpoint_every`` rounds to keep
-    lineage constant-depth.  Convergence probe is one `limit(1)` scan
-    of the weak-node relation per round (driver sees 0/1 rows).
-
-    ``checkpoint_every`` default 1 (r14, measured): the per-round
-    convergence probe is an ACTION, and every un-checkpointed round
-    makes that action re-execute everything since the last checkpoint
-    — interleaved A/B at sf0.1: 1.79 s at cadence 1 vs 2.72 s at 4.
-    The reasoning (probe cost ∝ lineage depth) is scale-independent,
-    not a bench-box tuning; bfs/sssp, which run NO per-round action,
-    measure the other way and default to 4.
+    is checkpointed every round.  The convergence probe is one
+    `limit(1)` scan of the weak-node relation per round (driver sees
+    0/1 rows).
     """
-    s, d = F.col(src).cast("bigint"), F.col(dst).cast("bigint")
-    live = (
-        edges.filter(s.isNotNull() & d.isNotNull())
-        .filter(s != d)
-        .select(F.least(s, d).alias("a"), F.greatest(s, d).alias("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    for rnd in range(1, int(max_rounds) + 1):
-        deg = (
-            live.select(F.col("a").alias("n"))
-            .unionByName(live.select(F.col("b").alias("n")))
-            .groupBy("n")
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
-        weak = deg.filter(F.col("deg") < int(k)).select("n")
-        if not weak.limit(1).count():
-            return live.select(F.col("a").alias("n")).unionByName(
-                live.select(F.col("b").alias("n"))
-            ).distinct()
-        live = (
-            live.join(weak.withColumnRenamed("n", "a"), "a", "left_anti")
-            .join(weak.withColumnRenamed("n", "b"), "b", "left_anti")
+
+    def weak(live: DataFrame) -> DataFrame:
+        return _degrees(live).filter(F.col("deg") < int(k)).select("n")
+
+    def peel(live: DataFrame) -> DataFrame:
+        w = weak(live)
+        return (
+            live.join(w.withColumnRenamed("n", "a"), "a", "left_anti")
+            .join(w.withColumnRenamed("n", "b"), "b", "left_anti")
             .select("a", "b")
         )
-        if checkpoint_every and rnd % int(checkpoint_every) == 0:
-            live = live.localCheckpoint(eager=False)
-    raise RuntimeError(
-        f"k_core did not converge within {max_rounds} rounds (k={k})"
+
+    live = fixpoint(
+        "k_core",
+        _undirected(edges, src, dst).localCheckpoint(eager=False),
+        peel,
+        rounds=int(max_rounds),
+        converged=lambda live: not weak(live).limit(1).count(),
     )
+    return _degrees(live).select("n")
 
 
 def label_propagation(
@@ -575,7 +564,6 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     rounds: int = 5,
-    checkpoint_every: int = 1,  # measured default - rationale in docstring
 ) -> DataFrame:
     """SYNCHRONOUS label propagation (community detection): every node
     starts with its own id as label; each round all nodes
@@ -602,15 +590,8 @@ def label_propagation(
     bounded by the edge count), one per-node argmax as a row_number
     window on the node partitioning (label-cardinality-sized input,
     type-generic — node ids may be strings), and one carry-over left
-    join against the node relation.  Labels are localCheckpoint'ed
-    every ``checkpoint_every`` rounds — the dedup_clusters lineage
-    discipline.
-
-    ``checkpoint_every`` default 1 (r14, measured): interleaved A/B at
-    sf0.1 read 2.44 s at cadence 1 vs 2.85 s at 4 — per-round plan
-    truncation beats compiling a rounds-deep Catalyst plan (the cost is
-    driver-side plan depth, not data volume, so the choice is not a
-    bench-box tuning; override per deployment if measured otherwise).
+    join against the node relation.  Labels are checkpointed every
+    round.
     """
     from pyspark.sql import Window
 
@@ -626,8 +607,8 @@ def label_propagation(
     nodes = e.select(F.col("__u").alias("node")).distinct().localCheckpoint(
         eager=False
     )
-    labels = nodes.select("node", F.col("node").alias("label"))
-    for it in range(1, int(rounds) + 1):
+
+    def step(labels: DataFrame) -> DataFrame:
         msgs = e.join(
             labels, e["__u"] == labels["node"]
         ).select(F.col("__v").alias("node"), "label")
@@ -648,12 +629,16 @@ def label_propagation(
         )
         # labels IS the node relation every round (static graph), so
         # the carry-over needs no extra nodes join
-        labels = labels.join(best, "node", "left").select(
+        return labels.join(best, "node", "left").select(
             "node", F.coalesce(F.col("__new"), F.col("label")).alias("label")
         )
-        if checkpoint_every and it % int(checkpoint_every) == 0:
-            labels = labels.localCheckpoint(eager=False)
-    return labels
+
+    return fixpoint(
+        "label_propagation",
+        nodes.select("node", F.col("node").alias("label")),
+        step,
+        rounds=int(rounds),
+    )
 
 
 def common_neighbors(
@@ -730,20 +715,10 @@ def hits(
     src: str = "src",
     dst: str = "dst",
     iterations: int = 3,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Fixed-iteration HITS (Kleinberg hubs & authorities) over a
-    DIRECTED edge relation: per round
-
-    ``checkpoint_every`` default 1 (r15, measured): each round's L1
-    rescale computes a broadcast total over the CURRENT scores, so an
-    un-checkpointed round re-executes the whole score lineage since the
-    last checkpoint inside that broadcast — the k_core per-round-action
-    situation, not the bfs/sssp one the r14 default assumed by shape
-    analogy.  Interleaved A/B at sf0.1 (4 pairs, 2-round run): cadence
-    1 won every pair, best 10.4 s vs 13.3 s (~20%).  The reasoning is
-    scale-independent (driver-side lineage depth, not data volume);
-    override per deployment if a cluster measurement says otherwise.
+    DIRECTED edge relation: every score starts at 10^12 units and per
+    round
 
         auth(v) = Σ_{u→v} hub(u)      then rescale toward L1 = 10^12
         hub(u)  = Σ_{u→v} auth(v)     then rescale toward L1 = 10^12
@@ -770,8 +745,8 @@ def hits(
     100 TB: per round two key-equi join+aggregate passes over the
     twice-shuffled-and-checkpointed edge list (one exchange each — the
     src→dst transpose and back, inherent to HITS) and two 1-row
-    broadcast scalars; scores are node-sized relations checkpointed on
-    the usual cadence.  No windows, no collect beyond the scalar
+    broadcast scalars; scores are node-sized relations checkpointed
+    every round.  No windows, no collect beyond the scalar
     frames Spark broadcasts itself.
     """
     s, d = F.col(src), F.col(dst)
@@ -787,7 +762,7 @@ def hits(
         .distinct()
         .localCheckpoint(eager=False)
     )
-    hub = nodes.select("node", F.lit(PAGERANK_UNIT).cast("bigint").alias("__h"))
+    start = F.lit(PAGERANK_UNIT).cast("bigint")
 
     def normalize(scores: DataFrame, col: str) -> DataFrame:
         # Raw sums and totals widen through DECIMAL(38,0): at |E| over
@@ -811,35 +786,35 @@ def hits(
             ).alias(col),
         )
 
-    auth = None
-    for it in range(1, int(iterations) + 1):
-        raw_a = (
-            e.join(hub, e["__s"] == hub["node"])
-            .groupBy(F.col("__d").alias("node"))
-            .agg(F.sum(F.col("__h").cast("decimal(38,0)")).alias("__a"))
+    def half(scores: DataFrame, col: str, out: str, frm: str, to: str) -> DataFrame:
+        """Half a round: every node's ``out`` score is the rescaled sum
+        of the ``col`` scores at the ``frm`` end of its edges."""
+        raw = (
+            e.join(scores, e[frm] == scores["node"])
+            .groupBy(F.col(to).alias("node"))
+            .agg(F.sum(F.col(col).cast("decimal(38,0)")).alias(out))
         )
-        auth = normalize(
-            nodes.join(raw_a, "node", "left").select(
+        return normalize(
+            nodes.join(raw, "node", "left").select(
                 "node",
-                F.coalesce("__a", F.lit(0)).cast("decimal(38,0)").alias("__a"),
+                F.coalesce(out, F.lit(0)).cast("decimal(38,0)").alias(out),
             ),
-            "__a",
+            out,
         )
-        raw_h = (
-            e.join(auth, e["__d"] == auth["node"])
-            .groupBy(F.col("__s").alias("node"))
-            .agg(F.sum(F.col("__a").cast("decimal(38,0)")).alias("__h"))
-        )
-        hub = normalize(
-            nodes.join(raw_h, "node", "left").select(
-                "node",
-                F.coalesce("__h", F.lit(0)).cast("decimal(38,0)").alias("__h"),
-            ),
-            "__h",
-        )
-        if checkpoint_every and it % int(checkpoint_every) == 0:
-            hub = hub.localCheckpoint(eager=False)
-            auth = auth.localCheckpoint(eager=False)
+
+    def step(scores: tuple[DataFrame, DataFrame]) -> tuple[DataFrame, DataFrame]:
+        auth = half(scores[0], "__h", "__a", "__s", "__d")
+        return half(auth, "__a", "__h", "__d", "__s"), auth
+
+    hub, auth = fixpoint(
+        "hits",
+        (
+            nodes.select("node", start.alias("__h")),
+            nodes.select("node", start.alias("__a")),
+        ),
+        step,
+        rounds=int(iterations),
+    )
     unit = F.lit(float(PAGERANK_UNIT))
     return (
         nodes.join(hub, "node")
@@ -852,6 +827,26 @@ def hits(
     )
 
 
+def _seeds(op: str, edges: DataFrame, sources: list, col: str) -> DataFrame:
+    """The distinct ``sources`` as ``(node, <col>)`` rows at 0.  A seed
+    list is driver-sized by contract; an empty one raises."""
+    if not sources:
+        raise ValueError(f"{op}: sources must be a non-empty list")
+    return (
+        edges.sparkSession.createDataFrame(
+            [(int(x),) for x in sources], "node bigint"
+        )
+        .distinct()
+        .withColumn(col, F.lit(0).cast("bigint"))
+    )
+
+
+def _with_reversed(e: DataFrame) -> DataFrame:
+    """``e`` plus every ``(__s, __d)`` edge reversed, other columns kept."""
+    swap = {"__s": "__d", "__d": "__s"}
+    return e.unionByName(e.select([F.col(c).alias(swap.get(c, c)) for c in e.columns]))
+
+
 def bfs_distances(
     edges: DataFrame,
     sources: list,
@@ -859,7 +854,6 @@ def bfs_distances(
     dst: str = "dst",
     max_hops: int = 5,
     directed: bool = True,
-    checkpoint_every: int = 4,  # measured default - rationale in docstring
 ) -> DataFrame:
     """Multi-source BFS: the minimum HOP COUNT from the nearest source
     to every node reachable within ``max_hops`` edges.  The reach/
@@ -888,56 +882,45 @@ def bfs_distances(
     join + one anti-join against the settled set, both on node-key
     partitioning.  The frontier is the working set — on real graphs it
     peaks and shrinks, so late rounds are cheap; the settled relation
-    grows monotonically and is localCheckpoint'ed every
-    ``checkpoint_every`` rounds (constant-depth lineage, the k_core
-    discipline).  The driver holds only the seed literals.
-
-    ``checkpoint_every`` default 4 (r14, measured): no per-round
-    action runs here, and identical duplicated subtrees get
-    ReusedExchange at runtime, so per-round checkpoints are pure
-    barrier overhead — interleaved A/B at sf0.1: 2.03 s at cadence 4
-    vs 2.66 s at 1 (sssp 3.23 vs 3.76).  k_core/label_prop/hits, which
-    do run (or embed) a per-round action, measure the other way and
-    default to 1.
+    grows monotonically, and both are checkpointed every 4 rounds.  The
+    driver holds only the seed literals.
     """
-    if not sources:
-        raise ValueError("bfs_distances: sources must be a non-empty list")
+    # Seeds that never appear in the edge relation still belong in the
+    # output at hop 0 (they are trivially reachable from themselves).
+    settled = _seeds("bfs_distances", edges, sources, "hops")
     s, d = F.col(src).cast("bigint"), F.col(dst).cast("bigint")
     e = edges.filter(s.isNotNull() & d.isNotNull()).select(
         s.alias("__s"), d.alias("__d")
     )
     if not directed:
-        e = e.unionByName(
-            e.select(F.col("__d").alias("__s"), F.col("__s").alias("__d"))
-        )
-    # r14 (guide §2.4): land the deduped edge list ON the source key
-    # before checkpointing — the docstring's "shuffles ONCE onto the
-    # source key" contract.  distinct() leaves (__s, __d) partitioning,
+        e = _with_reversed(e)
+    # Land the deduped edge list ON the source key before
+    # checkpointing — the docstring's "shuffles ONCE onto the source
+    # key" contract.  distinct() leaves (__s, __d) partitioning,
     # which no round join can reuse; one extra exchange here saves one
     # e-sized exchange in EVERY round.
     e = e.distinct().repartition("__s").localCheckpoint(eager=False)
-    spark = edges.sparkSession
-    seeds = spark.createDataFrame(
-        [(int(x),) for x in sources], "node bigint"
-    ).distinct()
-    # Seeds that never appear in the edge relation still belong in the
-    # output at hop 0 (they are trivially reachable from themselves).
-    settled = seeds.withColumn("hops", F.lit(0).cast("bigint"))
-    frontier = settled.select("node")
-    for i in range(1, int(max_hops) + 1):
+    hops = itertools.count(1)  # fixpoint calls step once per round
+
+    def step(state: tuple[DataFrame, DataFrame]) -> tuple[DataFrame, DataFrame]:
+        settled, frontier = state
         reached = (
             frontier.join(e, frontier.node == e.__s)
             .select(F.col("__d").alias("node"))
             .distinct()
         )
         newly = reached.join(settled, "node", "left_anti").withColumn(
-            "hops", F.lit(i).cast("bigint")
+            "hops", F.lit(next(hops)).cast("bigint")
         )
-        settled = settled.unionByName(newly)
-        frontier = newly.select("node")
-        if checkpoint_every and i % int(checkpoint_every) == 0:
-            settled = settled.localCheckpoint(eager=False)
-            frontier = frontier.localCheckpoint(eager=False)
+        return settled.unionByName(newly), newly.select("node")
+
+    settled, _ = fixpoint(
+        "bfs_distances",
+        (settled, settled.select("node")),
+        step,
+        rounds=int(max_hops),
+        every=4,
+    )
     return settled
 
 
@@ -949,7 +932,6 @@ def shortest_paths(
     weight_col: str | None = None,
     iterations: int = 5,
     directed: bool = True,
-    checkpoint_every: int = 4,  # measured default - rationale in docstring
 ) -> DataFrame:
     """Fixed-iteration Bellman-Ford: the minimum WEIGHTED distance
     from the nearest source to every node, over paths of at most
@@ -973,15 +955,10 @@ def shortest_paths(
     source key (co-partitioned), takes the map-side-combinable min per
     destination, and merges with a node-key groupBy.  Per round: one
     exchange (the transpose onto dst), the pagerank shape.  The
-    distance relation is node-sized, checkpointed every
-    ``checkpoint_every`` rounds.  No driver-side state beyond seeds.
-
-    ``checkpoint_every`` default 4: same measured reasoning as
-    :func:`bfs_distances` (no per-round action; A/B sssp 3.23 s at
-    cadence 4 vs 3.76 s at 1).
+    distance relation is node-sized, checkpointed every 4 rounds.  No
+    driver-side state beyond seeds.
     """
-    if not sources:
-        raise ValueError("shortest_paths: sources must be a non-empty list")
+    dist = _seeds("shortest_paths", edges, sources, "dist")
     s, d = F.col(src).cast("bigint"), F.col(dst).cast("bigint")
     w = (
         F.col(weight_col).cast("bigint")
@@ -992,44 +969,25 @@ def shortest_paths(
         s.alias("__s"), d.alias("__d"), w.alias("__w")
     )
     if weight_col is not None:
-        # Same contract and mechanism as pagerank's weight guard: a
-        # non-positive or huge weight must fail loudly, and the check
-        # rides the existing distributed scan.
-        e = e.filter(
-            F.assert_true(
-                F.col("__w").between(1, 100_000),
-                F.lit(
-                    f"shortest_paths: {weight_col} must be an integer "
-                    "in [1, 1e5] (positive, with int64 path-sum headroom)"
-                ),
-            ).isNull()
+        e = _checked_weights(
+            e, "__w", f"shortest_paths: {weight_col}", "path-sum"
         )
     if not directed:
-        e = e.unionByName(
-            e.select(
-                F.col("__d").alias("__s"),
-                F.col("__s").alias("__d"),
-                F.col("__w"),
-            )
-        )
+        e = _with_reversed(e)
     e = e.localCheckpoint(eager=False)
-    spark = edges.sparkSession
-    dist = (
-        spark.createDataFrame([(int(x),) for x in sources], "node bigint")
-        .distinct()
-        .withColumn("dist", F.lit(0).cast("bigint"))
-    )
-    for i in range(1, int(iterations) + 1):
+
+    def relax(dist: DataFrame) -> DataFrame:
         relaxed = (
             dist.join(e, dist.node == e.__s)
             .groupBy(F.col("__d").alias("node"))
             .agg(F.min(F.col("dist") + F.col("__w")).alias("dist"))
         )
-        dist = (
+        return (
             dist.unionByName(relaxed)
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
         )
-        if checkpoint_every and i % int(checkpoint_every) == 0:
-            dist = dist.localCheckpoint(eager=False)
-    return dist
+
+    return fixpoint(
+        "shortest_paths", dist, relax, rounds=int(iterations), every=4
+    )

@@ -4,10 +4,13 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from pigout_spark.pipeline import graph
 from pigout_spark.pipeline.dedup import (
+    dedup_clusters,
     exact_dedup,
     exact_groups,
     minhash_lsh_pairs,
@@ -2724,6 +2727,136 @@ def test_scd2_build_and_snapshot(spark):
     plan = hist._jdf.queryExecution().executedPlan().toString()
     final = plan.split("== Initial Plan ==")[0]
     assert final.count("Exchange hashpartitioning") == 1
+
+
+def test_fixpoint_contract(spark, caplog):
+    """The loop driver runs a fixed-round loop exactly ``rounds``
+    rounds, checkpoints every ``every`` rounds, runs each round's jobs
+    under "<label> round k", probes before each round, and restores the
+    caller's job description on return and on the non-convergence
+    raise, which names the label and the rounds run."""
+    import logging
+
+    from pigout_spark.pipeline import iterate
+
+    sc = spark.sparkContext
+    start = spark.createDataFrame([(0,)], "x bigint")
+    seen = []
+
+    def step(df):
+        seen.append(sc.getLocalProperty("spark.job.description"))
+        return df.select((F.col("x") + 1).alias("x"))
+
+    def top(df):
+        return df._jdf.queryExecution().logical().getClass().getSimpleName()
+
+    caplog.set_level(logging.DEBUG, logger=iterate.__name__)
+    sc.setJobDescription("outer")
+    try:
+        for rounds, plan in ((4, "LogicalRDD"), (5, "Project")):
+            seen.clear()
+            out = iterate.fixpoint("toy", start, step, rounds=rounds, every=2)
+            assert out.first().x == rounds
+            assert seen == [f"toy round {k}" for k in range(1, rounds + 1)]
+            assert top(out) == plan
+            assert sc.getLocalProperty("spark.job.description") == "outer"
+        assert "toy ran 5 rounds" in caplog.text
+
+        hub, auth = iterate.fixpoint(
+            "pair", (start, start), lambda s: (step(s[0]), s[0]), rounds=3
+        )
+        assert (hub.first().x, auth.first().x) == (3, 2)
+        assert top(hub) == top(auth) == "LogicalRDD"
+
+        probed = []
+
+        def reaches(n):
+            def converged(df):
+                probed.append(sc.getLocalProperty("spark.job.description"))
+                return df.first().x >= n
+
+            return converged
+
+        seen.clear()
+        out = iterate.fixpoint("toy", start, step, rounds=9, converged=reaches(2))
+        assert out.first().x == 2
+        assert probed == ["toy round 0", "toy round 1", "toy round 2"]
+        assert sc.getLocalProperty("spark.job.description") == "outer"
+        # the probe also follows the last round: a loop that needs
+        # exactly ``rounds`` rounds converges
+        out = iterate.fixpoint("toy", start, step, rounds=2, converged=reaches(2))
+        assert out.first().x == 2
+
+        seen.clear()
+        with pytest.raises(RuntimeError, match="toy did not converge in 3 rounds"):
+            iterate.fixpoint("toy", start, step, rounds=3, converged=reaches(9))
+        assert seen == ["toy round 1", "toy round 2", "toy round 3"]
+        assert sc.getLocalProperty("spark.job.description") == "outer"
+    finally:
+        sc.setJobDescription(None)
+
+
+def _estimate_graph(spark):
+    """A 64-node chain with ids shuffled by ``random.Random(3)``, plus
+    chords: ``(src, dst, span)`` with span 1 on the chain, 7 on a
+    chord."""
+    import random
+
+    ids = list(range(64))
+    random.Random(3).shuffle(ids)
+    chain = [(a, b, 1) for a, b in zip(ids, ids[1:])]
+    chords = [(ids[i], ids[i + 7], 7) for i in range(0, 56, 9)]
+    return spark.createDataFrame(
+        chain + chords, "src bigint, dst bigint, span int"
+    ), ids[0]
+
+
+#: loop: (call(edges, first id, n), n for few rounds, n for many rounds,
+#: whether the result is the loop's state)
+_LOOPS = {
+    "pagerank": (lambda g, s, n: graph.pagerank(g, iterations=n), 5, 9, False),
+    "k_core": (lambda g, s, n: graph.k_core(g, k=n), 3, 2, False),
+    "label_propagation": (
+        lambda g, s, n: graph.label_propagation(g, rounds=n), 1, 12, True
+    ),
+    "hits": (lambda g, s, n: graph.hits(g, iterations=n), 1, 4, False),
+    "bfs_distances": (
+        lambda g, s, n: graph.bfs_distances(g, [s], max_hops=n), 4, 8, True
+    ),
+    "shortest_paths": (
+        lambda g, s, n: graph.shortest_paths(g, [s], iterations=n), 4, 8, True
+    ),
+    "dedup_clusters": (
+        lambda g, s, n: dedup_clusters(g.where(F.col("span") <= n), "src", "dst"),
+        7,
+        1,
+        True,
+    ),
+}
+
+
+@pytest.mark.parametrize("loop", sorted(_LOOPS))
+def test_loop_size_estimate_does_not_compound(spark, loop):
+    """Each loop's result has the same optimizer size estimate after
+    many rounds as after few: every checkpoint of the loop drops the
+    estimate of the plan it cuts.  Kept, a join multiplies it every
+    round — label_propagation's had 155,991 digits after 12 rounds on
+    this graph.  Both round counts end on a checkpoint.  pagerank runs
+    its first round before the loop; k_core peels fewer rounds at k=3
+    than at k=2; dedup_clusters needs fewer rounds with the chords than
+    on the bare chain (12).  A loop that returns its state returns
+    Spark's default estimate, below 2**63; a result that joins the
+    state multiplies that default by its other inputs' estimates."""
+    call, few, many, is_state = _LOOPS[loop]
+    edges, source = _estimate_graph(spark)
+    sizes = [
+        call(edges, source, n)._jdf.queryExecution().optimizedPlan().stats()
+        .sizeInBytes()
+        for n in (few, many)
+    ]
+    assert sizes[0] == sizes[1]
+    if is_state:
+        assert sizes[1] < 2**63
 
 
 def test_label_propagation_matches_python_reference(spark):
