@@ -16,6 +16,8 @@ import sys
 import time
 from pathlib import Path
 
+from py4j.protocol import Py4JError
+
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from pigout_spark.session import get_spark  # noqa: E402
@@ -183,7 +185,8 @@ def _needs_rebuild(probe) -> bool:
             "LogicalRDD" in qe.analyzed().toString()
             or "InMemoryRelation" in qe.optimizedPlan().toString()
         )
-    except Exception:
+    except Py4JError as e:
+        log.warning("cannot read the plan, rebuilding each run: %s", e)
         return True
 
 

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pigout_spark.pipeline.iterate import checkpoint
+
 
 def cap_events_per_key(
     df: DataFrame,
@@ -2426,7 +2428,7 @@ def fisher_exact(
     # the table feeds SEVEN broadcast lookups — checkpoint it or the
     # scan + global window recompute per broadcast (measured 28 s → 3 s
     # at n = 10k)
-    lf = lf.localCheckpoint(eager=False)
+    lf = checkpoint(lf)
     lfb = F.broadcast(lf)
 
     m = cells.select(

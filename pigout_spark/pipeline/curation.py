@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from pigout_spark.pipeline.dedup import ws_tokens
+from pigout_spark.pipeline.iterate import checkpoint
 
 
 def _shingle_hashes(
@@ -266,20 +267,18 @@ def importance_weights(
     # r14 (guide §2.4/§5): the two frequency tables are VOCAB-sized
     # (tiny next to the token stream) but feed three consumers each
     # (vocab count, N scalar, the scoring join) — without a
-    # localCheckpoint Catalyst plans the full explode→groupBy subtree
+    # checkpoint Catalyst plans the full explode→groupBy subtree
     # once PER consumer (the before-plan held 44 HashAggregates and 14
     # parquet scans for this one operator).  Checkpointing caps each at
     # one computation; everything downstream of them is vocab-sized.
-    cf = (
+    cf = checkpoint(
         ctoks.groupBy("__tok")
         .agg(F.count(F.lit(1)).alias("__cf"))
-        .localCheckpoint(eager=False)
     )
-    tf_ = (
+    tf_ = checkpoint(
         target.select(F.explode(ws_tokens(ttext, distinct=False)).alias("__tok"))
         .groupBy("__tok")
         .agg(F.count(F.lit(1)).alias("__tf"))
-        .localCheckpoint(eager=False)
     )
     # r14 (guide §2.4): |V|, N_c and N_t in ONE aggregate over a full
     # outer join of the two per-token-distinct tables (the join IS the
@@ -304,11 +303,10 @@ def importance_weights(
     # double for every occurrence of a type, so each doc's sum is over
     # the same multiset of values — bit-compatible with the previous
     # shape (and the DuckDB twin) under the query's ROUND-6 contract.
-    wt = (
+    wt = checkpoint(
         cf.join(tf_, "__tok", "left")
         .crossJoin(F.broadcast(scalars))
         .select("__tok", lr.alias("__lr"))
-        .localCheckpoint(eager=False)
     )
     # r14 (guide §3.1): broadcast the WEIGHT side explicitly — it is
     # token-TYPE-sized (vocabulary; Heaps-law-bounded at any corpus

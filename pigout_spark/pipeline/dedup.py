@@ -18,14 +18,10 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import logging
 import random
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
-
-log = logging.getLogger(__name__)
 
 #: Mersenne prime modulus for the MinHash permutation family.
 MINHASH_P = 2_147_483_647
@@ -225,10 +221,9 @@ def minhash_lsh_star_edges(
     # pass of LSH at corpus scale (DataFrame plans share no subtrees,
     # the dedup_clusters lineage discipline).  ~50 B/row × n_bands
     # rows/doc — linear, scale-safe.
-    stacked = (
+    stacked = checkpoint(
         sigb.select(F.col(id_col), F.explode(band_structs).alias("bk"))
         .select(id_col, "bk.band", "bk.bv")
-        .localCheckpoint(eager=False)
     )
     # bucket minimum via a two-phase aggregation joined back (r15,
     # VERDICT r14 #6, guide §2.2/§2.5): the r14 shape was a
@@ -801,16 +796,6 @@ def simhash16(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-#: Edge count past which :func:`dedup_clusters` layers a key-partitioned
-#: DISK_ONLY cache over the checkpointed symmetric edge list, so the
-#: per-round request join plans zero edge-side exchange.  Keyed to the
-#: measured crossover, not the core count: at 4.2 M edges the cached
-#: path ran the CC stage ~20% faster, at 40 k it lost ~4 s to the cache
-#: machinery's fixed per-round cost.  1 M sits between the two; at
-#: 100 TB every real dup graph is far above it.
-_CC_EDGE_CACHE_MIN = 1_000_000
-
-
 def dedup_clusters(
     pairs: DataFrame,
     left: str = "doc_a",
@@ -851,13 +836,12 @@ def dedup_clusters(
 
     100 TB: every step is a key-equi join or partial agg on doc ids —
     no broadcast of anything data-sized, no driver materialization;
-    state per round is one row per doc in any pair.  Above
-    ``_CC_EDGE_CACHE_MIN`` edges the edge list is cached already
-    partitioned on the join key, so no round re-exchanges it.  All
-    checkpoints are DISK_ONLY, for the reason given at
-    :func:`~pigout_spark.pipeline.iterate.checkpoint`.
+    state per round is one row per doc in any pair.  The edge list is
+    checkpointed hash-partitioned on the join key, and the checkpoint
+    keeps that partitioning (see
+    :func:`~pigout_spark.pipeline.iterate.checkpoint`), so no round
+    re-exchanges it.
     """
-    disk = StorageLevel.DISK_ONLY
     sc = pairs.sparkSession.sparkContext
     npart = int(
         pairs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
@@ -867,15 +851,12 @@ def dedup_clusters(
     # 12 s on a 2 M-edge minhash graph).  Both directions come from one
     # in-task explode: a union of two projections planned the pair
     # generation twice.  No distinct: min-label CC is idempotent to
-    # parallel edges.  A checkpoint has no known partitioning, so big
-    # graphs also get a cache repartitioned on the join key; a bare
-    # persist without the checkpoint kept the pair-generation lineage
-    # in every round's plan (+1.5 s of per-round analysis at sf0.1).
+    # parallel edges.  Partitioned on the join key before the
+    # checkpoint, so every round's request join reads it in place.
     prev_desc = sc.getLocalProperty("spark.job.description")
-    cached_edges = None
     try:
         sc.setJobDescription("dedup_clusters round 0")
-        edges = (
+        edges = checkpoint(
             pairs.select(
                 F.explode(
                     F.array(
@@ -889,16 +870,7 @@ def dedup_clusters(
                 ).alias("__e")
             )
             .select(F.col("__e.u").alias("u"), F.col("__e.v").alias("v"))
-            .localCheckpoint(storageLevel=disk)
-        )
-        n_edges = edges.count()
-        if n_edges >= _CC_EDGE_CACHE_MIN:
-            edges = edges.repartition(npart, "u").persist(disk)
-            cached_edges = edges
-        log.debug(
-            "dedup_clusters: %d directed edges, edge cache %s",
-            n_edges,
-            "off" if cached_edges is None else "on",
+            .repartition(npart, "u")
         )
         state = checkpoint(
             edges.groupBy("u")
@@ -914,16 +886,18 @@ def dedup_clusters(
         changed = F.col("lbl") < F.col("old")
 
         def step(state: DataFrame) -> DataFrame:
-            pointers = state.where(F.col("lbl") < F.col("id")).select(
-                F.col("lbl").alias("key"),
-                F.col("id").alias("dst"),
-                F.lit(False).alias("edge"),
+            # a union keeps HashPartitioning(key) only when both sides
+            # carry it; without this the edges would be re-exchanged
+            # every round
+            pointers = (
+                state.where(F.col("lbl") < F.col("id"))
+                .select(
+                    F.col("lbl").alias("key"),
+                    F.col("id").alias("dst"),
+                    F.lit(False).alias("edge"),
+                )
+                .repartition(npart, "key")
             )
-            if cached_edges is not None:
-                # a union keeps HashPartitioning(key) only when both
-                # sides carry it; without this the cached edges would
-                # be re-exchanged every round
-                pointers = pointers.repartition(npart, "key")
             # SHUFFLE_HASH builds the node-sized state per partition and
             # streams the requests: no per-round sort of the edge list
             answers = (
@@ -955,11 +929,6 @@ def dedup_clusters(
         )
     finally:
         sc.setLocalProperty("spark.job.description", prev_desc)
-        # the returned labels are checkpoint-backed, independent of the
-        # cache; left registered, it would squat on storage and let a
-        # rebuilt plan hit the CacheManager by canonicalized-plan match
-        if cached_edges is not None:
-            cached_edges.unpersist()
 
 
 def retain_per_cluster(
@@ -1729,14 +1698,13 @@ def dhash_hamming_pairs(
     # for PNG inputs that is four runs of the whole Python decode
     # chain.  The relation is id + 8 ints (~72 B/row at any corpus
     # size) — cheap to materialize, 100 TB-safe.
-    d = (
+    d = checkpoint(
         df.select(
             F.col(id_col).alias("__id"),
             *[F.col(c).cast("int").alias(f"__b{j}")
               for j, c in enumerate(byte_cols)],
         )
         .filter(F.col("__id").isNotNull())
-        .localCheckpoint(eager=False)
     )
     if n_blocks == 8:
         key_exprs = [F.col(f"__b{j}") for j in range(8)]

@@ -32,7 +32,7 @@ import itertools
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pigout_spark.pipeline.iterate import fixpoint
+from pigout_spark.pipeline.iterate import checkpoint, fixpoint
 
 #: fixed-point scale: 1 rank = 10^12 units (int64-safe: total mass
 #: ≤ 10^13 units; the damping multiply peaks at 85·10^12 « 2^63)
@@ -150,7 +150,7 @@ def pagerank(
         "__s"
     )
     degs = ep.groupBy("__s").agg(F.sum("__w").alias("__deg"))
-    e = ep.join(degs.hint("shuffle_hash"), "__s").localCheckpoint(eager=False)
+    e = checkpoint(ep.join(degs.hint("shuffle_hash"), "__s"))
     # Nodes read the checkpointed edges (recomputed once more by the
     # final join — one shuffle from the checkpoint, cheaper than a
     # second materialization barrier; measured r7).
@@ -383,7 +383,7 @@ def triangle_count(
         # construction (docstring contract); the checkpoint makes the
         # probe's materialization REUSED by the returned plan instead
         # of the pre-wedge chain computing twice (r13 ADVICE).
-        oriented = oriented.localCheckpoint(eager=False)
+        oriented = checkpoint(oriented)
         probe = (
             oriented.groupBy("s")
             .agg(F.count(F.lit(1)).alias("__od"))
@@ -551,7 +551,7 @@ def k_core(
 
     live = fixpoint(
         "k_core",
-        _undirected(edges, src, dst).localCheckpoint(eager=False),
+        checkpoint(_undirected(edges, src, dst)),
         peel,
         rounds=int(max_rounds),
         converged=lambda live: not weak(live).limit(1).count(),
@@ -597,16 +597,13 @@ def label_propagation(
 
     s, d = F.col(src), F.col(dst)
     base = edges.filter(s.isNotNull() & d.isNotNull() & (s != d))
-    e = (
+    e = checkpoint(
         base.select(s.alias("__u"), d.alias("__v"))
         .unionByName(base.select(d.alias("__u"), s.alias("__v")))
         .distinct()
         .repartition("__u")
-        .localCheckpoint(eager=False)
     )
-    nodes = e.select(F.col("__u").alias("node")).distinct().localCheckpoint(
-        eager=False
-    )
+    nodes = checkpoint(e.select(F.col("__u").alias("node")).distinct())
 
     def step(labels: DataFrame) -> DataFrame:
         msgs = e.join(
@@ -671,11 +668,10 @@ def common_neighbors(
     """
     s, d = F.col(src), F.col(dst)
     base = edges.filter(s.isNotNull() & d.isNotNull() & (s != d))
-    adj = (
+    adj = checkpoint(
         base.select(s.alias("__w"), d.alias("__x"))
         .unionByName(base.select(d.alias("__w"), s.alias("__x")))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     deg = adj.groupBy("__x").agg(F.count(F.lit(1)).alias("__deg")).select(
         F.col("__x").alias("node"), "__deg"
@@ -751,16 +747,14 @@ def hits(
     """
     s, d = F.col(src), F.col(dst)
     base = edges.filter(s.isNotNull() & d.isNotNull())
-    e = (
+    e = checkpoint(
         base.select(s.alias("__s"), d.alias("__d"))
         .repartition("__s")
-        .localCheckpoint(eager=False)
     )
-    nodes = (
+    nodes = checkpoint(
         e.select(F.col("__s").alias("node"))
         .unionByName(e.select(F.col("__d").alias("node")))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     start = F.lit(PAGERANK_UNIT).cast("bigint")
 
@@ -877,13 +871,13 @@ def bfs_distances(
     Output: (node, hops) — sources at 0; unreachable-within-budget
     nodes absent.
 
-    100 TB: the edge list shuffles ONCE onto the source key
-    (checkpointed); each round is one co-partitioned frontier⋈edges
-    join + one anti-join against the settled set, both on node-key
-    partitioning.  The frontier is the working set — on real graphs it
-    peaks and shrinks, so late rounds are cheap; the settled relation
-    grows monotonically, and both are checkpointed every 4 rounds.  The
-    driver holds only the seed literals.
+    100 TB: the edge list is deduplicated and checkpointed once; each
+    round is one frontier⋈edges join on the source key + one anti-join
+    against the settled set, both on node-key partitioning.  The
+    frontier is the working set — on real graphs it peaks and shrinks,
+    so late rounds are cheap; the settled relation grows monotonically,
+    and both are checkpointed every 4 rounds.  The driver holds only
+    the seed literals.
     """
     # Seeds that never appear in the edge relation still belong in the
     # output at hop 0 (they are trivially reachable from themselves).
@@ -894,12 +888,15 @@ def bfs_distances(
     )
     if not directed:
         e = _with_reversed(e)
-    # Land the deduped edge list ON the source key before
-    # checkpointing — the docstring's "shuffles ONCE onto the source
-    # key" contract.  distinct() leaves (__s, __d) partitioning,
-    # which no round join can reuse; one extra exchange here saves one
-    # e-sized exchange in EVERY round.
-    e = e.distinct().repartition("__s").localCheckpoint(eager=False)
+    # No explicit partition count, so adaptive execution may coalesce
+    # this exchange and the checkpoint then declares no partitioning:
+    # the round joins exchange the edges again, once per plan, as the
+    # repeated round subtrees reuse that exchange.  repartition(n,
+    # "__s") would keep hashpartitioning(__s, n), but the edge copies in
+    # the repeated subtrees would stop comparing equal, so no exchange
+    # above them is reused: x_bfs_hops went from 14 to 27 Spark jobs at
+    # sf0.1.
+    e = checkpoint(e.distinct().repartition("__s"))
     hops = itertools.count(1)  # fixpoint calls step once per round
 
     def step(state: tuple[DataFrame, DataFrame]) -> tuple[DataFrame, DataFrame]:
@@ -974,7 +971,7 @@ def shortest_paths(
         )
     if not directed:
         e = _with_reversed(e)
-    e = e.localCheckpoint(eager=False)
+    e = checkpoint(e)
 
     def relax(dist: DataFrame) -> DataFrame:
         relaxed = (

@@ -1,4 +1,9 @@
-"""One driver for the iterative loops of the pipeline operators.
+"""The package's one checkpoint, and one driver for the iterative loops
+of the pipeline operators.
+
+Every checkpoint the package takes goes through :func:`checkpoint`, so
+one function decides its storage level, its size estimate and the
+partitioning it declares.
 
 :func:`fixpoint` runs a step function over a state of one DataFrame or a
 tuple of them.  It owns what every loop used to write out by hand: the
@@ -54,30 +59,63 @@ State = DataFrame | tuple
 
 def checkpoint(df: DataFrame) -> DataFrame:
     """``df`` cut from its lineage: a lazy DISK_ONLY local checkpoint
-    under a plan with no optimizer size estimate.
+    that keeps the hash partitioning ``df``'s plan produced, and drops
+    the optimizer size estimate of a plan with a join.
 
     DISK_ONLY: a checkpoint block is the only copy of its data, so the
     block manager can never evict it, and memory-first checkpoints of a
     130 M-edge list plus one state per round starved execution memory
     (SparkOutOfMemoryError UNABLE_TO_ACQUIRE_MEMORY).
 
-    No size estimate: a checkpoint keeps the estimate of the plan it
-    cuts, and a join's estimate is the product of its inputs'.  A loop
-    that joins its state with itself therefore squares the estimate
-    every round: its digit count doubles, and the driver's big-integer
+    Size estimate: a checkpoint keeps the estimate of the plan it cuts,
+    and a join's estimate is the product of its inputs'.  A loop that
+    joins its state with itself therefore squares the estimate every
+    round: its digit count doubles, and the driver's big-integer
     arithmetic on it took 0.4 s per round at round 15 and 70 s at round
-    23 of a 64-node chain.  Without an estimate Spark assumes its
-    default size.  The checkpoint's constraints stay: without them
-    Catalyst re-infers ``isnotnull`` filters on join keys, two scans of
-    one state stop sharing an exchange, and label_propagation ran one
-    more job per round."""
+    23 of a 64-node chain.  So a plan with a join loses its estimate and
+    Spark assumes its default size.  A plan without one keeps it: its
+    estimate is bounded by its inputs', and dropping it turned broadcast
+    joins against small checkpoints into shuffle joins (hits 41 → 49
+    Spark jobs at sf0.1).  The checkpoint's constraints stay: without
+    them Catalyst re-infers ``isnotnull`` filters on join keys, two
+    scans of one state stop sharing an exchange, and label_propagation
+    ran one more job per round.
+
+    Partitioning: under adaptive query execution the plan Spark hands
+    the checkpoint is an ``AdaptiveSparkPlanExec``, which declares no
+    partitioning, so a join on the key ``df`` was just shuffled on would
+    shuffle the checkpoint again.  Taking the checkpoint has already
+    finalized that plan, so its final physical plan is read (no job)
+    and its ``outputPartitioning`` declared when it is exactly a
+    ``HashPartitioning`` over as many partitions as the checkpoint's
+    RDD has.  Only then is partition ``i`` of the RDD known to hold
+    exactly the rows whose key hashes to ``i``; a coalesced hash
+    partitioning (adaptive execution merged neighbouring buckets) or a
+    count that disagrees with the RDD would let a join skip an exchange
+    it needs, so anything else stays ``UnknownPartitioning``.  The cost:
+    Spark canonicalizes a declared partitioning with its attribute ids,
+    so two self-join copies of one such checkpoint no longer compare
+    equal, and exchanges above them are not reused."""
     cut = df.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     rel = cut._jdf.queryExecution().logical()  # a LogicalRDD
-    session, _, constraints = (rel.otherCopyArgs().apply(i) for i in range(3))
+    session, estimate, constraints = (rel.otherCopyArgs().apply(i) for i in range(3))
+    # output, rdd, outputPartitioning, outputOrdering, isStreaming, stream
     fields = [rel.productElement(i) for i in range(rel.productArity())]
+    qe = df._jdf.queryExecution()
+    plan = qe.executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.finalPhysicalPlan()
+    part = plan.outputPartitioning()
+    if (
+        part.getClass().getSimpleName() == "HashPartitioning"
+        and part.numPartitions() == fields[1].getNumPartitions()
+    ):
+        fields[2] = part
     client = cut.sparkSession.sparkContext._gateway._gateway_client
-    no_estimate = JavaClass("scala.Option", client).empty()
-    rel = rel.copy(*fields, session, no_estimate, constraints)
+    join = JavaClass("org.apache.spark.sql.catalyst.trees.TreePattern", client).JOIN()
+    if qe.optimizedPlan().containsPattern(join):
+        estimate = JavaClass("scala.Option", client).empty()
+    rel = rel.copy(*fields, session, estimate, constraints)
     dataset = JavaClass("org.apache.spark.sql.classic.Dataset", client)
     return DataFrame(dataset.ofRows(session, rel), cut.sparkSession)
 

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pigout_spark.pipeline.iterate import checkpoint
+
 #: unordered pairs (a, b), a < b, from a sorted deduplicated array
 _PAIR_EXPR = (
     "flatten(transform(items, (x, ix) -> "
@@ -210,7 +212,7 @@ def item_cf_topk(
     # checkpoint the scan→join→distinct→agg chain runs twice (measured
     # ~0.7 s of the query's 2.6 s at sf0.1).  It is user-count-sized
     # (≤ cap items per row) — cheap to materialize, 100 TB-safe.
-    lists = lists.localCheckpoint(eager=False)
+    lists = checkpoint(lists)
     # r14: the symmetrized pair relation is aggregated in ONE pipeline
     # (both directions emitted in-task — _SYM_PAIR_EXPR) instead of the
     # former post-aggregation self-union, which planned the entire
@@ -229,11 +231,10 @@ def item_cf_topk(
         .agg(F.count(F.lit(1)).alias("n_ab"))
         .filter(F.col("n_ab") >= int(min_cooc))
     )
-    ni = (
+    ni = checkpoint(
         lists.select(F.explode("items").alias("item"))
         .groupBy("item")
         .agg(F.count(F.lit(1)).alias("n_i"))
-        .localCheckpoint(eager=False)
     )
     # r15 (VERDICT r14 #4, guide §2.4/§3.1): join rec_item FIRST, item
     # LAST — the per-item top-k window below partitions by item, so the

@@ -14,6 +14,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from pigout_spark.pipeline.dedup import ws_tokens
+from pigout_spark.pipeline.iterate import checkpoint
 from pigout_spark.plans.partitioning import fan_out
 
 #: Per-language stopword profiles (whole-token hits) for Latin-script
@@ -570,7 +571,7 @@ def bpe_train(
     Returns the merge list [(left, right), ...] in training order.
 
     Scale bound (research-grade trainer): every merge round is ONE
-    driver roundtrip (the argmax collect) plus a localCheckpoint, so a
+    driver roundtrip (the argmax collect) plus a checkpoint, so a
     production 50k-merge vocabulary means 50k scheduled jobs — days of
     driver-bound wall time regardless of cluster size.  The guard
     below caps n_merges at 4096; for production vocabularies train the
@@ -600,7 +601,7 @@ def bpe_train(
             "n",
         )
     )
-    vocab = vocab.localCheckpoint(eager=True)  # corpus pass runs ONCE
+    vocab = checkpoint(vocab)  # corpus pass runs ONCE
     merges: list[tuple[str, str]] = []
     for _ in range(n_merges):
         toks = F.split("sym", " ")
@@ -628,9 +629,11 @@ def bpe_train(
         pat = (
             "(?<=^|\\s)" + _re_quote(left) + " " + _re_quote(right) + "(?=\\s|$)"
         )
-        vocab = vocab.withColumn(
-            "sym", F.regexp_replace("sym", pat, _repl_quote(left + right))
-        ).localCheckpoint(eager=True)  # constant-depth lineage per round
+        vocab = checkpoint(  # constant-depth lineage per round
+            vocab.withColumn(
+                "sym", F.regexp_replace("sym", pat, _repl_quote(left + right))
+            )
+        )
     return merges
 
 
@@ -854,10 +857,9 @@ def bigram_lm_score(
     # marginal c1 = Σ_w2 c2 comes from c2 itself rather than a second
     # pass over the exploded bigram stream (r8 verdict: the extra
     # corpus pass was a third of the query's wall time).
-    c2 = (
+    c2 = checkpoint(
         bg.groupBy("__w1", "__w2")
         .agg(F.count(F.lit(1)).alias("__c2"))
-        .localCheckpoint(eager=False)
     )
     c1 = c2.groupBy("__w1").agg(F.sum("__c2").alias("__c1"))
     vocab = (

@@ -32,545 +32,21 @@ from pigout_spark.queries import pipeline_q  # noqa: F401,E402
 from pigout_spark.queries import streaming_q  # noqa: F401,E402
 from pigout_spark.queries import udf_q  # noqa: F401,E402
 
-# Round-1 lesson: entries past the driver's 50-query window get no
-# CORRECTNESS row at all.  Order the registry so the entries rotated
-# into the window this round come first — a hedge against any
-# time-based element of the cutoff.
-#
-# r7 rotation (VERDICT r5 task 1 continued): after the r6 rotation,
-# exactly 30 queries had still never held a driver CORRECTNESS row
-# (computed from CORRECTNESS_r01..r06): the late-r6 additions plus the
-# tail the 50-slot window could not fit.  The window below is now an
-# EXPLICIT list — cumulative incremental rotations had become hard to
-# audit — containing the flagship, all 30 never-checked entries (28
-# hash-checkable; x_sample_bernoulli / x_bpe_encode_trained are
-# genuinely rows-only and get the driver's weaker gate), and 19
-# settled anchors that keep every operator family driver-covered.
-# Everything else moves to EXTRA_REGISTRY, keeping its local oracle
-# (tools/selfcheck.py + tests/test_queries.py).  After r7 every
-# query registered AT r7 rotation time will have held a driver row.
-#
-# r8 rotation: the 20 late-r7 additions that were selfcheck-green but
-# never driver-checked take the open slots (computed from
-# CORRECTNESS_r01..r07 — exactly these 20 plus the two genuinely
-# rows-only entries had never held a hash row; the rows-only pair got
-# its weaker driver rows at r7 and rotates back to extras), and the 10
-# operator families BUILT this round (BFS/SSSP, CDC merge, OLS trend,
-# PSI/KS drift, seasonal decompose, item CF, segmented A/B, winsorize)
-# take the remaining slots so they hold driver rows in their build
-# round.  After r8 every query registered before this round will have
-# held a driver CORRECTNESS row.  Anchors: 15 of the 19 r7 anchors
-# stay — q06/q26/dedup_exact/text_langid ceded their slots to the four
-# late-r8 additions (quantile bucketing, heavy hitters, skew stats,
-# grouped PSI); their families keep other driver rows (q03/q05/q38 +
-# the temporal joins, q24/q25, dedup_minhash/simhash_pairs,
-# text_quality/q13) and they keep local oracles as extras.
-# r9 rotation candidates (added after the r8 window filled,
-# selfcheck-green at sf0.01+sf0.1 but not yet driver-checked):
-# x_check_rules, x_ref_orphans, x_kfold, x_snapshot_diff, x_cusum,
-# x_cat_assoc, x_gini, x_proportion_ci, x_weighted_quantile,
-# x_kaplan_meier, x_logrank, x_odds_ratio.
-_WINDOW_R8 = [  # superseded by _WINDOW_R9 below; kept for the audit trail
+# The driver records only the first DRIVER_QUERY_CAP queries it is
+# handed, so the driver-facing set is this explicit list, in order,
+# with the flagship first.  Every other registered query moves to
+# EXTRA_REGISTRY and keeps its local oracle (tools/selfcheck.py,
+# tests/test_queries.py).  x_sample_bernoulli and x_bpe_encode_trained
+# are rows-only by nature and stay extras; their deterministic twins
+# carry the hash checks.
+DRIVER_WINDOW = [
     "q01_group_agg",  # flagship
-    # never driver-checked before r8 — hash-checkable oracles
-    "x_bigram_lm",
-    "x_fuzzy_join",
-    "x_bm25_topk",
-    "x_split_safe",
-    "x_quality_pctile",
-    "x_ab_lift",
-    "x_cuped_lift",
-    "x_srm_check",
-    "x_label_prop",
-    "x_ppr",
-    "x_common_neighbors",
-    "x_hits",
-    "x_mmr",
-    "x_transitions",
-    "x_mad_outliers",
-    "x_scd2",
-    "x_session_ngrams",
-    "x_basket_rules",
-    "x_asof_nearest",
-    "x_merge_intervals",
-    # new r8 operator families (added this round, selfcheck-green at
-    # sf0.01 AND sf0.1 — they take the anchor-insurance slots so they
-    # hold driver rows in the round they were built)
-    "x_bfs_hops",
-    "x_sssp",
-    "x_apply_cdc",
-    "x_trend_fit",
-    "x_psi_drift",
-    "x_ks_drift",
-    "x_seasonal",
-    "x_item_cf",
-    "x_ab_segments",
-    "x_winsorize",
-    "x_quantile_bucket",
-    "x_heavy_hitters",
-    "x_skew_stats",
-    "x_psi_by_source",
-    # settled anchors: one driver-green row per operator family
-    "q02_filter_project",
-    "q03_join_agg",
-    "q05_broadcast_join",
-    "q11_cube",
-    "q13_flatten_tokenize",
-    "q15_nested_topk",
-    "q38_bloom_join",
-    "q24_pandas_udf",
-    "q25_udaf",
-    "dedup_minhash",
-    "dedup_simhash_pairs",
-    "sim_ivf_topk",
-    "text_quality",
-    "mm_binary_meta",
-    "x_latin_q01",
-]
-assert len(_WINDOW_R8) == len(set(_WINDOW_R8)) == 50
-
-# r9 rotation: every query registered before this round has held a
-# driver row (the r8 invariant), so the window now holds (a) the
-# flagship, (b) the 12 r9-queue stats/CDC queries (selfcheck-green,
-# never driver-checked — VERDICT r8 task 1), (c) everything BUILT OR
-# MODIFIED this round so changes are attested in their own round
-# (q39_string_funcs3 is new — the last three §2.7 builtins; x_item_cf /
-# x_pagerank / x_bigram_lm carry r9 perf work; x_winsorize /
-# x_weighted_quantile / x_psi_drift / x_psi_by_source carry the r8
-# ADVICE guard fixes, incl. the shared bin_expr NULL gate), and (d)
-# settled anchors chosen so every operator family keeps a driver row
-# (sets re-enter via q08 — the one family the r8 window left to
-# history).
-# r10 rotation candidates (added after the r9 window was fixed,
-# selfcheck-green at sf0.01+sf0.1 as added but not yet driver-checked):
-# x_spearman, x_mann_whitney, x_bh_fdr, x_kruskal, x_target_enc,
-# x_feature_hash, x_robust_scale, x_autocorr, x_roc_auc, x_calibration,
-# x_uplift, x_url_normalize, x_rank_metrics, x_brown_forsythe,
-# x_fisher_exact.
-_WINDOW_R9 = [  # superseded by _WINDOW_R10 below; kept for the audit trail
-    "q01_group_agg",  # flagship
-    # (b) the r9 queue — never driver-checked
-    "x_check_rules",
-    "x_ref_orphans",
-    "x_kfold",
-    "x_snapshot_diff",
-    "x_cusum",
-    "x_cat_assoc",
-    "x_gini",
-    "x_proportion_ci",
-    "x_weighted_quantile",
-    "x_kaplan_meier",
-    "x_logrank",
-    "x_odds_ratio",
-    # (c) new or touched this round
-    "q39_string_funcs3",
-    "x_item_cf",
-    "x_pagerank",
-    "x_bigram_lm",
-    "x_winsorize",
-    "x_psi_drift",
-    "x_psi_by_source",
-    # (d) settled anchors — one per operator family
-    "q02_filter_project",
-    "q03_join_agg",
-    "q04_outer_join",
-    "q05_broadcast_join",
-    "q06_semi_anti",
-    "q07_cross_theta",
-    "q08_union_distinct",
-    "q09_order_limit",
-    "q11_cube",
-    "q12_rollup",
-    "q13_flatten_tokenize",
-    "q14_cogroup",
-    "q15_nested_topk",
-    "q16_split",
-    "q19_date_funcs",
-    "q22_distinct_agg",
-    "q24_pandas_udf",
-    "q25_udaf",
-    "q38_bloom_join",
-    "x_latin_q01",
-    "dedup_exact",
-    "dedup_minhash",
-    "dedup_simhash_pairs",
-    "sim_ann_topk",
-    "sim_ivf_topk",
-    "text_quality",
-    "mm_binary_meta",
-    "stream_tumbling",
-    "x_asof_join",
-    "x_sessionize",
-]
-assert len(_WINDOW_R9) == len(set(_WINDOW_R9)) == 50
-
-# r11 rotation candidates (added after the r10 window was fixed,
-# selfcheck-green at sf0.01+sf0.1 as added but not yet driver-checked):
-# x_grouped_kruskal, x_grouped_bf, x_grouped_fisher.
-#
-# r10 rotation (VERDICT r9 task 1): every query registered before this
-# round has held a driver row (the running invariant), so the window
-# holds (a) the flagship, (b) the 15 r10-queue stats/features/
-# evaluation queries (selfcheck-green since r9, never driver-checked —
-# they also carry this round's grouped-stats refactor of
-# mann_whitney/kruskal/brown_forsythe/fisher_exact and the
-# url_normalize fragment fix, so the r10 code changes are attested in
-# their own round), (c) the three queries BUILT this round
-# (x_grouped_mw_fdr — grouped MW → BH end-to-end; x_mm_decode — real
-# pure-Python PPM decode; x_upsert_replay — the streaming CDC upsert's
-# batch-replay equality, r8 #8 / r9 #6), plus q39_string_funcs3 which
-# carries the r10 Java-split reconstruction, and (d) the same 30
-# settled per-family anchors as r9.
-_WINDOW_R10 = [
-    "q01_group_agg",  # flagship
-    # (b) the r10 queue — never driver-checked, carries r10 refactors
-    "x_spearman",
-    "x_mann_whitney",
-    "x_bh_fdr",
-    "x_kruskal",
-    "x_target_enc",
-    "x_feature_hash",
-    "x_robust_scale",
-    "x_autocorr",
-    "x_roc_auc",
-    "x_calibration",
-    "x_uplift",
-    "x_url_normalize",
-    "x_rank_metrics",
-    "x_brown_forsythe",
-    "x_fisher_exact",
-    # (c) built or reconstruction-touched this round
-    "x_grouped_mw_fdr",
-    "x_mm_decode",
-    "x_upsert_replay",
-    "q39_string_funcs3",
-    # (d) settled anchors — one per operator family (same set as r9)
-    "q02_filter_project",
-    "q03_join_agg",
-    "q04_outer_join",
-    "q05_broadcast_join",
-    "q06_semi_anti",
-    "q07_cross_theta",
-    "q08_union_distinct",
-    "q09_order_limit",
-    "q11_cube",
-    "q12_rollup",
-    "q13_flatten_tokenize",
-    "q14_cogroup",
-    "q15_nested_topk",
-    "q16_split",
-    "q19_date_funcs",
-    "q22_distinct_agg",
-    "q24_pandas_udf",
-    "q25_udaf",
-    "q38_bloom_join",
-    "x_latin_q01",
-    "dedup_exact",
-    "dedup_minhash",
-    "dedup_simhash_pairs",
-    "sim_ann_topk",
-    "sim_ivf_topk",
-    "text_quality",
-    "mm_binary_meta",
-    "stream_tumbling",
-    "x_asof_join",
-    "x_sessionize",
-]
-assert len(_WINDOW_R10) == len(set(_WINDOW_R10)) == 50
-
-# r12 rotation candidates (added after the r11 window was fixed,
-# selfcheck-green at sf0.01+sf0.1 as added but not yet driver-checked):
-# x_anova_f, x_welch_ttest, x_two_prop_z, x_theil_sen,
-# x_emb_covariance, x_ann_recall, x_nelson_aalen, x_mantel_haenszel,
-# x_benford.
-#
-# r11 rotation (VERDICT r10 task 1): the pinned queue is small (the
-# three grouped-stats queries), so the freed slots re-anchor families
-# whose NEWEST driver row is r7 or older — computed from
-# CORRECTNESS_r01..r10: sketches (x_kmv_estimate r6, x_cms_estimate
-# r6, x_qdigest_quantiles r7), graph beyond pagerank (x_kcore r7,
-# x_triangles r7), windowed analytics (q23_window_lag r2!), ranking
-# (q10_rank r3), map ops (q37_map_ops r3), JSON (q20_json r4),
-# streaming sliding/session windows (stream_sliding r2, stream_session
-# r3), set ops beyond union (q17_intersect_except r4), percentiles
-# (q36_percentiles r4) — plus x_scd2 (r8, named explicitly by the
-# verdict).  The two batch-replay attestations BUILT this round
-# (x_funnel_replay, x_transitions_replay — r10 verdict #7) take slots
-# in their build round per the running pattern, and the 30 settled
-# per-family anchors carry over from r10 unchanged (q39/x_upsert_replay
-# cede their r10 slots: their families hold fresh r10 rows and both
-# stay locally oracle-checked as extras).
-_WINDOW_R11 = [
-    "q01_group_agg",  # flagship
-    # (a) the pinned r11 queue — never driver-checked
-    "x_grouped_kruskal",
-    "x_grouped_bf",
-    "x_grouped_fisher",
-    # (b) built this round
-    "x_funnel_replay",
-    "x_transitions_replay",
-    # (c) stale-family re-anchors (newest family row r7 or older)
-    "x_kmv_estimate",
-    "x_cms_estimate",
-    "x_qdigest_quantiles",
-    "x_kcore",
-    "x_triangles",
-    "x_scd2",
-    "q23_window_lag",
-    "q10_rank",
-    "q37_map_ops",
-    "q20_json",
-    "stream_sliding",
-    "stream_session",
-    "q17_intersect_except",
-    "q36_percentiles",
-    # (d) settled anchors — one per operator family (same set as r10)
-    "q02_filter_project",
-    "q03_join_agg",
-    "q04_outer_join",
-    "q05_broadcast_join",
-    "q06_semi_anti",
-    "q07_cross_theta",
-    "q08_union_distinct",
-    "q09_order_limit",
-    "q11_cube",
-    "q12_rollup",
-    "q13_flatten_tokenize",
-    "q14_cogroup",
-    "q15_nested_topk",
-    "q16_split",
-    "q19_date_funcs",
-    "q22_distinct_agg",
-    "q24_pandas_udf",
-    "q25_udaf",
-    "q38_bloom_join",
-    "x_latin_q01",
-    "dedup_exact",
-    "dedup_minhash",
-    "dedup_simhash_pairs",
-    "sim_ann_topk",
-    "sim_ivf_topk",
-    "text_quality",
-    "mm_binary_meta",
-    "stream_tumbling",
-    "x_asof_join",
-    "x_sessionize",
-]
-assert len(_WINDOW_R11) == len(set(_WINDOW_R11)) == 50
-
-# r12 rotation (VERDICT r11 task 1): the pinned 9-query queue
-# (selfcheck-green since r11; the judge re-verified all nine) takes
-# slots 2-10; the two queries BUILT this round (x_triangles_sampled —
-# the dense-graph scale answer, VERDICT #4; x_pca_project — the
-# eigh-then-project oracle closure, VERDICT #5) take slots per the
-# running built-this-round pattern; 8 slots re-anchor the stalest
-# remaining driver rows computed from CORRECTNESS_r01..r11 —
-# q28_group_bag / q29_union_onschema / q30_sample / q33_corr_cov /
-# q34_math_funcs all last held driver rows at r4 (the oldest
-# individual rows of any still-registered query), and the verdict
-# names q39_string_funcs3 / x_upsert_replay / x_roc_auc (r10-row
-# holders for strings / streaming-CDC / evaluation).  The 30 settled
-# per-family anchors carry over from r11 unchanged.  Everything
-# rotated out keeps its local oracle (tools/selfcheck.py +
-# tests/test_queries.py) per the standing policy; every rotated-out
-# query has held a green driver row r1-r11.
-# r13 rotation candidates (added after the r12 window was fixed,
-# selfcheck-green at sf0.01+sf0.1 as added but not yet driver-checked):
-# x_boot_ci (Poisson-bootstrap CI), x_jackknife (ratio-metric SE),
-# x_did (diff-in-differences), x_psm (propensity matching),
-# x_trimmed_mean, x_conformal (split-conformal quantile),
-# x_temp_mixture (temperature mixing weights), x_quality_logit
-# (logistic scorer application), x_neyman (Neyman-optimal stratified
-# allocation), x_containment (asymmetric Broder containment
-# near-dup), x_eb_ci (empirical-Bernstein bounded-mean CI),
-# x_cochran (Cochran-Armitage trend), x_by_fdr (Benjamini-Yekutieli),
-# x_cusum_replay (streaming CUSUM batch-replay attestation).
-_WINDOW_R12 = [
-    "q01_group_agg",  # flagship
-    # (a) the pinned r12 queue — never driver-checked
-    "x_anova_f",
-    "x_welch_ttest",
-    "x_two_prop_z",
-    "x_theil_sen",
-    "x_emb_covariance",
-    "x_ann_recall",
-    "x_nelson_aalen",
-    "x_mantel_haenszel",
-    "x_benford",
-    # (b) built this round
-    "x_triangles_sampled",
-    "x_pca_project",
-    # (c) stale re-anchors (oldest driver rows: r4-era operators, plus
-    # the verdict-named r10 family holders)
-    "q28_group_bag",
-    "q29_union_onschema",
-    "q30_sample",
-    "q33_corr_cov",
-    "q34_math_funcs",
-    "q39_string_funcs3",
-    "x_upsert_replay",
-    "x_roc_auc",
-    # (d) settled anchors — one per operator family (same set as r11)
-    "q02_filter_project",
-    "q03_join_agg",
-    "q04_outer_join",
-    "q05_broadcast_join",
-    "q06_semi_anti",
-    "q07_cross_theta",
-    "q08_union_distinct",
-    "q09_order_limit",
-    "q11_cube",
-    "q12_rollup",
-    "q13_flatten_tokenize",
-    "q14_cogroup",
-    "q15_nested_topk",
-    "q16_split",
-    "q19_date_funcs",
-    "q22_distinct_agg",
-    "q24_pandas_udf",
-    "q25_udaf",
-    "q38_bloom_join",
-    "x_latin_q01",
-    "dedup_exact",
-    "dedup_minhash",
-    "dedup_simhash_pairs",
-    "sim_ann_topk",
-    "sim_ivf_topk",
-    "text_quality",
-    "mm_binary_meta",
-    "stream_tumbling",
-    "x_asof_join",
-    "x_sessionize",
-]
-assert len(_WINDOW_R12) == len(set(_WINDOW_R12)) == 50
-
-# r13 rotation (VERDICT r12 task 1): the pinned 14-query queue — every
-# registered query that has NEVER held a driver CORRECTNESS row — takes
-# slots 2-15 (selfcheck-green at sf0.01+sf0.1 since r12; the r12 judge
-# re-verified all fourteen; this round additionally hardened four of
-# their oracles per ADVICE: _jk_sql degenerate-bucket gating,
-# x_containment's max_df mirror, x_eb_ci's R=1e6 headroom,
-# x_cusum_replay's (ord, v) tiebreak).  Slots 16-20 re-anchor the five
-# stalest remaining driver rows, all r1-era (q35_string_funcs2,
-# sim_ann_buckets, sim_ivf_cells, text_rolling_hash, text_tokens —
-# computed from CORRECTNESS_r01..r12).  The 30 settled per-family
-# anchors carry over from r12 unchanged.  Everything rotated out keeps
-# its local oracle (tools/selfcheck.py + tests/test_queries.py) per the
-# standing policy; every rotated-out query has held a green driver row
-# in r1-r12.  Queries built THIS round register extra=True and queue
-# for r14 — the 14-slot attestation queue is this round's priority.
-# r14 rotation candidates (added after the r13 window was fixed,
-# selfcheck-green at sf0.01+sf0.1 as added but not yet driver-checked):
-# x_token_entropy (per-doc Shannon entropy quality signal),
-# x_good_turing (frequency-of-frequencies smoothing table),
-# x_zipf_fit (corpus Zipf exponent via micro-unit OLS),
-# x_rrf_fusion (hybrid BM25+dense Reciprocal Rank Fusion),
-# x_fuzzy_pairs (blocked-Levenshtein fuzzy near-dup).
-_WINDOW_R13 = [
-    "q01_group_agg",  # flagship
-    # (a) the pinned r13 queue — never driver-checked (VERDICT r12 #1)
-    "x_boot_ci",
-    "x_jackknife",
-    "x_did",
-    "x_psm",
-    "x_trimmed_mean",
-    "x_conformal",
-    "x_temp_mixture",
-    "x_quality_logit",
-    "x_neyman",
-    "x_containment",
-    "x_eb_ci",
-    "x_cochran",
-    "x_by_fdr",
-    "x_cusum_replay",
-    # (c) stale re-anchors (oldest driver rows: all r1)
-    "q35_string_funcs2",
-    "sim_ann_buckets",
-    "sim_ivf_cells",
-    "text_rolling_hash",
-    "text_tokens",
-    # (d) settled anchors — one per operator family (same set as r12)
-    "q02_filter_project",
-    "q03_join_agg",
-    "q04_outer_join",
-    "q05_broadcast_join",
-    "q06_semi_anti",
-    "q07_cross_theta",
-    "q08_union_distinct",
-    "q09_order_limit",
-    "q11_cube",
-    "q12_rollup",
-    "q13_flatten_tokenize",
-    "q14_cogroup",
-    "q15_nested_topk",
-    "q16_split",
-    "q19_date_funcs",
-    "q22_distinct_agg",
-    "q24_pandas_udf",
-    "q25_udaf",
-    "q38_bloom_join",
-    "x_latin_q01",
-    "dedup_exact",
-    "dedup_minhash",
-    "dedup_simhash_pairs",
-    "sim_ann_topk",
-    "sim_ivf_topk",
-    "text_quality",
-    "mm_binary_meta",
-    "stream_tumbling",
-    "x_asof_join",
-    "x_sessionize",
-]
-assert len(_WINDOW_R13) == len(set(_WINDOW_R13)) == 50
-
-# r14 rotation (VERDICT r13 task 1): the pinned 6-query queue — every
-# hash-checkable registered query that has NEVER held a driver
-# CORRECTNESS row, verified by set-union over CORRECTNESS_r01..r13
-# (x_sample_bernoulli / x_bpe_encode_trained stay extras: genuinely
-# rows-only by nature, their deterministic twins carry the hash
-# checks) — takes slots 2-7.  x_fuzzy_pairs enters AFTER the verdict's
-# #2 precondition was met this round: its sf1 attestation is now
-# non-vacuous (customer-name fixture, 1.17M pairs hash-green at sf1,
-# 11.0M at sf3 — SCALE.md r14).  x_msprt/x_rrf_fusion/x_token_entropy/
-# x_good_turing/x_zipf_fit were pre-verified at sf1+sf3 in r13
-# (SF1_R14_CANDIDATES_r13.json).  The remaining 43 slots re-anchor the
-# STALEST driver rows, per the verdict's prescription ("re-anchor the
-# oldest settled families with the remaining slots") and the r11
-# precedent — computed from CORRECTNESS_r01..r13: every still-
-# registered query whose newest green row is r5 or older (34 queries:
-# q18_string_funcs r3; dedup_embedding/dedup_jaccard/dedup_simhash/
-# q21_scalar_projection/sim_cosine_topk/text_fingerprint r4; the 27
-# r5-era pipeline/stream/latin rows) plus the 9 alphabetically-first
-# r6 rows.  The r13 settled anchors rotate out — every one of them
-# holds a FRESH r13 green row, the newest possible, and keeps its
-# local oracle (tools/selfcheck.py + tests/test_queries.py) per the
-# standing policy.
-# r15 rotation candidates (added after the r14 window was fixed,
-# selfcheck-green at sf0.01+sf0.1 AND hash-green at sf1+sf3 as added,
-# but not yet driver-checked): x_avi_meta (AVI/RIFF video-container
-# metadata), x_readability (Flesch / Flesch-Kincaid), x_power_mde
-# (A/B MDE + required per-arm n), x_mann_kendall (tie-corrected trend
-# test on theil_sen's capped sequence), x_chao1 (vocabulary-richness
-# lower bound + Good's coverage), x_fs_linkage (Fellegi-Sunter
-# record-linkage weights; sf3 oracle DNF >360 s while Spark scores
-# the 152.8M-pair relation in 118 s), x_png_meta (real PNG codec:
-# CRC-verified chunks, all five scanline filters), x_jw_pairs
-# (Jaro-Winkler on the shared blocking; scorer verified bit-identical
-# to the oracle engine's over 30k strings), x_winnow (MOSS winnowing
-# fingerprints, in-task rightmost-min selection), x_img_dhash
-# (perceptual dHash image near-dup; 16-bit pigeonhole blocks — the
-# measured scale lever), x_cox_ph (Cox PH binary-covariate hazard
-# ratio; quantized 4-step Newton, oracle-unrolled).
-_WINDOW_R14 = [
-    "q01_group_agg",  # flagship
-    # (a) the pinned r14 queue — never driver-checked (VERDICT r13 #1)
     "x_token_entropy",
     "x_good_turing",
     "x_zipf_fit",
     "x_rrf_fusion",
     "x_msprt",
     "x_fuzzy_pairs",
-    # (b) stale re-anchors: newest green row r5 or older (r3/r4 first)
     "q18_string_funcs",
     "dedup_embedding",
     "dedup_jaccard",
@@ -605,7 +81,6 @@ _WINDOW_R14 = [
     "x_text_pii",
     "x_text_repetition",
     "x_token_budget",
-    # (c) stale re-anchors: the 9 alphabetically-first r6 rows
     "q27_stream_through",
     "x_bpe_encode",
     "x_cms_sketch",
@@ -614,14 +89,10 @@ _WINDOW_R14 = [
     "x_interp",
     "x_ivfpq_topk",
     "x_kmv_sketch",
-    # (d) built this round (the standing pattern): WAV/RIFF audio
-    # metadata — the r13 verdict #8 gap.  x_latin_udf (the would-be
-    # 9th r6 re-anchor) cedes the slot; its family keeps fresh rows
-    # via x_latin_topk (this window) and x_latin_q01 (r13).
     "x_wav_meta",
 ]
-assert len(_WINDOW_R14) == len(set(_WINDOW_R14)) == 50
-_window = set(_WINDOW_R14)
+assert len(DRIVER_WINDOW) == len(set(DRIVER_WINDOW)) == 50
+_window = set(DRIVER_WINDOW)
 for _k in list(REGISTRY):
     if _k not in _window:
         EXTRA_REGISTRY[_k] = REGISTRY.pop(_k)
@@ -631,9 +102,8 @@ for _k in list(EXTRA_REGISTRY):
 _missing = _window - set(REGISTRY)
 assert not _missing, f"window names not registered anywhere: {_missing}"
 
-# Window order == list order (new-this-round rows right after the
-# flagship, settled anchors last).
-_ordered = {k: REGISTRY[k] for k in _WINDOW_R14}
+# Window order == list order.
+_ordered = {k: REGISTRY[k] for k in DRIVER_WINDOW}
 REGISTRY.clear()
 REGISTRY.update(_ordered)
 

@@ -2172,7 +2172,7 @@ def x_fisher_exact(spark, sf_dir):
 
 @query(
     "x_grouped_mw_fdr",
-    extra=True,  # r10 addition — takes a driver slot in _WINDOW_R10
+    extra=True,
     sql="""
     WITH d AS (
       SELECT source, lang = 'en' AS g, CAST(n_chars AS DOUBLE) AS v

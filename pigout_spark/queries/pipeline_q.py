@@ -20,6 +20,7 @@ from pigout_spark.pipeline.dedup import (
     ngram_jaccard_pairs,
     simhash16,
 )
+from pigout_spark.pipeline.iterate import checkpoint
 from pigout_spark.pipeline.multimodal import binarize, extract_meta
 from pigout_spark.pipeline.similarity import (
     ann_topk,
@@ -2220,11 +2221,10 @@ def x_cms_estimate(spark, sf_dir):
     # distinct non-empty whitespace tokens either way), so estimates
     # are bit-identical.
     d = t(spark, sf_dir, "documents")
-    vocab = (
+    vocab = checkpoint(
         d.select(F.explode(ws_tokens("text", distinct=False)).alias("__tok"))
         .groupBy("__tok")
         .agg(F.count(F.lit(1)).alias("__n"))
-        .localCheckpoint(eager=False)
     )
     sk = cms_build_from_counts(vocab, "__tok", "__n", depth=4, width=1024)
     q = vocab.select(F.col("__tok").alias("term"))
@@ -4859,7 +4859,7 @@ def x_rank_metrics(spark, sf_dir):
 
 @query(
     "x_mm_decode",
-    extra=True,  # r10 addition — takes a driver slot in _WINDOW_R10
+    extra=True,
     sql="""
     WITH g AS (
       SELECT doc_id, 4 + doc_id % 5 AS w, 3 + doc_id % 4 AS h

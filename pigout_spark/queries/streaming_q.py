@@ -975,7 +975,7 @@ _REPLAY_SEQ = [0]  # memory-sink names must be unique within a session
 
 @query(
     "x_upsert_replay",
-    extra=True,  # r10 addition — takes a driver slot in _WINDOW_R10
+    extra=True,
     sql="""
     WITH ch AS (
       SELECT user_id % 200 AS k,
@@ -1118,7 +1118,7 @@ def _write_ordered_halves(df, order_col="__ord"):
            CAST(COUNT(*) AS BIGINT) AS n
     FROM w WHERE prev IS NOT NULL GROUP BY 1, 2, 3
     """,
-    extra=True,  # r11 addition — takes a driver slot in _WINDOW_R11
+    extra=True,
 )
 def x_transitions_replay(spark, sf_dir):
     """Batch-replay equality for the STREAMING Markov-transition
@@ -1205,7 +1205,7 @@ def x_transitions_replay(spark, sf_dir):
     WHERE e1 IS NOT NULL AND e2 IS NOT NULL AND e3 IS NOT NULL
       AND e1 < e2 AND e2 < e3
     """,
-    extra=True,  # r11 addition — takes a driver slot in _WINDOW_R11
+    extra=True,
 )
 def x_funnel_replay(spark, sf_dir):
     """Batch-replay equality for the STREAMING ordered funnel (r10

@@ -667,40 +667,77 @@ def test_dedup_clusters_topologies(spark):
         assert got == dict.fromkeys(walk, min(walk))
 
 
-def test_dedup_clusters_cached_edge_path(spark, monkeypatch, caplog):
-    """Both branches of the edge-cache size gate give union-find's
-    components; the cached branch leaves no cache entry and no
-    non-checkpoint RDD persisted, and the caller's job description is
-    restored.  The result's optimizer size estimate does not compound
+def _ancestors(plan: str, pattern: str) -> list[list[str]]:
+    """For each node of a final physical plan's tree string matching
+    ``pattern``, the names of its ancestors, nearest first."""
+    import re
+
+    lines = plan.split("== Initial Plan ==")[0].splitlines()
+
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    found = []
+    for i, line in enumerate(lines):
+        if re.search(pattern, line):
+            up, d = [], depth(line)
+            for prev in reversed(lines[:i]):
+                if depth(prev) < d:
+                    up.append(prev.lstrip(" :+-*()0123456789"))
+                    d = depth(prev)
+            found.append(up)
+    return found
+
+
+def test_dedup_clusters_single_edge_path(spark, monkeypatch):
+    """One path for every graph size gives union-find's components and
+    leaves no RDD persisted but local checkpoints; the caller's job
+    description is restored.  With broadcast off, no CC round
+    re-exchanges the edge list: nothing between the edge scan and the
+    request join is an Exchange.  The result's optimizer size estimate does not compound
     across rounds (squared per round, it stalled the driver for minutes
     by round ~20).  A round limit too small for the graph raises with
     the number of rounds run."""
-    import logging
-
-    import pytest
-
-    from pigout_spark.pipeline import dedup
+    from pigout_spark.pipeline import dedup, iterate
 
     edges = [(9, 4), (4, 7), (7, 2), (5, 6), (6, 5), (3, 3), (8, 1), (1, 8)]
     want = {9: 2, 4: 2, 7: 2, 2: 2, 5: 5, 6: 5, 3: 3, 8: 1, 1: 1}
     pairs = spark.createDataFrame(edges, ["doc_a", "doc_b"])
     sc = spark.sparkContext
+    plans = []
+    real = iterate.checkpoint
+
+    def capture(df):
+        cut = real(df)
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return cut
+
+    monkeypatch.setattr(iterate, "checkpoint", capture)
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     sc.setJobDescription("outer")
-    caplog.set_level(logging.DEBUG, logger=dedup.__name__)
     persisted = set(sc._jsc.getPersistentRDDs())
     try:
-        for gate, branch in ((dedup._CC_EDGE_CACHE_MIN, "off"), (0, "on")):
-            monkeypatch.setattr(dedup, "_CC_EDGE_CACHE_MIN", gate)
-            caplog.clear()
-            out = dedup.dedup_clusters(pairs)
-            got = {r.doc_id: r.cluster_id for r in out.collect()}
-            assert got == want
-            stats = out._jdf.queryExecution().optimizedPlan().stats()
-            assert stats.sizeInBytes() < 2**63
-            assert f"edge cache {branch}" in caplog.text
-            assert sc.getLocalProperty("spark.job.description") == "outer"
+        out = dedup.dedup_clusters(pairs)
+        got = {r.doc_id: r.cluster_id for r in out.collect()}
+        assert got == want
+        stats = out._jdf.queryExecution().optimizedPlan().stats()
+        assert stats.sizeInBytes() < 2**63
+        assert sc.getLocalProperty("spark.job.description") == "outer"
+        scans = [
+            up
+            for plan in plans
+            for up in _ancestors(plan, r"Scan ExistingRDD\[u#\d+L?,v#")
+        ]
+        assert scans, "no round plan reads the edge checkpoint"
+        for up in scans:
+            below_join = up[: next(i for i, n in enumerate(up) if "Join" in n)]
+            assert not any(n.startswith("Exchange") for n in below_join), up
+        # every RDD left persisted is a local checkpoint's; the edge
+        # checkpoint is read only inside shuffle-map stages, which never
+        # truncate lineage, so it is marked but not isCheckpointed()
         assert all(
-            rdd.isCheckpointed()
+            rdd.rdd().checkpointData().isDefined()
             for rid, rdd in sc._jsc.getPersistentRDDs().items()
             if rid not in persisted
         )
@@ -708,6 +745,7 @@ def test_dedup_clusters_cached_edge_path(spark, monkeypatch, caplog):
             dedup.dedup_clusters(pairs, max_iter=1)
         assert sc.getLocalProperty("spark.job.description") == "outer"
     finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
         sc.setJobDescription(None)
 
 
@@ -2794,6 +2832,99 @@ def test_fixpoint_contract(spark, caplog):
         assert sc.getLocalProperty("spark.job.description") == "outer"
     finally:
         sc.setJobDescription(None)
+
+
+def test_checkpoint_keeps_exact_hash_partitioning(spark):
+    """``iterate.checkpoint`` declares the partitioning its plan
+    produced when that is a ``HashPartitioning`` over as many partitions
+    as the checkpoint holds, so a join on that key plans one exchange
+    fewer, with the same rows; a self-join still resolves.  A coalesced
+    hash partitioning stays undeclared.  Only a plan with a join loses
+    its size estimate.  Reading the plan starts no job beyond what a
+    bare lazy ``localCheckpoint`` starts."""
+    import re
+
+    from pigout_spark.pipeline.iterate import checkpoint
+
+    def declared(df):
+        return df._jdf.queryExecution().logical().productElement(2).toString()
+
+    def exchanges(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return plan.split("== Initial Plan ==")[0].count("Exchange")
+
+    base = spark.range(200).select(
+        (F.col("id") % 10).alias("k"), F.col("id").alias("v")
+    )
+    other = spark.range(50).select(
+        (F.col("id") % 10).alias("k"), (F.col("id") * 2).alias("w")
+    )
+    sc = spark.sparkContext
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        kept = checkpoint(base.repartition(4, "k"))
+        assert re.fullmatch(r"hashpartitioning\(k#\d+L?, 4\)", declared(kept))
+        bare = base.repartition(4, "k").localCheckpoint(eager=False)
+        assert declared(bare) == "UnknownPartitioning(0)"
+
+        def q(x):
+            return x.join(other, "k").groupBy("k").agg(F.sum("w").alias("s"))
+
+        fast, slow = q(kept), q(bare)
+        assert sorted(fast.collect()) == sorted(slow.collect())
+        assert exchanges(fast) == exchanges(slow) - 1
+
+        grouped = base.groupBy("k").agg(F.sum("v").alias("s"))
+        cut = checkpoint(grouped)
+        final = grouped._jdf.queryExecution().executedPlan().finalPhysicalPlan()
+        assert final.outputPartitioning().toString().startswith(
+            "coalescedhashpartitioning("
+        )
+        assert declared(cut) == "UnknownPartitioning(0)"
+
+        # a join-free plan keeps its size estimate, a join's is dropped
+        def size(df):
+            return df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+
+        assert size(cut) < 2**20
+        assert size(checkpoint(base.join(other, "k"))) == 2**63 - 1
+
+        pairs = kept.alias("a").join(kept.alias("b"), "k")
+        assert pairs.count() == 10 * 20 * 20
+
+        tracker = sc.statusTracker()
+        for group, take in (
+            ("ckpt-rule", checkpoint),
+            ("ckpt-bare", lambda df: df.localCheckpoint(eager=False)),
+        ):
+            sc.setJobGroup(group, group)
+            take(base.repartition(4, "k").groupBy("k").count())
+        assert len(tracker.getJobIdsForGroup("ckpt-rule")) <= len(
+            tracker.getJobIdsForGroup("ckpt-bare")
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_checkpoint_policy_lives_in_iterate():
+    """Every checkpoint the package takes goes through
+    ``pipeline/iterate.py:checkpoint``, so one function decides storage
+    level, size estimate and declared partitioning."""
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "pigout_spark"
+    home = pkg / "pipeline" / "iterate.py"
+    stray = [
+        f"{p.relative_to(pkg)}:{n}"
+        for p in sorted(pkg.rglob("*.py"))
+        if p != home
+        for n, line in enumerate(p.read_text().splitlines(), 1)
+        if ".localCheckpoint(" in line
+    ]
+    assert not stray, stray
 
 
 def _estimate_graph(spark):

@@ -87,13 +87,13 @@ def test_registry_size_pinned():
 
 def test_r14_window_landed():
     """The r14 explicit window (queries/__init__.py): the driver-facing
-    set is exactly _WINDOW_R14 in order, every entry has a SQL oracle,
+    set is exactly DRIVER_WINDOW in order, every entry has a SQL oracle,
     and everything displaced kept its local oracle as an extra."""
-    from pigout_spark.queries import _WINDOW_R14
+    from pigout_spark.queries import DRIVER_WINDOW
 
     q = entrymod.queries()
     o = entrymod.oracle_sql()
-    assert list(q) == _WINDOW_R14
+    assert list(q) == DRIVER_WINDOW
     assert len(q) == qmod.DRIVER_QUERY_CAP
     for name in q:
         assert name in o, f"{name} in window without a SQL oracle"
