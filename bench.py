@@ -255,15 +255,12 @@ def _warmup(spark, sf_dir: str) -> None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    import __spark_entry__ as entrymod
+    from pigout_spark.queries import QUERIES
 
-    from pigout_spark import queries as qmod
-
-    # headline queries come from BOTH registries: rotation of the
-    # driver-facing 50 must not silently shrink the bench set
-    qs = {**qmod.extra_queries(), **entrymod.queries()}
-    names = [n for n in HEADLINE if n in qs]
-    ext_names = [n for n in EXTENDED if n in qs]
+    # headline queries come from the whole registry, not only the
+    # driver window
+    names = [n for n in HEADLINE if n in QUERIES]
+    ext_names = [n for n in EXTENDED if n in QUERIES]
     # r5 post-mortem: the driver tail-captures stdout and the 28-query
     # JSON line interleaved with Spark's \r stage-progress output was
     # truncated past parseability (BENCH_r05.json "parsed": null).
@@ -271,10 +268,6 @@ def main() -> None:
     spark = get_spark(
         "pigout-bench", extra_conf={"spark.ui.showConsoleProgress": "false"}
     )
-    try:
-        spark.conf.set("spark.ui.showConsoleProgress", "false")
-    except Exception:
-        pass
     # r15 (VERDICT r14 #3): TWO warmup passes.  The r14 driver artifact
     # recorded q01_group_agg at 1.37 s (2× the quiet-box band) with no
     # code change on that path; re-measurement this round put the first
@@ -288,7 +281,6 @@ def main() -> None:
     _warmup(spark, sf_dir)
     _warmup(spark, sf_dir)
     con = _duckdb_con(sf_dir)
-    oracles = {**qmod.extra_oracle_sql(), **entrymod.oracle_sql()}
     # Load gate (r11 verdict #7): the one contended r11 durability pass
     # (worst 1.92, start load 10.5 vs ~4-6 clean) needed a prose
     # explanation; the gate makes box state machine-checkable instead.
@@ -363,7 +355,8 @@ def main() -> None:
             # prepared-statement methodology (build once, execute per
             # run — every run still pays JVM-side optimization,
             # scheduling and the full computation).
-            raw = getattr(qs[name], "__wrapped__", qs[name])
+            raw = QUERIES[name].fn.__wrapped__
+            oracle = QUERIES[name].sql
             probe = raw(spark, sf_dir)
             has_ckpt = _needs_rebuild(probe)
             fn = raw if has_ckpt else (lambda s, d, _df=probe: _df)
@@ -388,9 +381,9 @@ def main() -> None:
                 df.write.format("noop").mode("overwrite").save()
                 dt = time.perf_counter() - t0
                 best = dt if best is None else min(best, dt)
-                if name in oracles:
+                if oracle is not None:
                     t0 = time.perf_counter()
-                    con.execute(oracles[name]).fetchall()
+                    con.execute(oracle).fetchall()
                     dd = time.perf_counter() - t0
                     best_d = dd if best_d is None else min(best_d, dd)
                 if has_ckpt:

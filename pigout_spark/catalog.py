@@ -153,56 +153,46 @@ class Catalog:
             self.load(spark, name).createOrReplaceTempView(name)
 
 
-#: Table-handle cache: a DataFrame is an immutable plan handle, and a
-#: metastore-backed catalog resolves a table name to a cached relation
-#: (Spark's own SessionCatalog caches HMS relation metadata the same
-#: way).  Re-running `spark.read.parquet` per query re-reads the footer
-#: and costs ~50-100 ms of py4j/schema work per table — pure plan-
-#: construction overhead.  Keyed by applicationId so a restarted
-#: session never sees stale handles.
-#:
-#: STALENESS CONTRACT: the cached handle captures the parquet file
-#: index at first load, so REWRITING a fixture path mid-application
-#: yields stale reads until ``invalidate_table_cache()`` is called
-#: (Spark's own ``REFRESH TABLE`` has the identical contract).  Tests
-#: that rewrite fixtures must invalidate explicitly.
-_HANDLE_CACHE: dict = {}
+#: applicationId → the entries ``memo`` keeps for it (one application).
+_MEMO: dict[str, dict] = {}
 
 
-def invalidate_table_cache(sf_dir: str | None = None, name: str | None = None) -> None:
-    """Drop cached table handles (the ``REFRESH TABLE`` analog) — all of
-    them, or only those matching ``sf_dir`` and/or ``name``.  Also clears
-    the derived caches keyed off these handles' plans: the registry's
-    prepared-plan cache and pipeline.similarity's centroid cache."""
-    for key in list(_HANDLE_CACHE):
-        _, k_dir, k_name = key
-        if (sf_dir is None or k_dir == sf_dir) and (name is None or k_name == name):
-            del _HANDLE_CACHE[key]
-    try:
-        from pigout_spark.queries import registry
+def memo(spark: SparkSession, key: tuple, build: Callable[[], object]) -> object:
+    """Return the value stored under ``key`` for this application, or call
+    ``build()`` once and store its result.  Table handles, built query
+    plans and k-means codebooks are kept here: resolving a table re-reads
+    its parquet footer (~50-100 ms of py4j and schema work), and a
+    registered query or codebook is a pure function of its inputs.
 
-        for key in list(registry._PLAN_CACHE):
-            if sf_dir is None or key[1] == sf_dir:
-                del registry._PLAN_CACHE[key]
-    except Exception:
-        pass
-    try:
-        from pigout_spark.pipeline import similarity
+    Entries live as long as one application: the first call from a new
+    ``applicationId`` drops every entry of the previous one.
 
-        similarity._CENTROID_CACHE.clear()
-    except Exception:
-        pass
+    STALENESS CONTRACT: a kept table handle captures the parquet file
+    index at first load, and plans and codebooks built from it inherit
+    that, so REWRITING a fixture path mid-application yields stale reads
+    until ``invalidate_table_cache()`` is called (Spark's own ``REFRESH
+    TABLE`` has the identical contract).  Tests that rewrite fixtures must
+    invalidate explicitly."""
+    app = spark.sparkContext.applicationId
+    if app not in _MEMO:
+        _MEMO.clear()
+        _MEMO[app] = {}
+    entries = _MEMO[app]
+    if key not in entries:
+        entries[key] = build()
+    return entries[key]
+
+
+def invalidate_table_cache() -> None:
+    """Drop every memoized table handle, plan and codebook (the
+    ``REFRESH TABLE`` analog)."""
+    _MEMO.clear()
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Fixture loader used throughout queries and tests (cached)."""
-    try:
-        key = (spark.sparkContext.applicationId, sf_dir, name)
-    except Exception:
-        key = None
-    if key is not None and key in _HANDLE_CACHE:
-        return _HANDLE_CACHE[key]
-    df = Catalog().register_fixture_dir(sf_dir).load(spark, name)
-    if key is not None:
-        _HANDLE_CACHE[key] = df
-    return df
+    """Fixture loader used throughout queries and tests (memoized)."""
+    return memo(
+        spark,
+        ("table", sf_dir, name),
+        lambda: Catalog().register_fixture_dir(sf_dir).load(spark, name),
+    )

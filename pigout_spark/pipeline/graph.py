@@ -584,13 +584,12 @@ def label_propagation(
     Output: (node, label) — nodes sharing a label after ``rounds``
     rounds are one community.
 
-    100 TB: per round ONE message join (labels onto the symmetrized
-    src-partitioned edge list — co-partitioned after the first
-    round), one (node, label) count aggregation (map-side combined,
-    bounded by the edge count), one per-node argmax as a row_number
-    window on the node partitioning (label-cardinality-sized input,
-    type-generic — node ids may be strings), and one carry-over left
-    join against the node relation.  Labels are checkpointed every
+    100 TB: per round ONE message join (labels onto the symmetrized,
+    checkpointed edge list), one (node, label) count aggregation
+    (map-side combined, bounded by the edge count), one per-node argmax
+    as a row_number window on the node partitioning
+    (label-cardinality-sized input, type-generic — node ids may be
+    strings), and one carry-over left join against the node relation.  Labels are checkpointed every
     round.
     """
     from pyspark.sql import Window
@@ -601,7 +600,6 @@ def label_propagation(
         base.select(s.alias("__u"), d.alias("__v"))
         .unionByName(base.select(d.alias("__u"), s.alias("__v")))
         .distinct()
-        .repartition("__u")
     )
     nodes = checkpoint(e.select(F.col("__u").alias("node")).distinct())
 
@@ -739,18 +737,15 @@ def hits(
     node of the graph is listed.
 
     100 TB: per round two key-equi join+aggregate passes over the
-    twice-shuffled-and-checkpointed edge list (one exchange each — the
-    src→dst transpose and back, inherent to HITS) and two 1-row
+    checkpointed edge list (one exchange each — the src→dst transpose
+    and back, inherent to HITS) and two 1-row
     broadcast scalars; scores are node-sized relations checkpointed
     every round.  No windows, no collect beyond the scalar
     frames Spark broadcasts itself.
     """
     s, d = F.col(src), F.col(dst)
     base = edges.filter(s.isNotNull() & d.isNotNull())
-    e = checkpoint(
-        base.select(s.alias("__s"), d.alias("__d"))
-        .repartition("__s")
-    )
+    e = checkpoint(base.select(s.alias("__s"), d.alias("__d")))
     nodes = checkpoint(
         e.select(F.col("__s").alias("node"))
         .unionByName(e.select(F.col("__d").alias("node")))
@@ -888,15 +883,14 @@ def bfs_distances(
     )
     if not directed:
         e = _with_reversed(e)
-    # No explicit partition count, so adaptive execution may coalesce
-    # this exchange and the checkpoint then declares no partitioning:
-    # the round joins exchange the edges again, once per plan, as the
-    # repeated round subtrees reuse that exchange.  repartition(n,
-    # "__s") would keep hashpartitioning(__s, n), but the edge copies in
-    # the repeated subtrees would stop comparing equal, so no exchange
-    # above them is reused: x_bfs_hops went from 14 to 27 Spark jobs at
-    # sf0.1.
-    e = checkpoint(e.distinct().repartition("__s"))
+    # The edges are not repartitioned before the checkpoint.  A
+    # count-less repartition("__s") is coalesced by adaptive execution,
+    # so the round joins exchange the edges anyway (x_bfs_hops: 14 Spark
+    # jobs with it, 13 without, at sf0.1).  repartition(n, "__s") would
+    # keep hashpartitioning(__s, n), but the edge copies in the repeated
+    # round subtrees would stop comparing equal, so no exchange above
+    # them is reused: x_bfs_hops went from 14 to 27 jobs.
+    e = checkpoint(e.distinct())
     hops = itertools.count(1)  # fixpoint calls step once per round
 
     def step(state: tuple[DataFrame, DataFrame]) -> tuple[DataFrame, DataFrame]:

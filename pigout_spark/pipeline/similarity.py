@@ -23,6 +23,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pigout_spark.catalog import memo
+
 
 def as_double(vec: Column | str) -> Column:
     c = F.col(vec) if isinstance(vec, str) else vec
@@ -110,18 +112,6 @@ def lsh_bucket(vec_col: Column | str, planes: list[list[float]]) -> Column:
     return code.cast("int")
 
 
-#: Codebook cache keyed by (applicationId, corpus plan semanticHash,
-#: params) — a production IVF loads its k-means codebook once per job,
-#: not once per query plan.  Bounded: entries are n_centroids rows each.
-#:
-#: STALENESS CONTRACT: semanticHash hashes the logical plan, not the
-#: data — rewriting the source files mid-application returns stale
-#: centroids (silently changing cell assignments).  Call
-#: ``catalog.invalidate_table_cache()`` after rewriting fixtures; the
-#: applicationId key component already isolates restarted sessions.
-_CENTROID_CACHE: dict = {}
-
-
 def _collect_centroids(
     emb: DataFrame, n_centroids: int, id_col: str, vec_col: str
 ) -> list[tuple[int, list[float], float]]:
@@ -190,23 +180,19 @@ def kmeans_centroids(
     Each iteration is one narrow assignment map + one (cell, dim)
     groupBy collecting n_centroids·dim rows — at 100 TB, train on a
     deterministic sample (e.g. ``emb.filter(id % s == 0)``) exactly as
-    FAISS does; the dataflow is unchanged.  Results are cached per
-    (applicationId, plan, params) — see _CENTROID_CACHE contract."""
-    try:
-        key = (
-            emb.sparkSession.sparkContext.applicationId,
-            emb.semanticHash(),
-            n_centroids,
-            n_iters,
-            id_col,
-            vec_col,
-            metric,
-        )
-    except Exception:
-        key = None
-    if key is not None and key in _CENTROID_CACHE:
-        return _CENTROID_CACHE[key]
+    FAISS does; the dataflow is unchanged.  A production IVF loads its
+    codebook once per job, not once per query plan, so the result is
+    memoized per application (``catalog.memo``) under the corpus plan's
+    ``semanticHash`` — the plan, not the data — and the params."""
+    params = (n_centroids, n_iters, id_col, vec_col, metric)
+    return memo(
+        emb.sparkSession,
+        ("centroids", emb.semanticHash(), *params),
+        lambda: _train_centroids(emb, *params),
+    )
 
+
+def _train_centroids(emb, n_centroids, n_iters, id_col, vec_col, metric):
     cents = _collect_centroids(emb, n_centroids, id_col, vec_col)
     base = emb.select(
         F.col(id_col), as_double(vec_col).alias("v")
@@ -242,8 +228,6 @@ def kmeans_centroids(
             ]
             new_cents.append((c_id, ncv, _norm_py(ncv)))
         cents = new_cents
-    if key is not None:
-        _CENTROID_CACHE[key] = cents
     return cents
 
 

@@ -7,6 +7,7 @@ amplifying joins against AQE's input-byte-based coalescing.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -92,7 +93,7 @@ def fan_out(df: DataFrame, factor: int = 1) -> DataFrame:
     max_pb = _parse_bytes(conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
     try:
         est_bytes = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
+    except Py4JError:
         return df
     est_tasks = max(1, -(-est_bytes // max_pb))  # ceil
     if est_tasks >= n:

@@ -6,25 +6,17 @@ an equivalent ANSI-SQL oracle string for DuckDB.  The driver hash-compares
 them at sf0.01 — that is the correctness gate.  Entries without SQL get a
 weaker rows-only check (genuinely non-SQL-expressible ops only).
 
-Driver cap: round 1 showed the driver records at most 50 queries per
-round (CORRECTNESS_r01.json stopped at exactly the first 50 registry
-entries, dropping q27–q32).  The driver-facing set is therefore capped
-at 50; closely-related queries were folded together (IN→q02, datetime
-arith→q19, string funcs 2→q18, token counts + rolling hash→text_quality)
-and subsumed histogram stages (sim_ann_buckets, sim_ivf_cells — their
-logic is embedded verbatim in the *_topk oracles' CTEs) moved to
-EXTRA_REGISTRY, still verified by tools/selfcheck.py and pytest.
+Every query lives in the one ``QUERIES`` dict (``@query``, registry.py).
+The driver records only the first 50 queries it is handed
+(CORRECTNESS_r01.json stopped at exactly the first 50 registry entries),
+so ``REGISTRY`` is the explicit ``DRIVER_WINDOW``, in window order, and
+``EXTRA_REGISTRY`` is every other query, in registration order.  Both
+are views of ``QUERIES``; tools/selfcheck.py and pytest check all of it.
 """
 
-from pigout_spark.queries.registry import (  # noqa: F401
-    DRIVER_QUERY_CAP,
-    EXTRA_REGISTRY,
-    REGISTRY,
-    Q,
-    query,
-)
+from pigout_spark.queries.registry import QUERIES, Q, query  # noqa: F401
 
-# Importing the modules populates REGISTRY via the @query decorator.
+# Importing the modules populates QUERIES via the @query decorator.
 from pigout_spark.queries import behavioral_q  # noqa: F401,E402
 from pigout_spark.queries import core  # noqa: F401,E402
 from pigout_spark.queries import functions_q  # noqa: F401,E402
@@ -32,13 +24,12 @@ from pigout_spark.queries import pipeline_q  # noqa: F401,E402
 from pigout_spark.queries import streaming_q  # noqa: F401,E402
 from pigout_spark.queries import udf_q  # noqa: F401,E402
 
-# The driver records only the first DRIVER_QUERY_CAP queries it is
-# handed, so the driver-facing set is this explicit list, in order,
-# with the flagship first.  Every other registered query moves to
-# EXTRA_REGISTRY and keeps its local oracle (tools/selfcheck.py,
-# tests/test_queries.py).  x_sample_bernoulli and x_bpe_encode_trained
-# are rows-only by nature and stay extras; their deterministic twins
-# carry the hash checks.
+#: Hard driver cap observed in round 1 — len(queries()) must stay ≤ this.
+DRIVER_QUERY_CAP = 50
+
+# The driver-facing set, in order, with the flagship first.
+# x_sample_bernoulli and x_bpe_encode_trained are rows-only by nature and
+# stay extras; their deterministic twins carry the hash checks.
 DRIVER_WINDOW = [
     "q01_group_agg",  # flagship
     "x_token_entropy",
@@ -91,26 +82,9 @@ DRIVER_WINDOW = [
     "x_kmv_sketch",
     "x_wav_meta",
 ]
-assert len(DRIVER_WINDOW) == len(set(DRIVER_WINDOW)) == 50
-_window = set(DRIVER_WINDOW)
-for _k in list(REGISTRY):
-    if _k not in _window:
-        EXTRA_REGISTRY[_k] = REGISTRY.pop(_k)
-for _k in list(EXTRA_REGISTRY):
-    if _k in _window:
-        REGISTRY[_k] = EXTRA_REGISTRY.pop(_k)
-_missing = _window - set(REGISTRY)
-assert not _missing, f"window names not registered anywhere: {_missing}"
-
-# Window order == list order.
-_ordered = {k: REGISTRY[k] for k in DRIVER_WINDOW}
-REGISTRY.clear()
-REGISTRY.update(_ordered)
-
-assert len(REGISTRY) <= DRIVER_QUERY_CAP, (
-    f"driver-facing registry has {len(REGISTRY)} entries — the driver "
-    f"records only the first {DRIVER_QUERY_CAP}; mark overflow extra=True"
-)
+assert len(DRIVER_WINDOW) == len(set(DRIVER_WINDOW)) == DRIVER_QUERY_CAP
+REGISTRY = {name: QUERIES[name] for name in DRIVER_WINDOW}
+EXTRA_REGISTRY = {k: v for k, v in QUERIES.items() if k not in REGISTRY}
 
 
 def queries():

@@ -136,7 +136,6 @@ def x_funnel(spark, sf_dir):
     FROM steps s JOIN pk ON pk.funnel_stage >= s.step
     GROUP BY s.step
     """,
-    extra=True,  # window full at 50; selfcheck + pytest verified
 )
 def x_funnel_counts(spark, sf_dir):
     """The k-row funnel summary (keys reaching each step) — computed
@@ -162,7 +161,6 @@ def x_funnel_counts(spark, sf_dir):
     SELECT cohort, period_offset, CAST(COUNT(*) AS BIGINT) AS n_keys
     FROM d GROUP BY cohort, period_offset
     """,
-    extra=True,  # window full at 50; selfcheck + pytest verified
 )
 def x_cohort_retention(spark, sf_dir):
     """Daily cohort retention triangle: cohort = day of a user's first
@@ -183,7 +181,6 @@ def x_cohort_retention(spark, sf_dir):
     SELECT bin, CAST(COUNT(*) AS BIGINT) AS cnt, 0.0 + bin * 5.0 AS bin_lo
     FROM v GROUP BY bin
     """,
-    extra=True,  # window full at 50; selfcheck + pytest verified
 )
 def x_histogram(spark, sf_dir):
     """Equi-width 20-bin histogram of event values over [0, 100) with
@@ -208,7 +205,6 @@ def x_histogram(spark, sf_dir):
            {SQL_DSUM("CASE WHEN event_type = 'purchase' THEN value END", "purchase_s")}
     FROM events GROUP BY user_id
     """,
-    extra=True,  # window full at 50; selfcheck + pytest verified
 )
 def x_pivot(spark, sf_dir):
     """PIVOT on event_type (explicit value list — no discovery pass):
@@ -259,7 +255,6 @@ def x_pivot(spark, sf_dir):
     SELECT path, CAST(COUNT(*) AS BIGINT) AS n_sessions
     FROM paths GROUP BY path
     """,
-    extra=True,  # window full at 50; selfcheck + pytest verified
 )
 def x_session_paths(spark, sf_dir):
     """Top navigation paths per 30-min session (event_id tiebreak for
@@ -293,7 +288,6 @@ def x_session_paths(spark, sf_dir):
     WHERE gap_start IS NOT NULL
       AND epoch(gap_end) - epoch(gap_start) > 21600
     """,
-    extra=True,  # window full at 50; selfcheck + pytest verified
 )
 def x_gaps(spark, sf_dir):
     """Silence detection: per-user inter-event gaps > 6 h — one lag
@@ -342,7 +336,6 @@ _ATTR_J = """
       PARTITION BY conv_id ORDER BY tts DESC, touch_id DESC
     ) = 1
     """,
-    extra=True,  # r6 addition; window full — selfcheck + pytest verified
 )
 def x_attribution_last(spark, sf_dir):
     """Last-touch attribution with a 24h lookback: each purchase
@@ -364,7 +357,6 @@ def x_attribution_last(spark, sf_dir):
            1.0 / (COUNT(*) OVER (PARTITION BY conv_id)) AS credit
     FROM j
     """,
-    extra=True,  # r6 addition; window full — selfcheck + pytest verified
 )
 def x_attribution_linear(spark, sf_dir):
     """Linear (equal-split) attribution with a 24h lookback: per-
@@ -415,7 +407,6 @@ _RFM_R, _RFM_F, _RFM_M = [43200.0, 259200.0], [8.0, 20.0], [500.0, 2000.0]
                 + {_rfm_score_sql("monetary", _RFM_M)} AS INTEGER) AS segment
     FROM rec
     """,
-    extra=True,  # r6 addition; window full — selfcheck + pytest verified
 )
 def x_rfm(spark, sf_dir):
     """RFM segmentation with explicit cut points (12h/3d recency,
@@ -455,7 +446,6 @@ def _funnel_latency_sql() -> str:
 @query(
     "x_funnel_latency",
     _funnel_latency_sql(),
-    extra=True,  # r6 addition; window full — selfcheck + pytest verified
 )
 def x_funnel_latency(spark, sf_dir):
     """Conversion-latency percentiles for completed view→click→purchase
@@ -496,7 +486,6 @@ def x_funnel_latency(spark, sf_dir):
     WHERE pstep IS NOT NULL AND epoch(ts) - epoch(pts) <= 1800
     GROUP BY pstep, event_type
     """,
-    extra=True,  # r7 addition; window settled for r7 — rotate in r8
 )
 def x_transitions(spark, sf_dir):
     """Markov transition matrix of the event stream, session-scoped at
@@ -543,7 +532,6 @@ def x_transitions(spark, sf_dir):
     FROM dev JOIN mad USING (user_id)
     WHERE dev.deviation > 3.0 * mad.mad
     """,
-    extra=True,  # r7 addition; window settled for r7 — rotate in r8
 )
 def x_mad_outliers(spark, sf_dir):
     """Per-user MAD outliers over event values (|v − median| > 3·MAD),
@@ -579,7 +567,6 @@ def x_mad_outliers(spark, sf_dir):
            lead(ts) OVER w2 IS NULL AS is_current
     FROM st WINDOW w2 AS (PARTITION BY user_id ORDER BY ts, event_id)
     """,
-    extra=True,  # r7 addition; window settled for r7 — rotate in r8
 )
 def x_scd2(spark, sf_dir):
     """SCD2 history of each user's event-type state: consecutive
@@ -633,7 +620,6 @@ def x_scd2(spark, sf_dir):
     FROM g WHERE s1 || '>' || s2 || '>' || s3 IS NOT NULL
     GROUP BY 1
     """,
-    extra=True,  # r7 addition; window settled for r7 — rotate in r8
 )
 def x_session_ngrams(spark, sf_dir):
     """Frequent 3-step flows inside 30-min sessions: contiguous
@@ -671,7 +657,6 @@ def x_session_ngrams(spark, sf_dir):
     JOIN cnt ca ON ca.it = pairs.item_a
     JOIN cnt cb ON cb.it = pairs.item_b, nb
     """,
-    extra=True,  # r7 addition; window settled for r7 — rotate in r8
 )
 def x_basket_rules(spark, sf_dir):
     """Market-basket association rules over order baskets: item pairs
@@ -750,7 +735,6 @@ def x_basket_rules(spark, sf_dir):
            ROUND((ma_t - ma_c) / sqrt(va_t / n_t + va_c / n_c), 6) AS z_cuped6
     FROM i
     """,
-    extra=True,  # r7 addition; window settled for r7 — rotate in r8
 )
 def x_cuped_lift(spark, sf_dir):
     """CUPED variance-reduced A/B readout over event values with a
@@ -808,7 +792,6 @@ def x_cuped_lift(spark, sf_dir):
              / (CAST(n_t + n_c AS DOUBLE) * 0.5)) > 3.841 AS srm_suspected
     FROM s
     """,
-    extra=True,  # r7 addition; window settled for r7 — rotate in r8
 )
 def x_srm_check(spark, sf_dir):
     """Sample-ratio-mismatch gate on the user-level assignment (seed 7,
@@ -1750,7 +1733,6 @@ def x_odds_ratio(spark, sf_dir):
 # --- r9 additions: nonparametric statistics family (r10 rotation queue) ---
 @query(
     "x_spearman",
-    extra=True,  # r9 addition — r10 rotation candidate
     sql="""
     WITH d AS (
       SELECT l_returnflag AS k, l_quantity AS x, l_extendedprice AS y
@@ -1796,7 +1778,6 @@ def x_spearman(spark, sf_dir):
 
 @query(
     "x_mann_whitney",
-    extra=True,  # r9 addition — r10 rotation candidate
     sql="""
     WITH d AS (
       SELECT event_type = 'purchase' AS g, value AS v
@@ -1864,7 +1845,6 @@ def x_mann_whitney(spark, sf_dir):
 
 @query(
     "x_bh_fdr",
-    extra=True,  # r9 addition — r10 rotation candidate
     sql="""
     WITH binned AS (
       SELECT source,
@@ -1987,7 +1967,6 @@ def x_bh_fdr(spark, sf_dir):
 
 @query(
     "x_kruskal",
-    extra=True,  # r9 addition — r10 rotation candidate
     sql="""
     WITH d AS (
       SELECT event_type AS g, value AS v
@@ -2036,7 +2015,6 @@ def x_kruskal(spark, sf_dir):
 
 @query(
     "x_brown_forsythe",
-    extra=True,  # r9 addition — r10 rotation candidate
     sql="""
     WITH d AS (
       SELECT event_type AS g, value AS v
@@ -2089,7 +2067,6 @@ def x_brown_forsythe(spark, sf_dir):
 
 @query(
     "x_fisher_exact",
-    extra=True,  # r9 addition — r10 rotation candidate
     sql="""
     WITH d AS (
       SELECT value > 50 AS e_, event_type = 'purchase' AS o_
@@ -2172,7 +2149,6 @@ def x_fisher_exact(spark, sf_dir):
 
 @query(
     "x_grouped_mw_fdr",
-    extra=True,
     sql="""
     WITH d AS (
       SELECT source, lang = 'en' AS g, CAST(n_chars AS DOUBLE) AS v
@@ -2282,7 +2258,6 @@ def x_grouped_mw_fdr(spark, sf_dir):
 
 @query(
     "x_grouped_kruskal",
-    extra=True,  # r10 addition — r11 rotation candidate
     sql="""
     WITH d AS (
       SELECT source, lang AS g, CAST(n_chars AS DOUBLE) AS v
@@ -2349,7 +2324,6 @@ def x_grouped_kruskal(spark, sf_dir):
 
 @query(
     "x_grouped_bf",
-    extra=True,  # r10 addition — r11 rotation candidate
     sql="""
     WITH d AS (
       SELECT source, lang = 'en' AS g, CAST(n_chars AS DOUBLE) AS v
@@ -2416,7 +2390,6 @@ def x_grouped_bf(spark, sf_dir):
 
 @query(
     "x_grouped_fisher",
-    extra=True,  # r10 addition — r11 rotation candidate
     sql="""
     WITH d AS (
       SELECT source, lang = 'en' AS e_, n_chars > 300 AS o_
@@ -2506,7 +2479,6 @@ def x_grouped_fisher(spark, sf_dir):
 
 @query(
     "x_anova_f",
-    extra=True,  # r11 addition — r12 rotation candidate
     sql="""
     WITH d AS (
       SELECT source, lang AS g, CAST(n_chars AS DOUBLE) AS v
@@ -2560,7 +2532,6 @@ def x_anova_f(spark, sf_dir):
 
 @query(
     "x_welch_ttest",
-    extra=True,  # r11 addition — r12 rotation candidate
     sql="""
     WITH d AS (
       SELECT source, lang = 'en' AS g, CAST(n_chars AS DOUBLE) AS v
@@ -2634,7 +2605,6 @@ def x_welch_ttest(spark, sf_dir):
 
 @query(
     "x_power_mde",
-    extra=True,  # r14 addition — r15 rotation candidate
     sql="""
     WITH d AS (
       SELECT source, lang = 'en' AS g, CAST(n_chars AS DOUBLE) AS v
@@ -2708,7 +2678,6 @@ def x_power_mde(spark, sf_dir):
 
 @query(
     "x_two_prop_z",
-    extra=True,  # r11 addition — r12 rotation candidate
     sql="""
     WITH d AS (
       SELECT source, n_chars > 300 AS g,
@@ -2786,7 +2755,6 @@ def x_two_prop_z(spark, sf_dir):
 
 @query(
     "x_theil_sen",
-    extra=True,  # r11 addition — r12 rotation candidate
     sql="""
     WITH d AS (
       SELECT o_orderpriority AS rf,
@@ -2862,7 +2830,6 @@ def x_theil_sen(spark, sf_dir):
 
 @query(
     "x_nelson_aalen",
-    extra=True,  # r11 addition — r12 rotation candidate
     sql="""
     WITH u AS (
       SELECT user_id,
@@ -2919,7 +2886,6 @@ def x_nelson_aalen(spark, sf_dir):
 
 @query(
     "x_mantel_haenszel",
-    extra=True,  # r11 addition — r12 rotation candidate
     sql="""
     WITH d AS (
       SELECT source AS s, n_chars > 300 AS e, lang = 'en' AS o
@@ -3033,7 +2999,6 @@ def _boot_sql(keys_sql: str, replicates: int = 40, seed: int = 7) -> str:
 
 @query(
     "x_boot_ci",
-    extra=True,  # r12 addition — r13 rotation candidate
     sql=_boot_sql("o_orderpriority"),
 )
 def x_boot_ci(spark, sf_dir):
@@ -3063,7 +3028,6 @@ def x_boot_ci(spark, sf_dir):
 
 @query(
     "x_did",
-    extra=True,  # r12 addition — r13 rotation candidate
     sql="""
     WITH d AS (
       SELECT event_type,
@@ -3134,7 +3098,6 @@ def x_did(spark, sf_dir):
 
 @query(
     "x_trimmed_mean",
-    extra=True,  # r12 addition — r13 rotation candidate
     sql="""
     WITH d AS (
       SELECT l_returnflag AS k,
@@ -3184,7 +3147,6 @@ def x_trimmed_mean(spark, sf_dir):
 
 @query(
     "x_conformal",
-    extra=True,  # r12 addition — r13 rotation candidate
     sql="""
     WITH d AS (
       SELECT source AS k, CAST(n_chars AS DOUBLE) AS s
@@ -3221,7 +3183,6 @@ def x_conformal(spark, sf_dir):
 
 @query(
     "x_psm",
-    extra=True,  # r12 addition — r13 rotation candidate
     sql="""
     WITH d AS (
       SELECT source, doc_id AS id, CAST(n_chars AS DOUBLE) AS s,
@@ -3352,7 +3313,6 @@ def _jk_sql(buckets: int = 32, seed: int = 5) -> str:
 
 @query(
     "x_jackknife",
-    extra=True,  # r12 addition — r13 rotation candidate
     sql=_jk_sql(),
 )
 def x_jackknife(spark, sf_dir):
@@ -3430,7 +3390,6 @@ def _eb_sql(delta: float = 0.05, value_range: float = 1_000_000.0) -> str:
 
 @query(
     "x_eb_ci",
-    extra=True,  # r12 addition — r13 rotation candidate
     sql=_eb_sql(),
 )
 def x_eb_ci(spark, sf_dir):
@@ -3471,7 +3430,6 @@ _CA_P = """ROUND(LEAST(1.0, 2.0 * (exp(-abs(z6) * abs(z6) / 2.0)
 
 @query(
     "x_cochran",
-    extra=True,  # r12 addition — r13 rotation candidate
     sql=f"""
     WITH d AS (
       SELECT o_orderstatus AS k,
@@ -3535,7 +3493,6 @@ def x_cochran(spark, sf_dir):
 
 @query(
     "x_by_fdr",
-    extra=True,  # r12 addition — r13 rotation candidate
     sql="""
     WITH p AS (
       SELECT source,
@@ -3657,7 +3614,6 @@ def x_by_fdr(spark, sf_dir):
            END AS p_av6
     FROM i
     """,
-    extra=True,  # r13 addition — r14 rotation candidate
 )
 def x_msprt(spark, sf_dir):
     """Always-valid sequential A/B p-value (mSPRT, τ² = 250,000 cents²
@@ -3694,7 +3650,6 @@ def x_msprt(spark, sf_dir):
 
 @query(
     "x_mann_kendall",
-    extra=True,  # r14 addition — r15 rotation candidate
     sql="""
     WITH d AS (
       SELECT o_orderpriority AS rf,
@@ -3959,7 +3914,6 @@ def x_mann_kendall(spark, sf_dir):
       END AS p6
     FROM res
 """,
-    extra=True,  # r14 addition — r15 rotation candidate
 )
 def x_cox_ph(spark, sf_dir):
     """Cox proportional-hazards log hazard ratio between even/odd
@@ -4052,7 +4006,6 @@ def x_cox_ph(spark, sf_dir):
                   6) END AS z6
     FROM c
     """,
-    extra=True,  # r14 addition — r15 rotation candidate
 )
 def x_logrank_strat(spark, sf_dir):
     """Stratified (Mantel-Cox) log-rank between even/odd user cohorts

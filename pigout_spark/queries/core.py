@@ -238,7 +238,6 @@ def q03_join_agg(spark, sf_dir):
     LEFT JOIN orders o ON c.c_custkey = o.o_custkey
     GROUP BY c.c_custkey
     """,
-    extra=True,  # late-r5 rotation: settled driver-green row parked as local extra
 )
 def q04_outer_join(spark, sf_dir):
     """Pig: JOIN customer BY c_custkey LEFT OUTER, orders BY o_custkey;
@@ -342,7 +341,6 @@ def q06_semi_anti(spark, sf_dir):
     WHERE s.s_nationkey = c.c_nationkey AND s.s_acctbal > c.c_acctbal
     GROUP BY s.s_nationkey
     """,
-    extra=True,  # late-r5 rotation: settled driver-green row parked as local extra
 )
 def q07_cross_theta(spark, sf_dir):
     """Pig idiom: CROSS supplier, customer; FILTER BY theta predicate.
@@ -368,7 +366,6 @@ def q07_cross_theta(spark, sf_dir):
       SELECT s_nationkey AS nk FROM supplier
     )
     """,
-    extra=True,  # r5 rotation: local oracle retained; operator family stays driver-covered
 )
 def q08_union_distinct(spark, sf_dir):
     """Pig: U = UNION A, B; D = DISTINCT U.  UNION keeps duplicates
@@ -387,7 +384,6 @@ def q08_union_distinct(spark, sf_dir):
     ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber
     LIMIT 15
     """,
-    extra=True,  # r5 late rotation; ORDER/LIMIT stays driver-covered via x_rank_by_scalable/q15; local oracle kept
 )
 def q09_order_limit(spark, sf_dir):
     """Pig: ORDER A BY price DESC; LIMIT 15.  Catalyst plans
@@ -405,8 +401,6 @@ def q09_order_limit(spark, sf_dir):
 # --- §2.5 RANK [DENSE] ---
 @query(
     "q10_rank",
-    extra=True,  # r4 rotation: RANK is driver-covered by the scale-safe
-    # x_rank_by_scalable / x_row_rank_two_pass variants
     sql="""
     SELECT c_custkey, c_acctbal,
            RANK() OVER (ORDER BY c_acctbal DESC) AS rnk,
@@ -459,7 +453,6 @@ def q11_cube(spark, sf_dir):
     FROM orders
     GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
     """,
-    extra=True,  # r5 rotation: local oracle retained; operator family stays driver-covered
 )
 def q12_rollup(spark, sf_dir):
     """Pig: CUBE A BY ROLLUP(status, priority) — hierarchical rollup."""
@@ -506,7 +499,6 @@ def q13_flatten_tokenize(spark, sf_dir):
     FULL JOIN (SELECT s_nationkey AS nk, COUNT(*) AS n FROM supplier GROUP BY 1) ss
     ON cc.nk = ss.nk
     """,
-    extra=True,  # r5 rotation: local oracle retained; operator family stays driver-covered
 )
 def q14_cogroup(spark, sf_dir):
     """Pig: COGROUP customer BY c_nationkey, supplier BY s_nationkey;
@@ -564,7 +556,6 @@ def q15_nested_topk(spark, sf_dir):
       SELECT DISTINCT l_partkey FROM lineitem WHERE l_quantity >= 45
     )
     """,
-    extra=True,  # r5 rotation: local oracle retained; operator family stays driver-covered
 )
 def q17_intersect_except(spark, sf_dir):
     """Set ops the reference lacks (Pig idiom: COGROUP + IsEmpty):
@@ -594,7 +585,6 @@ def q17_intersect_except(spark, sf_dir):
     SELECT 'mid' AS branch, COUNT(*) AS n, {SQL_DSUM("l_quantity", "sum_qty")}
     FROM lineitem WHERE NOT (l_quantity < 10) AND NOT (l_quantity >= 40)
     """,
-    extra=True,  # r5 rotation: local oracle retained; operator family stays driver-covered
 )
 def q16_split(spark, sf_dir):
     """Pig: SPLIT lineitem INTO low IF q<10, high IF q>=40, mid OTHERWISE;

@@ -25,7 +25,6 @@ from pigout_spark.queries.registry import query, t
 # folded to stay inside the driver's 50-query window).
 @query(
     "q18_string_funcs",
-    extra=True,  # r4 rotation: strings stay driver-covered via q13
     sql="""
     SELECT c_custkey,
            substring(c_name, 1, 8) AS name_prefix,
@@ -101,7 +100,6 @@ def q18_string_funcs(spark, sf_dir):
     FROM events
     GROUP BY event_type, year(ts), month(ts)
     """,
-    extra=True,  # r5 rotation: local oracle retained; operator family stays driver-covered
 )
 def q19_date_funcs(spark, sf_dir):
     """Pig GetYear/GetMonth/GetHour + grouping + AddDuration('P3M') and
@@ -138,7 +136,6 @@ def q19_date_funcs(spark, sf_dir):
     FROM events
     GROUP BY event_type
     """,
-    extra=True,  # r5 rotation: local oracle retained; operator family stays driver-covered
 )
 def q20_json(spark, sf_dir):
     """events.props is a JSON string (FIXTURES.md).  Spark side uses the
@@ -161,7 +158,6 @@ def q20_json(spark, sf_dir):
                               / COUNT(c_acctbal) FROM customer)
     GROUP BY c_nationkey
     """,
-    extra=True,  # r5 rotation: local oracle retained; operator family stays driver-covered
 )
 def q21_scalar_projection(spark, sf_dir):
     """Pig scalar projection: `B = GROUP A ALL; FOREACH A ... B.avg` —
@@ -193,7 +189,6 @@ def q21_scalar_projection(spark, sf_dir):
     FROM lineitem
     GROUP BY l_returnflag
     """,
-    extra=True,
 )
 def q22_distinct_agg(spark, sf_dir):
     """Pig nested FOREACH { d = DISTINCT A.partkey; GENERATE COUNT(d) } →
@@ -228,7 +223,6 @@ def q22_distinct_agg(spark, sf_dir):
              / (sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy)) AS corr
     FROM s
     """,
-    extra=True,  # r5 rotation: local oracle retained; operator family stays driver-covered
 )
 def q33_corr_cov(spark, sf_dir):
     """Pig COR/COV builtins (quantity vs extendedprice per returnflag).
@@ -289,7 +283,6 @@ def q33_corr_cov(spark, sf_dir):
            COUNT(gap_s) AS n_gaps, CAST(SUM(gap_s) AS BIGINT) AS total_gap_s
     FROM seq GROUP BY user_id
     """,
-    extra=True,
 )
 def q23_window_lag(spark, sf_dir):
     """Beyond-reference (Pig has no lag/lead — SURVEY.md §2.5): per-user
@@ -331,7 +324,6 @@ def q23_window_lag(spark, sf_dir):
            p_size % 7 AS size_mod
     FROM part
     """,
-    extra=True,  # r5 rotation: local oracle retained; operator family stays driver-covered
 )
 def q34_math_funcs(spark, sf_dir):
     """Pig math builtins (SURVEY.md §2.7) — 1:1 to pyspark.sql.functions.
@@ -361,7 +353,6 @@ def q34_math_funcs(spark, sf_dir):
 # Folded into q18_string_funcs for the driver's 50-query window.
 @query(
     "q35_string_funcs2",
-    extra=True,
     sql="""
     SELECT c_custkey,
            trim('  ' || c_mktsegment || ' ') AS seg_trim,
@@ -486,7 +477,6 @@ def q39_string_funcs3(spark, sf_dir):
     FROM lineitem
     GROUP BY l_returnflag
     """,
-    extra=True,  # r5 rotation: local oracle retained; operator family stays driver-covered
 )
 def q36_percentiles(spark, sf_dir):
     """Exact per-group percentiles: continuous (interpolated between
@@ -508,7 +498,6 @@ def q36_percentiles(spark, sf_dir):
 # --- §2.7 map constructors & ops (TOMAP, KEYSET, VALUELIST, m#'key') ---
 @query(
     "q37_map_ops",
-    extra=True,  # r4 rotation: bag/map builtins stay driver-covered via q28
     sql="""
     SELECT c_custkey,
            'name,seg' AS keys_sorted,

@@ -256,7 +256,6 @@ def x_dedup_retain(spark, sf_dir):
     JOIN sizes sb ON sb.doc_id = doc_b
     WHERE i / (sa.sz + sb.sz - i) >= 0.5
     """,
-    extra=True,  # late-r5 rotation: settled driver-green row parked as local extra
 )
 def dedup_jaccard(spark, sf_dir):
     """Exact n-gram (token-set) Jaccard ≥ 0.5 via inverted-index
@@ -285,7 +284,7 @@ def _simhash_sql() -> str:
     )
 
 
-@query("dedup_simhash", _simhash_sql(), extra=True)  # r5 late rotation; simhash family driver-covered by dedup_simhash_pairs
+@query("dedup_simhash", _simhash_sql())
 def dedup_simhash(spark, sf_dir):
     """16-bit SimHash fingerprints (md5-derived per-token 32-bit hashes,
     ±1 bit votes).  Hamming-bucket search builds on this fingerprint."""
@@ -340,7 +339,6 @@ def dedup_simhash_pairs(spark, sf_dir):
                               ORDER BY cos DESC, neighbor_id) AS rn
     FROM scored QUALIFY rn <= 3
     """,
-    extra=True,  # r5 late rotation; similarity family driver-covered by sim_ivf/sim_quant
 )
 def sim_cosine_topk(spark, sf_dir):
     """Brute-force cosine top-3 for 10 query vectors: broadcast queries,
@@ -376,7 +374,7 @@ def _ann_sql() -> str:
 
 # Extra: the bucket histogram is subsumed by sim_ann_topk, whose oracle
 # embeds the same bucket-bit expression in its CTE (50-query window).
-@query("sim_ann_buckets", _ann_sql(), extra=True)
+@query("sim_ann_buckets", _ann_sql())
 def sim_ann_buckets(spark, sf_dir):
     """Hyperplane-LSH bucketing (the ANN scale path): 8 signed
     projections → 256 buckets; downstream candidate search joins on the
@@ -410,7 +408,7 @@ def _ann_topk_sql() -> str:
     )
 
 
-@query("sim_ann_topk", _ann_topk_sql(), extra=True)
+@query("sim_ann_topk", _ann_topk_sql())
 def sim_ann_topk(spark, sf_dir):
     """Approximate top-3 within the query's LSH bucket: bucket-equi-join
     candidates, exact cosine inside the bucket — the full ANN path with
@@ -435,7 +433,7 @@ def _emb_dedup_sql(threshold: float) -> str:
     )
 
 
-@query("dedup_embedding", _emb_dedup_sql(0.3), extra=True)  # r5 late rotation; embedding dedup stays oracle-checked locally
+@query("dedup_embedding", _emb_dedup_sql(0.3))
 def dedup_embedding(spark, sf_dir):
     """Embedding-cosine near-dup: same-LSH-bucket candidates, exact
     cosine ≥ 0.3 within the bucket — the no-cross-join dedup path for
@@ -512,7 +510,6 @@ _IVF_CELLS_SQL = _kmeans_cells_sql()
 @query(
     "sim_ivf_cells",
     _IVF_CELLS_SQL + "SELECT cell, COUNT(*) AS n FROM cells GROUP BY cell",
-    extra=True,
 )
 def sim_ivf_cells(spark, sf_dir):
     """IVF coarse quantization (the other ANN scale path besides LSH):
@@ -590,7 +587,6 @@ def sim_ivf_topk(spark, sf_dir):
                               ORDER BY cos DESC, neighbor_id) AS rn
     FROM ex2 QUALIFY rn <= 3
     """,
-    extra=True,  # 50-query window full; selfcheck + pytest verified
 )
 def x_sim_ivfq_topk(spark, sf_dir):
     """IVF × int8 composed (the FAISS IVF-PQ-style serving layout):
@@ -776,7 +772,6 @@ def x_emb_quantize(spark, sf_dir):
            CAST(length(text) AS BIGINT) AS n_chars
     FROM documents
     """,
-    extra=True,
 )
 def text_tokens(spark, sf_dir):
     """Token counting: whitespace tokens, alphabetic runs, BPE-ish
@@ -1069,7 +1064,6 @@ def text_langid(spark, sf_dir):
     SELECT source, COUNT(*) AS n_docs, COUNT(DISTINCT fp) AS n_unique_fps
     FROM f GROUP BY source
     """,
-    extra=True,  # r5 late rotation; text family driver-covered by text_quality/text_langid
 )
 def text_fingerprint(spark, sf_dir):
     """Document fingerprint (md5 of sorted distinct tokens) — order/
@@ -1094,7 +1088,6 @@ def text_fingerprint(spark, sf_dir):
            END AS rhash
     FROM documents
     """,
-    extra=True,
 )
 def text_rolling_hash(spark, sf_dir):
     """Per-document polynomial rolling hash (char-level content
@@ -1128,12 +1121,11 @@ def mm_binary_meta(spark, sf_dir):
     return extract_meta(d, "payload", "doc_id")
 
 
-# Local extra (driver window full): the frame-sampling plumbing —
 # The decode stage (probe-gated: real PIL when present, deterministic
 # fake otherwise) — the FAKE path is pure byte math, so it gets a full
 # SQL oracle keeping the mapInPandas schema/batch plumbing hash-checked.
 @query(
-    "x_mm_decode",
+    "x_mm_decode_fake",
     """
     WITH d AS (
       SELECT doc_id, octet_length(encode(text)) AS n FROM documents
@@ -1144,9 +1136,8 @@ def mm_binary_meta(spark, sf_dir):
            CASE WHEN n % 2 = 1 THEN 'L' ELSE 'RGB' END AS mode
     FROM d
     """,
-    extra=True,
 )
-def x_mm_decode(spark, sf_dir):
+def x_mm_decode_fake(spark, sf_dir):
     """decode_images over binary payloads (use='fake' pins the
     deterministic path regardless of whether pillow is present, so the
     oracle holds on any cluster; pipeline/multimodal.py)."""
@@ -1181,7 +1172,6 @@ def x_mm_decode(spark, sf_dir):
            END AS fk_grade6
     FROM c
     """,
-    extra=True,  # r14 addition — r15 rotation candidate
 )
 def x_readability(spark, sf_dir):
     """Flesch Reading Ease + Flesch-Kincaid grade per document
@@ -1231,7 +1221,6 @@ def x_readability(spark, sf_dir):
            CAST(s.s1 AS BIGINT) AS sum_ch1
     FROM d JOIN s USING (doc_id)
     """,
-    extra=True,  # r14 addition — takes a window slot in its build round
 )
 def x_wav_meta(spark, sf_dir):
     """Audio-column metadata: deterministic PCM WAV payloads
@@ -1277,7 +1266,6 @@ def x_wav_meta(spark, sf_dir):
                 AS BIGINT) AS fps_milli
     FROM documents
     """,
-    extra=True,  # r14 addition — r15 rotation candidate
 )
 def x_avi_meta(spark, sf_dir):
     """Video-container metadata: deterministic AVI payloads
@@ -1315,7 +1303,6 @@ def x_avi_meta(spark, sf_dir):
            CAST(octet_length(payload) AS BIGINT) AS byte_len
     FROM n
     """,
-    extra=True,
 )
 def x_mm_frames(spark, sf_dir):
     """sample_frames (video-pipeline shape: payload → every-2nd 64-byte
@@ -1401,7 +1388,6 @@ def x_token_budget(spark, sf_dir):
            ) AS BIGINT) AS shuffle_rank
     FROM documents
     """,
-    extra=True,  # 50-query window full; selfcheck + pytest verified
 )
 def x_shuffle_order(spark, sf_dir):
     """Deterministic training-set SHUFFLE: the md5(seed||id) permutation
@@ -1429,7 +1415,6 @@ def x_shuffle_order(spark, sf_dir):
     FROM b JOIN fr USING (tok) CROSS JOIN tot
     GROUP BY doc_id
     """,
-    extra=True,  # 50-query window full; selfcheck + pytest verified
 )
 def x_text_unigram(spark, sf_dir):
     """Unigram-LM quality score (the CCNet-style perplexity proxy):
@@ -1773,7 +1758,6 @@ _BPE_PAT = "chr(31)||m.l||chr(31)||chr(31)||m.r||chr(31)"
     FROM dw JOIN final USING (word)
     GROUP BY doc_id
     """,
-    extra=True,  # rotated into the driver window in r6 (__init__.py)
 )
 def x_bpe_encode(spark, sf_dir):
     """BPE encode under a fixed merge table, hash-checked end-to-end:
@@ -1791,7 +1775,7 @@ def x_bpe_encode(spark, sf_dir):
     )
 
 
-@query("x_bpe_encode_trained", extra=True)  # rows-only: the TRAIN loop
+@query("x_bpe_encode_trained")  # rows-only: the TRAIN loop
 # (8 corpus-trained merges feeding encode) is genuinely
 # non-SQL-expressible — iterative argmax-dependent rewriting; pytest
 # pins exact token output, and x_bpe_encode hash-checks the encode half.
@@ -1837,7 +1821,6 @@ _SPLIT_CASE = (
     )
     SELECT doc_id, {_SPLIT_CASE} AS split FROM u
     """,
-    extra=True,  # window full at 50; selfcheck + pytest verified
 )
 def x_split_corpus(spark, sf_dir):
     """Deterministic train/val/test split (80/10/10): md5-bucketed
@@ -1905,7 +1888,6 @@ _QUALITY_SQL =     f"""
 @query(
     "x_quality_filter",
     _QUALITY_SQL,
-    extra=True,  # rotated into the driver window in r6 (__init__.py)
 )
 def x_quality_filter(spark, sf_dir):
     """Composite C4/Gopher-style quality filter: every rule evaluated
@@ -1950,7 +1932,6 @@ def x_quality_filter(spark, sf_dir):
                 ELSE 0.0 END AS dup_line_frac
     FROM g
     """,
-    extra=True,  # window full at 50; selfcheck + pytest verified
 )
 def x_text_rep_narrow(spark, sf_dir):
     """Shuffle-free repetition signals (the streaming-ingest variant)
@@ -1990,7 +1971,6 @@ def x_text_rep_narrow(spark, sf_dir):
     SELECT doc_id, term, tf, df, ROUND(tfidf, 6) AS tfidf6, rk
     FROM s WHERE rk <= 5
     """,
-    extra=True,  # window full at 50; selfcheck + pytest verified
 )
 def x_tfidf_terms(spark, sf_dir):
     """Top-5 TF-IDF terms per doc (keyword extraction): (doc, term)
@@ -2035,7 +2015,6 @@ def x_tfidf_terms(spark, sf_dir):
     JOIN uni uy ON pc.y = uy.tok
     CROSS JOIN tot
     """,
-    extra=True,  # window full at 50; selfcheck + pytest verified
 )
 def x_pmi_pairs(spark, sf_dir):
     """Adjacent-pair PMI (collocation / embedding-prep statistic):
@@ -2067,7 +2046,6 @@ _SEM_T = 0.4
     )
     SELECT a, b, ROUND(cos, 6) AS cos6 FROM p WHERE cos >= {_SEM_T!r}
     """,
-    extra=True,  # window full at 50; selfcheck + pytest verified
 )
 def x_semantic_pairs(spark, sf_dir):
     """SemDeDup-style semantic near-dup pairs: k-means-cell-restricted
@@ -2104,7 +2082,6 @@ def x_semantic_pairs(spark, sf_dir):
     SELECT vec_id, label FROM embeddings
     WHERE vec_id NOT IN (SELECT vec_id FROM cl WHERE vec_id <> root)
     """,
-    extra=True,  # window full at 50; selfcheck + pytest verified
 )
 def x_semantic_retain(spark, sf_dir):
     """Full SemDeDup chain: cell-restricted pairs → connected
@@ -2132,7 +2109,6 @@ def x_semantic_retain(spark, sf_dir):
     )
     SELECT doc_id, source FROM r WHERE rk <= 7
     """,
-    extra=True,  # window full at 50; selfcheck + pytest verified
 )
 def x_sample_exact(spark, sf_dir):
     """Exact-count deterministic sample: exactly 7 docs per source by
@@ -2165,7 +2141,6 @@ def _cms_bucket_sql(tok_sql: str, row: int, width: int) -> str:
     SELECT row, bucket, CAST(COUNT(*) AS BIGINT) AS cnt
     FROM pairs GROUP BY row, bucket
     """,
-    extra=True,  # window full at 50; selfcheck + pytest verified
 )
 def x_cms_sketch(spark, sf_dir):
     """Count-Min sketch over the corpus token stream (4×1024,
@@ -2201,7 +2176,6 @@ def x_cms_sketch(spark, sf_dir):
     FROM probes LEFT JOIN sk USING (row, bucket)
     GROUP BY term
     """,
-    extra=True,  # window full at 50; selfcheck + pytest verified
 )
 def x_cms_estimate(spark, sf_dir):
     """CMS point queries for every distinct corpus token: min over the
@@ -2245,7 +2219,6 @@ _KMV_DOMAIN_SQL = "1152921504606846976.0"  # 2^60, exact double
       FROM events WHERE event_id IS NOT NULL
     ) ORDER BY h LIMIT 256
     """,
-    extra=True,  # rotated into the driver window in r6 (__init__.py)
 )
 def x_kmv_sketch(spark, sf_dir):
     """KMV distinct sketch of event ids (k=256): the k smallest
@@ -2274,7 +2247,6 @@ def x_kmv_sketch(spark, sf_dir):
            END AS est
     FROM a
     """,
-    extra=True,  # window full at 50; selfcheck + pytest verified
 )
 def x_kmv_estimate(spark, sf_dir):
     """KMV estimator (k−1)/U_k replayed bit-for-bit by the oracle —
@@ -2350,7 +2322,6 @@ def x_kmv_merge(spark, sf_dir):
            CAST(COUNT(DISTINCT n_chars) AS BIGINT)
     FROM documents
     """,
-    extra=True,  # window full at 50; selfcheck + pytest verified
 )
 def x_profile(spark, sf_dir):
     """Column profile (exact variant) over documents: null + distinct
@@ -2382,7 +2353,6 @@ _NORM_WS_RE2 = "[ \\t\\n\\r\\f\\v]+"
                  '{_NORM_WS_RE2}', ' ', 'g'), ' ')) AS BIGINT) AS norm_len
     FROM documents WHERE text IS NOT NULL
     """,
-    extra=True,  # window full at 50; selfcheck + pytest verified
 )
 def x_normalize(spark, sf_dir):
     """Unicode normalization (NFC + control/zero-width strip +
@@ -2445,7 +2415,6 @@ def _pagerank_sql(iters: int) -> str:
 @query(
     "x_pagerank",
     _pagerank_sql(3),
-    extra=True,  # window full at 50; selfcheck + pytest verified
 )
 def x_pagerank(spark, sf_dir):
     """PageRank, 3 rounds, over the supplier→part edge relation —
@@ -2498,7 +2467,6 @@ _KL_A_PRED = "source IN ('src0', 'src1', 'src2', 'src3', 'src4')"
            MAX(na) AS n_tokens_a, MAX(nb) AS n_tokens_b
     FROM terms
     """,
-    extra=True,  # window full at 50; selfcheck + pytest verified
 )
 def x_vocab_kl(spark, sf_dir):
     """Unigram-distribution KL divergence between a 5-source slice and
@@ -2727,7 +2695,6 @@ def _ivfpq_sql(m: int = 4, k: int = 8, n_iters: int = 2, dim: int = 64) -> str:
 @query(
     "x_ivfpq_topk",
     _ivfpq_sql(),
-    extra=True,  # window full at 50; selfcheck + pytest verified
 )
 def x_ivfpq_topk(spark, sf_dir):
     """IVFPQ (the canonical FAISS serving composition): cosine-cell
@@ -2802,7 +2769,7 @@ _CURATE_E2E_SQL = f"""
     """
 
 
-@query("x_curate_e2e", _CURATE_E2E_SQL, extra=True)
+@query("x_curate_e2e", _CURATE_E2E_SQL)
 def x_curate_e2e(spark, sf_dir):
     """END-TO-END curation invariant: quality filter → MinHash-LSH
     dedup (pairs → connected components → keep-longest retention) →
@@ -2872,7 +2839,6 @@ def x_curate_e2e(spark, sf_dir):
     SELECT doc_id, CAST(n_chars AS BIGINT) AS n_chars
     FROM e ORDER BY k DESC, doc_id LIMIT 100
     """,
-    extra=True,  # r6 addition; window full — selfcheck + pytest verified
 )
 def x_sample_weighted(spark, sf_dir):
     """Weighted exact-count sample (Efraimidis–Spirakis A-ES, 100 docs
@@ -2934,7 +2900,6 @@ def _bands_sql(src: str, num_hashes: int, rows_per_band: int) -> str:
     WHERE d.doc_id % 5 = 0
       AND d.doc_id NOT IN (SELECT doc_id FROM hits)
     """,
-    extra=True,  # r6 addition; window full — selfcheck + pytest verified
 )
 def x_dedup_incremental(spark, sf_dir):
     """Incremental (daily-ingest) dedup: new batch (doc_id % 5 = 0)
@@ -2976,7 +2941,6 @@ def x_dedup_incremental(spark, sf_dir):
            ROUND(SUM(srp) / COUNT(*), 6) AS mean_surprisal6
     FROM s GROUP BY doc_id
     """,
-    extra=True,  # r6 addition; window full — selfcheck + pytest verified
 )
 def x_surprisal(spark, sf_dir):
     """Unigram-LM surprisal quality score (corpus-as-model, Laplace
@@ -3019,7 +2983,6 @@ def x_surprisal(spark, sf_dir):
            ROUND(SUM(srp) / COUNT(*), 6) AS mean_bigram_surprisal6
     FROM s GROUP BY doc_id
     """,
-    extra=True,  # r7 addition; window settled for r7 — rotate in r8
 )
 def x_bigram_lm(spark, sf_dir):
     """Bigram-LM surprisal (corpus-as-model, Laplace 0.5): mean
@@ -3072,7 +3035,6 @@ def _zorder_sql(bits: int) -> str:
 @query(
     "x_zorder_key",
     _zorder_sql(8),
-    extra=True,  # r6 addition; window full — selfcheck + pytest verified
 )
 def x_zorder_key(spark, sf_dir):
     """Z-order layout key over orders(o_custkey, o_totalprice), 8 bits
@@ -3188,7 +3150,6 @@ _QD_K, _QD_LEVELS = 64, 13  # eighths-scaled events.value: sf0.1 max 560.21*8 = 
 @query(
     "x_qdigest_sketch",
     qdigest_sketch_sql(_QD_K, _QD_LEVELS),
-    extra=True,  # r6 addition; window full — selfcheck + pytest verified
 )
 def x_qdigest_sketch(spark, sf_dir):
     """q-digest of eighths-scaled events.value (k=64, 13 levels): the
@@ -3210,7 +3171,6 @@ _QD_QS = [0.1, 0.25, 0.5, 0.75, 0.9, 0.99]
 @query(
     "x_qdigest_quantiles",
     qdigest_quantiles_sql(_QD_K, _QD_LEVELS, _QD_QS),
-    extra=True,  # r6 addition; window full — selfcheck + pytest verified
 )
 def x_qdigest_quantiles(spark, sf_dir):
     """Quantile readout from the events.value q-digest: rank
@@ -3256,7 +3216,6 @@ _KJ_HASH = "('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT"
            CAST(n_common AS DOUBLE) / GREATEST(n_merged, 1) AS jaccard
     FROM t, c
     """,
-    extra=True,  # r6 addition; window full — selfcheck + pytest verified
 )
 def x_kmv_jaccard(spark, sf_dir):
     """Corpus-overlap from sketches alone: Jaccard of click-users vs
@@ -3282,7 +3241,6 @@ def x_kmv_jaccard(spark, sf_dir):
     SELECT event_type, h, CAST(32 AS INTEGER) AS k FROM hs
     QUALIFY row_number() OVER (PARTITION BY event_type ORDER BY h) <= 32
     """,
-    extra=True,  # r6 addition; window full — selfcheck + pytest verified
 )
 def x_kmv_keyed(spark, sf_dir):
     """Per-key KMV sketches (k=32 smallest distinct user hashes PER
@@ -3333,7 +3291,6 @@ _SO_HASH = "('0x' || substring(md5(sh), 1, 15))::BIGINT"
            CAST(n_common AS DOUBLE) / GREATEST(n_merged, 1) AS jaccard
     FROM t2, c
     """,
-    extra=True,  # r6 addition; window full — selfcheck + pytest verified
 )
 def x_shingle_overlap(spark, sf_dir):
     """Corpus↔benchmark contamination pre-check: KMV-estimated 4-gram
@@ -3369,7 +3326,6 @@ _TRI_EDGES_SQL = """
     JOIN e e2 ON e1.y = e2.x
     JOIN e e3 ON e3.x = e1.x AND e3.y = e2.y
     """,
-    extra=True,  # r6 addition; window full — selfcheck + pytest verified
 )
 def x_triangles(spark, sf_dir):
     """Triangle count of the supplier co-purchase graph (suppliers
@@ -3413,7 +3369,6 @@ def x_triangles(spark, sf_dir):
            ROUND(tri.sampled_triangles * 64.0, 6) + 0.0 AS est6
     FROM m, tri
     """,
-    extra=True,  # r12 addition — built this round, takes a window slot
 )
 def x_triangles_sampled(spark, sf_dir):
     """DOULION edge-sampled triangle estimate on the same supplier
@@ -3472,7 +3427,6 @@ _CC_EDGES_SQL = """
                 ELSE 0.0 END AS coef
     FROM deg d LEFT JOIN pn ON d.n = pn.n
     """,
-    extra=True,  # r6 addition; window full — selfcheck + pytest verified
 )
 def x_clustering_coef(spark, sf_dir):
     """Local clustering coefficient over the high-quantity supplier
@@ -3546,7 +3500,6 @@ def _kcore_sql(k: int, rounds: int) -> str:
 @query(
     "x_kcore",
     _kcore_sql(15, 6),  # sf0.01 converges in 3 peel rounds; 6 = 2x margin
-    extra=True,  # r6 addition; window full — selfcheck + pytest verified
 )
 def x_kcore(spark, sf_dir):
     """15-core of the high-quantity supplier co-purchase graph:
@@ -3583,7 +3536,6 @@ def x_kcore(spark, sf_dir):
     FROM l, r
     WHERE abs(len(ls) - len(rs)) <= 1 AND levenshtein(ls, rs) <= 1
     """,
-    extra=True,  # r7 addition; window settled for r7 — rotate in r8
 )
 def x_fuzzy_join(spark, sf_dir):
     """Fuzzy (edit-distance ≤ 1) join of part names against their
@@ -3643,7 +3595,6 @@ _BM25_TERMS = ("join", "hash", "vector", "stream")
     SELECT doc_id, n_terms, CAST(sc AS DOUBLE) AS score
     FROM s ORDER BY sc DESC, doc_id LIMIT 10
     """,
-    extra=True,  # r7 addition; window settled for r7 — rotate in r8
 )
 def x_bm25_topk(spark, sf_dir):
     """BM25 top-10 for a 4-term query over the documents corpus —
@@ -3672,7 +3623,6 @@ def x_bm25_topk(spark, sf_dir):
     )
     SELECT doc_id, {_SPLIT_CASE} AS split FROM u
     """,
-    extra=True,  # r7 addition; window settled for r7 — rotate in r8
 )
 def x_split_safe(spark, sf_dir):
     """LEAKAGE-SAFE 80/10/10 split: assignment keyed on the MinHash
@@ -3722,7 +3672,6 @@ def x_split_safe(spark, sf_dir):
            ROUND(percent_rank() OVER (ORDER BY score6), 6) AS pct6
     FROM scored
     """,
-    extra=True,  # r7 addition; window settled for r7 — rotate in r8
 )
 def x_quality_pctile(spark, sf_dir):
     """Percentile-rank calibration of the unigram surprisal quality
@@ -3775,7 +3724,6 @@ def x_quality_pctile(spark, sf_dir):
                  6) AS z6
     FROM s
     """,
-    extra=True,  # r7 addition; window settled for r7 — rotate in r8
 )
 def x_ab_lift(spark, sf_dir):
     """A/B experiment readout over event values with user-keyed
@@ -3839,7 +3787,6 @@ def _lpa_sql(rounds: int) -> str:
 @query(
     "x_label_prop",
     _lpa_sql(4),
-    extra=True,  # r7 addition; window settled for r7 — rotate in r8
 )
 def x_label_prop(spark, sf_dir):
     """Synchronous label-propagation communities, EXACTLY 4 rounds,
@@ -3909,7 +3856,6 @@ _PPR_SEEDS = (1, 2, 3, 4, 5)
 @query(
     "x_ppr",
     _ppr_sql(3, _PPR_SEEDS),
-    extra=True,  # r7 addition; window settled for r7 — rotate in r8
 )
 def x_ppr(spark, sf_dir):
     """Personalized WEIGHTED PageRank: random-walk-with-restart from
@@ -3958,7 +3904,6 @@ def x_ppr(spark, sf_dir):
     JOIN deg du ON du.node = cnt.u
     JOIN deg dv ON dv.node = cnt.v
     """,
-    extra=True,  # r7 addition; window settled for r7 — rotate in r8
 )
 def x_common_neighbors(spark, sf_dir):
     """Common-neighbor link prediction over the high-quantity supplier
@@ -4045,7 +3990,6 @@ def _hits_sql(iters: int) -> str:
 @query(
     "x_hits",
     _hits_sql(2),
-    extra=True,  # r7 addition; window settled for r7 — rotate in r8
 )
 def x_hits(spark, sf_dir):
     """HITS hubs & authorities, 2 rounds, over the supplier→part edge
@@ -4133,7 +4077,6 @@ def _mmr_sql(
 @query(
     "x_mmr",
     _mmr_sql("embeddings", qmax=6, ncand=8, lam=0.5),
-    extra=True,  # r7 addition; window settled for r7 — rotate in r8
 )
 def x_mmr(spark, sf_dir):
     """MMR diversified re-ranking (λ=0.5): 8 exact-cosine candidates
@@ -4395,7 +4338,6 @@ def x_ab_segments(spark, sf_dir):
 # --- r10 rotation queue) ---
 @query(
     "x_target_enc",
-    extra=True,  # r9 addition — r10 rotation candidate
     sql="""
     WITH c AS (
       SELECT o_orderpriority AS k,
@@ -4438,7 +4380,6 @@ def x_target_enc(spark, sf_dir):
 
 @query(
     "x_feature_hash",
-    extra=True,  # r9 addition — r10 rotation candidate
     sql=f"""
     WITH toks AS (
       SELECT doc_id, unnest({_SQL_TOKS}) AS tok FROM documents
@@ -4467,7 +4408,6 @@ def x_feature_hash(spark, sf_dir):
 
 @query(
     "x_robust_scale",
-    extra=True,  # r9 addition — r10 rotation candidate
     sql="""
     WITH o AS (
       SELECT o_orderkey, o_orderpriority AS pri, o_totalprice AS v
@@ -4539,7 +4479,6 @@ def _u6_col(seed: str, col):
 
 @query(
     "x_roc_auc",
-    extra=True,  # r9 addition — r10 rotation candidate
     sql="""
     WITH d AS (
       SELECT o_orderpriority LIKE '1%' AS y, o_totalprice AS s
@@ -4585,7 +4524,6 @@ def x_roc_auc(spark, sf_dir):
 
 @query(
     "x_calibration",
-    extra=True,  # r9 addition — r10 rotation candidate
     sql=f"""
     WITH d AS (
       SELECT {_U6.format(seed="'cal'", col="doc_id")} AS s,
@@ -4626,7 +4564,6 @@ def x_calibration(spark, sf_dir):
 
 @query(
     "x_uplift",
-    extra=True,  # r9 addition — r10 rotation candidate
     sql=f"""
     WITH d AS (
       SELECT {_U6.format(seed="'upl'", col="user_id")} < 0.5 AS tr,
@@ -4692,7 +4629,6 @@ def x_uplift(spark, sf_dir):
 
 @query(
     "x_url_normalize",
-    extra=True,  # r9 addition — r10 rotation candidate
     sql="""
     WITH u AS (
       SELECT CASE doc_id % 5
@@ -4781,7 +4717,6 @@ def x_url_normalize(spark, sf_dir):
 
 @query(
     "x_rank_metrics",
-    extra=True,  # r9 addition — r10 rotation candidate
     sql="""
     WITH ranked AS (
       SELECT o_orderpriority AS q, o_orderkey,
@@ -4859,7 +4794,6 @@ def x_rank_metrics(spark, sf_dir):
 
 @query(
     "x_mm_decode",
-    extra=True,
     sql="""
     WITH g AS (
       SELECT doc_id, 4 + doc_id % 5 AS w, 3 + doc_id % 4 AS h
@@ -4943,7 +4877,6 @@ def x_mm_decode(spark, sf_dir):
 
 @query(
     "x_emb_covariance",
-    extra=True,  # r11 addition — r12 rotation candidate
     sql="""
     WITH q AS (
       SELECT [CAST(round(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT)
@@ -5047,7 +4980,6 @@ def _sql_arr(xs):
 
 @query(
     "x_pca_project",
-    extra=True,  # r12 addition — built this round, takes a window slot
     sql=f"""
     WITH v AS (
       SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -5080,7 +5012,6 @@ def x_pca_project(spark, sf_dir):
 
 @query(
     "x_ann_recall",
-    extra=True,  # r11 addition — r12 rotation candidate
     sql=_IVF_CELLS_SQL
     + f"""
     , q3 AS (
@@ -5176,7 +5107,7 @@ def _benford_sql() -> str:
     """
 
 
-@query("x_benford", _benford_sql(), extra=True)  # r12 rotation candidate
+@query("x_benford", _benford_sql())
 def x_benford(spark, sf_dir):
     """Benford first-digit conformance of extendedprice cents per
     returnflag (pipeline/validate.py:benford_test) — the forensic
@@ -5197,7 +5128,6 @@ def x_benford(spark, sf_dir):
 
 @query(
     "x_temp_mixture",
-    extra=True,  # r12 addition — r13 rotation candidate
     sql="""
     WITH c AS (
       SELECT source AS domain, CAST(COUNT(*) AS BIGINT) AS n
@@ -5234,7 +5164,6 @@ _LOGIT_B = -0.25
 
 @query(
     "x_quality_logit",
-    extra=True,  # r12 addition — r13 rotation candidate
     sql=f"""
     WITH f AS (
       SELECT doc_id,
@@ -5287,7 +5216,6 @@ def x_quality_logit(spark, sf_dir):
 
 @query(
     "x_neyman",
-    extra=True,  # r12 addition — r13 rotation candidate
     sql="""
     WITH d AS (
       SELECT o_orderpriority AS stratum,
@@ -5347,7 +5275,6 @@ def x_neyman(spark, sf_dir):
 
 @query(
     "x_containment",
-    extra=True,  # r12 addition — r13 rotation candidate
     sql=f"""
     WITH toks0 AS (
       SELECT doc_id, unnest({_SQL_DTOKS}) AS tok FROM documents
@@ -5422,7 +5349,6 @@ def x_containment(spark, sf_dir):
            CAST(SUM(term) AS DOUBLE) AS entropy6
     FROM s GROUP BY doc_id
     """,
-    extra=True,  # r13 addition — r14 rotation candidate
 )
 def x_token_entropy(spark, sf_dir):
     """Per-doc Shannon entropy of the token distribution — the
@@ -5453,7 +5379,6 @@ def x_token_entropy(spark, sf_dir):
            END AS r_star6
     FROM nr a LEFT JOIN nr b ON b.r = a.r + 1
     """,
-    extra=True,  # r13 addition — r14 rotation candidate
 )
 def x_good_turing(spark, sf_dir):
     """Good-Turing frequency-of-frequencies with the smoothed count
@@ -5494,7 +5419,6 @@ def x_good_turing(spark, sf_dir):
       END AS coverage6
     FROM a
     """,
-    extra=True,  # r14 addition — r15 rotation candidate
 )
 def x_chao1(spark, sf_dir):
     """Chao1 vocabulary-richness lower bound + Good's sample coverage
@@ -5547,7 +5471,6 @@ def x_chao1(spark, sf_dir):
       END AS r2_6
     FROM m
     """,
-    extra=True,  # r13 addition — r14 rotation candidate
 )
 def x_zipf_fit(spark, sf_dir):
     """Zipf's-law exponent of the corpus unigram spectrum: OLS of
@@ -5619,7 +5542,6 @@ def x_zipf_fit(spark, sf_dir):
            CAST(SUM(c) AS DOUBLE) AS rrf6
     FROM u GROUP BY doc_id
     """,
-    extra=True,  # r13 addition — r14 rotation candidate
 )
 def x_rrf_fusion(spark, sf_dir):
     """HYBRID retrieval fusion: BM25 top-20 (lexical, the 4-term
@@ -5673,7 +5595,6 @@ def x_rrf_fusion(spark, sf_dir):
     FROM cand
     WHERE abs(length(sa) - length(sb)) <= 1 AND levenshtein(sa, sb) <= 1
     """,
-    extra=True,  # r13 addition — r14 rotation candidate
 )
 def x_fuzzy_pairs(spark, sf_dir):
     """Fuzzy-string near-dup pairs over CUSTOMER NAMES: exact
@@ -5773,7 +5694,6 @@ def x_fuzzy_pairs(spark, sf_dir):
                AS DECIMAL(38,6)) AS DOUBLE), 6) + 0.0 AS weight6
     FROM pr, w
     """,
-    extra=True,  # r14 addition — r15 rotation candidate
 )
 def x_fs_linkage(spark, sf_dir):
     """Fellegi-Sunter probabilistic record-linkage weights over
@@ -5848,7 +5768,6 @@ def x_fs_linkage(spark, sf_dir):
            CAST(s.s2 AS BIGINT) AS sum_c2
     FROM d JOIN s USING (doc_id)
     """,
-    extra=True,  # r14 addition — r15 rotation candidate
 )
 def x_png_meta(spark, sf_dir):
     """Image-column metadata via a REAL PNG round-trip
@@ -5895,7 +5814,6 @@ def x_png_meta(spark, sf_dir):
     FROM cand
     WHERE ROUND(jaro_winkler_similarity(sa, sb), 6) + 0.0 >= 0.95
     """,
-    extra=True,  # r14 addition — r15 rotation candidate
 )
 def x_jw_pairs(spark, sf_dir):
     """Jaro-Winkler near-dup pairs over CUSTOMER NAMES
@@ -5957,7 +5875,6 @@ def x_jw_pairs(spark, sf_dir):
            CAST(COALESCE(sh.n_shared, 0) AS BIGINT) AS n_shared_fps
     FROM per_doc LEFT JOIN sh ON per_doc.doc_id = sh.doc_id
     """,
-    extra=True,  # r14 addition — r15 rotation candidate
 )
 def x_winnow(spark, sf_dir):
     """Winnowing fingerprints (MOSS; Schleimer-Wilkerson-Aiken 2003)
@@ -6084,7 +6001,6 @@ def x_winnow(spark, sf_dir):
         + bit_count(xor(x.b4, y.b4)) + bit_count(xor(x.b5, y.b5))
         + bit_count(xor(x.b6, y.b6)) + bit_count(xor(x.b7, y.b7)) <= 3
     """,
-    extra=True,  # r14 addition — r15 rotation candidate
 )
 def x_img_dhash(spark, sf_dir):
     """Image near-dup pairs by perceptual dHash (multimodal.py:

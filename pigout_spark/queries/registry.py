@@ -1,4 +1,9 @@
-"""Registry plumbing + cross-engine determinism helpers.
+"""Query registry + cross-engine determinism helpers.
+
+``@query(name, sql)`` adds a query and its DuckDB oracle SQL to the one
+``QUERIES`` dict and refuses a name that is already there.  The
+registered callable reuses its built plan within one application
+(``catalog.memo``); its ``__wrapped__`` always builds a fresh one.
 
 Floating-point discipline (FIXTURES.md "gotchas", hardened): a plain
 SUM(double) over 60k rows differs between engines by ~1e-3 at 1e9
@@ -19,7 +24,7 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pigout_spark.catalog import load_table
+from pigout_spark.catalog import load_table, memo
 
 
 @dataclass(frozen=True)
@@ -28,38 +33,17 @@ class Q:
     sql: str | None
 
 
-REGISTRY: dict[str, Q] = {}
-
-#: Queries verified locally (selfcheck + pytest) but NOT exported to the
-#: driver: the driver's correctness gate records at most 50 queries per
-#: round (CORRECTNESS_r01.json cut off at exactly the first 50 registry
-#: entries), so the driver-facing set is capped at 50 and everything else
-#: lives here with the same oracle machinery.
-EXTRA_REGISTRY: dict[str, Q] = {}
-
-#: Hard driver cap observed in round 1 — len(queries()) must stay ≤ this.
-DRIVER_QUERY_CAP = 50
-
-
-#: Prepared-plan cache: a registered query is a pure function of
-#: (session, sf_dir), so its built DataFrame — an immutable plan handle
-#: — is reused across calls (the prepared-statement model: parse/build/
-#: analyze once, execute many).  Same staleness contract as
-#: catalog._HANDLE_CACHE (rewriting fixture files mid-application needs
-#: catalog.invalidate_table_cache()); keyed by applicationId so a
-#: restarted session never sees stale handles.
-_PLAN_CACHE: dict = {}
+#: Every registered query, in registration order.  ``queries/__init__.py``
+#: splits it into the driver window and the local extras.
+QUERIES: dict[str, Q] = {}
 
 
 def _memoized(name: str, fn: Callable) -> Callable:
+    """A registered query is a pure function of (session, sf_dir): build
+    and analyze its plan once, execute it many times."""
+
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        try:
-            key = (spark.sparkContext.applicationId, sf_dir, name)
-        except Exception:
-            return fn(spark, sf_dir)
-        if key not in _PLAN_CACHE:
-            _PLAN_CACHE[key] = fn(spark, sf_dir)
-        return _PLAN_CACHE[key]
+        return memo(spark, ("plan", sf_dir, name), lambda: fn(spark, sf_dir))
 
     wrapped.__doc__ = fn.__doc__
     wrapped.__name__ = fn.__name__
@@ -67,15 +51,15 @@ def _memoized(name: str, fn: Callable) -> Callable:
     return wrapped
 
 
-def query(name: str, sql: str | None = None, extra: bool = False):
-    """Register a query under ``name`` with its DuckDB oracle SQL.
-    ``extra=True`` keeps it out of the driver-facing 50-entry set while
-    remaining locally verifiable (tools/selfcheck.py --extra).  The
-    registered callable caches its built plan per (session, sf_dir) —
-    see _PLAN_CACHE."""
+def query(name: str, sql: str | None = None):
+    """Register a query under ``name`` with its DuckDB oracle SQL; a name
+    registers once.  Every registered query is checked against its oracle
+    by ``tools/selfcheck.py``; ``DRIVER_WINDOW`` picks the driver's 50."""
 
     def deco(fn):
-        (EXTRA_REGISTRY if extra else REGISTRY)[name] = Q(_memoized(name, fn), sql)
+        if name in QUERIES:
+            raise ValueError(f"query {name!r} is already registered")
+        QUERIES[name] = Q(_memoized(name, fn), sql)
         return fn
 
     return deco

@@ -33,7 +33,6 @@ def _events_s(spark, sf_dir):
     FROM events
     GROUP BY 1, 2
     """,
-    extra=True,  # r5 late rotation: x_asof/x_range/x_rollup take streaming-family slots; stays oracle-checked locally
 )
 def stream_tumbling(spark, sf_dir):
     """Tumbling 1-hour event-time windows per event_type.  Same code
@@ -62,7 +61,6 @@ def stream_tumbling(spark, sf_dir):
     )
     SELECT window_start, COUNT(*) AS n FROM assigned GROUP BY 1
     """,
-    extra=True,
 )
 def stream_sliding(spark, sf_dir):
     """Sliding 1-hour windows every 30 minutes: each event lands in two
@@ -75,8 +73,6 @@ def stream_sliding(spark, sf_dir):
 
 @query(
     "stream_session",
-    extra=True,  # r4 rotation: streaming driver rows are stream_tumbling
-    # + x_stream_dedup; session stays oracle-checked locally
     sql="""
     WITH e AS (
       SELECT user_id, CAST(date_trunc('second', ts) AS TIMESTAMP) AS ts FROM events
@@ -188,7 +184,6 @@ def x_stream_dedup(spark, sf_dir):
              ROWS UNBOUNDED PRECEDING), 6) AS ffill6
     FROM j
     """,
-    extra=True,  # window full at 50; selfcheck + pytest verified
 )
 def x_events_resample(spark, sf_dir):
     """Time-series densification: 6-hour resample per user with
@@ -365,7 +360,6 @@ def x_rollup_timeseries(spark, sf_dir):
       ON c.user_id = e.user_id
      AND c.c_start <= e.e_end AND e.e_start <= c.c_end
     """,
-    extra=True,  # window full at 50; selfcheck + pytest verified
 )
 def x_overlap_join(spark, sf_dir):
     """INTERVAL OVERLAP JOIN (interval×interval): ±2-minute click
@@ -409,7 +403,6 @@ def x_overlap_join(spark, sf_dir):
     WINDOW w AS (PARTITION BY user_id ORDER BY epoch(ts)
                  RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW)
     """,
-    extra=True,  # window full at 50; selfcheck + pytest verified
 )
 def x_rolling(spark, sf_dir):
     """Trailing 1-hour rolling window per event (count + exact-decimal
@@ -465,7 +458,6 @@ def x_rolling(spark, sf_dir):
              / (10000.0 * CAST(SUM(wsec) AS BIGINT)) AS twa
     FROM c GROUP BY user_id, bucket
     """,
-    extra=True,  # window full at 50; selfcheck + pytest verified
 )
 def x_twa(spark, sf_dir):
     """TIME-WEIGHTED AVERAGE, 6-hour buckets per user: LOCF segments
@@ -506,7 +498,6 @@ def x_twa(spark, sf_dir):
            CAST(COUNT(*) AS BIGINT) AS n_obs
     FROM b GROUP BY user_id, bucket
     """,
-    extra=True,  # window full at 50; selfcheck + pytest verified
 )
 def x_ohlc(spark, sf_dir):
     """OHLC candles, 6-hour buckets per user — single map-side-combined
@@ -546,7 +537,6 @@ def x_ohlc(spark, sf_dir):
            CAST(n AS BIGINT) AS n_window
     FROM zz WHERE n >= 5 AND var > 0 AND abs(z) > 2.0
     """,
-    extra=True,  # window full at 50; selfcheck + pytest verified
 )
 def x_zscore(spark, sf_dir):
     """Rolling z-score anomaly flags (24 h trailing window per user,
@@ -600,7 +590,6 @@ def x_zscore(spark, sf_dir):
            END AS value_interp
     FROM ex WHERE t1 IS NULL OR g * 21600 < t1
     """,
-    extra=True,  # window full at 50; selfcheck + pytest verified
 )
 def x_interp(spark, sf_dir):
     """Linear-interpolation resample to a 6-hour grid per user: every
@@ -638,11 +627,10 @@ def x_interp(spark, sf_dir):
     )
     SELECT user_id, ts, value, ewma FROM rec
     """,
-    extra=True,  # r6: upgraded from rows-only to hash-checked — the
-    # per-key linear recurrence replays as a recursive CTE; the one FP
-    # risk (libm pow) is bit-identical across both engines on this box
-    # (validated over all 10k rows), and every other step is exact
-    # (second-truncated epochs are integer-valued doubles)
+    # Hash-checked: the per-key linear recurrence replays as a recursive
+    # CTE.  The one floating-point risk, libm pow, gave bit-identical
+    # results in both engines over all 10k rows; every other step is
+    # exact (second-truncated epochs are integer-valued doubles).
 )
 def x_ewma(spark, sf_dir):
     """Time-aware EWMA (halflife 1 h) per user over the event stream
@@ -685,7 +673,6 @@ def x_ewma(spark, sf_dir):
            b.view_id, ROUND(b.view_value, 6) AS vv6
     FROM l LEFT JOIN best b USING (user_id, event_id)
     """,
-    extra=True,  # r7 addition; window settled for r7 — rotate in r8
 )
 def x_asof_nearest(spark, sf_dir):
     """NEAREST-direction as-of join (full pandas merge_asof surface):
@@ -754,7 +741,6 @@ def x_asof_nearest(spark, sf_dir):
            CAST(COUNT(*) AS BIGINT) AS n_merged
     FROM isl GROUP BY user_id, island
     """,
-    extra=True,  # r7 addition; window settled for r7 — rotate in r8
 )
 def x_merge_intervals(spark, sf_dir):
     """Incident-window construction: every error event's ±5-minute
@@ -905,7 +891,6 @@ def x_cusum(spark, sf_dir):
 # --- r9 addition: autocorrelation screen (r10 rotation queue) ---
 @query(
     "x_autocorr",
-    extra=True,  # r9 addition — r10 rotation candidate
     sql="""
     WITH g AS (
       SELECT event_type,
@@ -975,7 +960,6 @@ _REPLAY_SEQ = [0]  # memory-sink names must be unique within a session
 
 @query(
     "x_upsert_replay",
-    extra=True,
     sql="""
     WITH ch AS (
       SELECT user_id % 200 AS k,
@@ -1118,7 +1102,6 @@ def _write_ordered_halves(df, order_col="__ord"):
            CAST(COUNT(*) AS BIGINT) AS n
     FROM w WHERE prev IS NOT NULL GROUP BY 1, 2, 3
     """,
-    extra=True,
 )
 def x_transitions_replay(spark, sf_dir):
     """Batch-replay equality for the STREAMING Markov-transition
@@ -1205,7 +1188,6 @@ def x_transitions_replay(spark, sf_dir):
     WHERE e1 IS NOT NULL AND e2 IS NOT NULL AND e3 IS NOT NULL
       AND e1 < e2 AND e2 < e3
     """,
-    extra=True,
 )
 def x_funnel_replay(spark, sf_dir):
     """Batch-replay equality for the STREAMING ordered funnel (r10
@@ -1307,7 +1289,6 @@ def x_funnel_replay(spark, sf_dir):
            (s_hi > 100000 OR s_lo > 100000) AS alarm
     FROM s
     """,
-    extra=True,  # r12 addition — built this round, r13 rotation candidate
 )
 def x_cusum_replay(spark, sf_dir):
     """Batch-replay equality for the STREAMING CUSUM monitor: every

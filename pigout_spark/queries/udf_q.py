@@ -122,7 +122,6 @@ def q26_udtf(spark, sf_dir):
     FROM lineitem GROUP BY l_returnflag,
            CASE WHEN l_quantity < 10 THEN 'small' ELSE 'large' END
     """,
-    extra=True,  # r5 final rotation: x_pq_topk takes the slot; Latin stays driver-covered by x_latin_q01 + x_latin_topk
 )
 def x_latin_udf(spark, sf_dir):
     """REGISTER'd Python script UDFs driven through a Pig script and
@@ -175,7 +174,6 @@ def q27_stream_through(spark, sf_dir):
            COUNT(*) AS n
     FROM supplier GROUP BY s_nationkey
     """,
-    extra=True,  # late-r5 rotation: settled driver-green row parked as local extra
 )
 def q28_group_bag(spark, sf_dir):
     """Pig GROUP with the bag consumed whole (BagToString over a sorted
@@ -202,7 +200,6 @@ def q28_group_bag(spark, sf_dir):
     SELECT s_suppkey AS id, CAST(NULL AS VARCHAR) AS name, s_acctbal AS bal
     FROM supplier
     """,
-    extra=True,  # late-r5 rotation: settled driver-green row parked as local extra
 )
 def q29_union_onschema(spark, sf_dir):
     """Pig UNION ONSCHEMA: union by column name, null-filling columns
@@ -227,7 +224,6 @@ def q29_union_onschema(spark, sf_dir):
                              1, 8))::BIGINT
           % 10000 < 1000
     """,
-    extra=True,  # late-r5 rotation: settled driver-green row parked as local extra
 )
 def q30_sample(spark, sf_dir):
     """Pig `SAMPLE A 0.1` via the deterministic md5 hash-sample — the
@@ -242,7 +238,7 @@ def q30_sample(spark, sf_dir):
     )
 
 
-@query("x_sample_bernoulli", extra=True)
+@query("x_sample_bernoulli")
 def x_sample_bernoulli(spark, sf_dir):
     """Pig `SAMPLE A 0.1` literal semantics — Bernoulli, seeded for
     Spark-side reproducibility; rows-only (engines sample differently)."""
@@ -255,7 +251,6 @@ def x_sample_bernoulli(spark, sf_dir):
 # as a locally-verified extra (tools/selfcheck.py --extra).
 @query(
     "q31_datetime_arith",
-    extra=True,
     sql="""
     SELECT month(o_orderdate) AS m,
            COUNT(*) AS n,
@@ -285,7 +280,6 @@ def q31_datetime_arith(spark, sf_dir):
 # Folded into q02_filter_project for the driver's 50-query window.
 @query(
     "q32_in_filter",
-    extra=True,
     sql="""
     SELECT o_orderstatus, COUNT(*) AS n
     FROM orders

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 #: Runtime-settable confs applied to ANY session handed to us (including the
@@ -44,8 +45,8 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # conf not settable on this build — proceed with defaults
+        except AnalysisException:
+            pass  # CANNOT_MODIFY_CONFIG on this build — proceed with defaults
     return spark
 
 

@@ -19,6 +19,7 @@ scan, which is the §4.1 PartitionFilter/PredicatePushdown story for free.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 _FORMATS = {"parquet", "csv", "json", "text", "orc", "avro"}
@@ -49,7 +50,7 @@ def avro_available(spark: SparkSession | None = None) -> bool:
                 "overwrite"
             ).save(f"{d}/probe")
             _AVRO_AVAILABLE = True
-        except Exception:
+        except AnalysisException:  # "Failed to find data source: avro"
             _AVRO_AVAILABLE = False
         finally:
             shutil.rmtree(d, ignore_errors=True)

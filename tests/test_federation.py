@@ -40,3 +40,78 @@ def test_catalog_errors_and_views(spark):
         "select count(*) n from events where event_type = 'click'"
     ).first()["n"]
     assert got > 0  # events readable through the nanos normalization
+
+
+def _stub_session(app_id):
+    from types import SimpleNamespace
+
+    return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+
+
+def test_memo_builds_once_per_key_and_application():
+    from pigout_spark.catalog import invalidate_table_cache, memo
+
+    builds = []
+
+    def build(v):
+        return lambda: builds.append(v) or v
+
+    a, b = _stub_session("app-a"), _stub_session("app-b")
+    assert memo(a, ("k", 1), build(1)) == 1
+    assert memo(a, ("k", 1), build(99)) == 1
+    assert memo(a, ("k", 2), build(2)) == 2
+    assert builds == [1, 2]
+    # a second application drops every entry of the first
+    assert memo(b, ("k", 1), build(3)) == 3
+    assert memo(a, ("k", 1), build(4)) == 4
+    assert builds == [1, 2, 3, 4]
+    invalidate_table_cache()
+    assert memo(a, ("k", 1), build(5)) == 5
+    assert builds == [1, 2, 3, 4, 5]
+    invalidate_table_cache()
+
+
+def test_memo_keeps_tables_and_plans_until_invalidated(spark, sf_dir):
+    from pigout_spark.catalog import invalidate_table_cache, load_table
+    from pigout_spark.queries import QUERIES
+
+    fn = QUERIES["q01_group_agg"].fn
+    table = load_table(spark, sf_dir, "orders")
+    plan = fn(spark, sf_dir)
+    assert load_table(spark, sf_dir, "orders") is table
+    assert fn(spark, sf_dir) is plan
+    assert fn.__wrapped__(spark, sf_dir) is not plan
+    assert fn.__wrapped__(spark, sf_dir) is not fn.__wrapped__(spark, sf_dir)
+    invalidate_table_cache()
+    assert load_table(spark, sf_dir, "orders") is not table
+    assert fn(spark, sf_dir) is not plan
+
+
+def test_one_process_store_and_no_swallowed_errors():
+    """``catalog.memo`` is the package's one process-level store of
+    DataFrames, plans and codebooks, and no error is swallowed whole."""
+    import ast
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "pigout_spark"
+    broad = re.compile(r"^\s*except\s*(Exception\b|:)")
+    stray = []
+    for p in sorted(pkg.rglob("*.py")):
+        src = p.read_text()
+        rel = p.relative_to(pkg)
+        stray += [
+            f"{rel}:{n}: broad except"
+            for n, line in enumerate(src.splitlines(), 1)
+            if broad.match(line)
+        ]
+        if p.name == "catalog.py":
+            continue
+        for node in ast.parse(src).body:
+            targets = getattr(node, "targets", None) or [getattr(node, "target", None)]
+            stray += [
+                f"{rel}:{node.lineno}: module-level {t.id}"
+                for t in targets
+                if isinstance(t, ast.Name) and t.id.endswith("_CACHE")
+            ]
+    assert not stray, stray

@@ -36,45 +36,9 @@ def test_query_runs(spark, sf_dir, name):
     assert len(df.columns) > 0
 
 
-#: the full registry size, pinned (r9 verdict #5: SURVEY prose said 208
-#: when the import said 207 — docs must not drift from code again).
+#: the full registry size, pinned so that docs cannot drift from code.
 #: Update this constant WITH the SURVEY §7.4 number when adding queries.
-REGISTRY_TOTAL_PINNED = 258  # r14: 249 mid-round + the 5 late
-# additions (x_mann_kendall, x_chao1, x_fs_linkage, x_png_meta,
-# x_jw_pairs) + x_winnow + x_img_dhash + x_cox_ph + x_logrank_strat
-# metadata (x_wav_meta — deterministic PCM payloads round-tripped
-# through the dependency-free RIFF codec, r13 verdict #8) + AVI/RIFF
-# video-container metadata (x_avi_meta — the video analog, closing the
-# audio/video multimodal hole) + Flesch/Flesch-Kincaid readability
-# (x_readability — exact regex counts, ROUND-6 IEEE chains) + A/B
-# experiment sizing (x_power_mde — MDE + required per-arm n from the
-# welch moment fold and the public 6-dp z-table).
-# r13 history: 239 at r12 close + per-doc token
-# entropy (x_token_entropy) + the Good-Turing smoothing table
-# (x_good_turing) + the Zipf exponent fit (x_zipf_fit) + hybrid
-# Reciprocal Rank Fusion (x_rrf_fusion) + the always-valid sequential
-# mSPRT (x_msprt) + blocked-Levenshtein fuzzy near-dup pairs
-# (x_fuzzy_pairs).
-# r12 history: 223 at r11 close + the sampled
-# triangle estimate (x_triangles_sampled) + the pinned-axes PCA
-# projection (x_pca_project) + the one-pass Poisson bootstrap
-# (x_boot_ci) + temperature mixing weights (x_temp_mixture) + the
-# logistic quality scorer (x_quality_logit) + the observational-causal
-# family (x_did, x_psm) + robust/conformal stats (x_trimmed_mean,
-# x_conformal) + the ratio-metric jackknife (x_jackknife) + the
-# Neyman-optimal stratified allocation (x_neyman) + asymmetric
-# containment near-dup (x_containment) + the empirical-Bernstein
-# bounded-mean CI (x_eb_ci) + the Cochran-Armitage trend test
-# (x_cochran) + Benjamini-Yekutieli FDR (x_by_fdr) + the streaming
-# CUSUM batch-replay attestation (x_cusum_replay).
-# r11 history: 212 at r10 close + the two streaming
-# batch-replay attestations (x_funnel_replay, x_transitions_replay) +
-# the parametric mean tests (x_anova_f, x_welch_ttest) + the proportion
-# z and robust-slope tests (x_two_prop_z, x_theil_sen) + the embedding
-# covariance/PCA family (x_emb_covariance) + the ANN recall evaluation
-# (x_ann_recall), the Nelson-Aalen cumulative hazard (x_nelson_aalen),
-# the Mantel-Haenszel pooled odds ratio (x_mantel_haenszel), and the
-# Benford first-digit screen (x_benford)
+REGISTRY_TOTAL_PINNED = 259
 
 
 def test_registry_size_pinned():
@@ -163,3 +127,14 @@ def test_coverage_doc_refs_resolve():
         f"{len(bad)} stale file:symbol references in COVERAGE.md:\n  "
         + "\n  ".join(bad)
     )
+
+
+def test_duplicate_query_name_raises():
+    import pytest as _pytest
+
+    from pigout_spark.queries import QUERIES, query
+
+    spec = QUERIES["q01_group_agg"]
+    with _pytest.raises(ValueError, match="already registered"):
+        query("q01_group_agg")(lambda spark, sf_dir: None)
+    assert QUERIES["q01_group_agg"] is spec

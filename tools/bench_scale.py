@@ -66,13 +66,9 @@ def main() -> int:
     out_path = sys.argv[2] if len(sys.argv) > 2 else "/tmp/bench_scale.json"
     cap = float(sys.argv[3]) if len(sys.argv) > 3 else 360.0
 
-    import __spark_entry__ as entrymod
+    from pigout_spark.queries import QUERIES
 
-    from pigout_spark import queries as qmod
-
-    qs = {**qmod.extra_queries(), **entrymod.queries()}
-    oracles = {**qmod.extra_oracle_sql(), **entrymod.oracle_sql()}
-    names = [n for n in HEADLINE if n in qs]
+    names = [n for n in HEADLINE if n in QUERIES]
     spark = get_spark(
         "pigout-bench-scale",
         extra_conf={"spark.ui.showConsoleProgress": "false"},
@@ -83,7 +79,7 @@ def main() -> int:
     for name in names:
         # r14: every run rebuilds the plan (bench.py parity — a cached
         # checkpoint-bearing handle would time a checkpoint READ)
-        fn = getattr(qs[name], "__wrapped__", qs[name])
+        fn = QUERIES[name].fn.__wrapped__
         best = None
         for _ in range(2):
             t0 = time.perf_counter()
@@ -99,9 +95,9 @@ def main() -> int:
     duck: dict[str, float] = {}
     timed_out: list[str] = []
     for name in names:
-        if name not in oracles:
+        if QUERIES[name].sql is None:
             continue
-        dt = duck_time(sf_dir, oracles[name], cap)
+        dt = duck_time(sf_dir, QUERIES[name].sql, cap)
         if dt is None:
             timed_out.append(name)
             print(f"duck  {name}: TIMEOUT >{cap}s", flush=True)

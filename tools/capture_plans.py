@@ -18,8 +18,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-import __spark_entry__ as entrymod
-from pigout_spark import queries as qmod
+from pigout_spark.queries import QUERIES
 from pigout_spark.session import get_spark
 
 DEFAULT_TARGETS = [
@@ -46,15 +45,14 @@ def main() -> None:
     sf_dir = "/root/testdata/sf0.1"
     out_dir = Path(__file__).resolve().parent.parent / "plans" / tag
     out_dir.mkdir(parents=True, exist_ok=True)
-    qs = {**qmod.extra_queries(), **entrymod.queries()}
     spark = get_spark(
         "pigout-plans", extra_conf={"spark.ui.showConsoleProgress": "false"}
     )
     for name in names:
-        if name not in qs:
+        if name not in QUERIES:
             print(f"skip {name}: not registered", file=sys.stderr)
             continue
-        fn = getattr(qs[name], "__wrapped__", qs[name])
+        fn = QUERIES[name].fn.__wrapped__
         df = fn(spark, sf_dir)
         buf = io.StringIO()
         with redirect_stdout(buf):

@@ -33,17 +33,16 @@ def main() -> None:
             spark.conf.set(k, v)
         except Exception:
             pass
-    import __spark_entry__ as entrymod
     from pigout_spark import queries as qmod
 
-    qs = {**qmod.extra_queries(), **entrymod.queries()}
     _warmup(spark, sf_dir)
     out = {}
     for name in QUERIES:
+        fn = qmod.QUERIES[name].fn
         best = None
         for _ in range(3):
             t0 = time.perf_counter()
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0
             best = dt if best is None else min(best, dt)
         out[name] = round(best, 3)

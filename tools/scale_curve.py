@@ -42,11 +42,8 @@ def main() -> None:
     else:
         names, sfs = args or DEFAULT_QUERIES, DEFAULT_SFS
 
-    import __spark_entry__ as entrymod
-    from pigout_spark import queries as qmod
+    from pigout_spark.queries import QUERIES
 
-    qs = dict(qmod.extra_queries())
-    qs.update(entrymod.queries())
     spark = get_spark("scale-curve")
 
     walls: dict[str, list[float]] = {n: [] for n in names}
@@ -55,7 +52,7 @@ def main() -> None:
             best = None
             for _ in range(2):
                 t0 = time.perf_counter()
-                qs[n](spark, sf).write.format("noop").mode(
+                QUERIES[n].fn(spark, sf).write.format("noop").mode(
                     "overwrite"
                 ).save()
                 w = time.perf_counter() - t0

@@ -1,14 +1,12 @@
 """Local stand-in for the driver's correctness gate.
 
-Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
-DuckDB over the same parquet fixtures, then compares row count, schema
-(as pandas dtypes after normalization), and an order-insensitive value
-hash.  Usage:
+Runs every registered query (``queries.QUERIES``: the driver-facing
+50-query window and every local extra) on Spark and its oracle SQL twin
+on DuckDB over the same parquet fixtures, then compares row count,
+schema (as pandas dtypes after normalization), and an order-insensitive
+value hash.  Usage:
 
     python tools/selfcheck.py [sf_dir] [query ...]
-
-Covers both the driver-facing 50-query set and the EXTRA_REGISTRY
-(folded/subsumed queries kept locally verifiable).
 """
 
 from __future__ import annotations
@@ -23,7 +21,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 import duckdb
 import pandas as pd
 
-import __spark_entry__ as entrymod
 from pigout_spark.session import get_spark
 
 TABLES = (
@@ -63,27 +60,25 @@ def main() -> int:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
-    from pigout_spark import queries as qmod
+    from pigout_spark.queries import QUERIES
 
-    qs = {**entrymod.queries(), **qmod.extra_queries()}
-    oracles = {**entrymod.oracle_sql(), **qmod.extra_oracle_sql()}
     failures = []
-    for name, fn in qs.items():
+    for name, spec in QUERIES.items():
         if only and name not in only:
             continue
         t0 = time.time()
         try:
-            sdf = fn(get_spark("selfcheck"), sf_dir)
+            sdf = spec.fn(get_spark("selfcheck"), sf_dir)
             spdf = sdf.toPandas()
         except Exception as e:
             failures.append(name)
             print(f"FAIL  {name}: spark error: {type(e).__name__}: {e}")
             continue
-        if name not in oracles:
+        if spec.sql is None:
             print(f"ROWS  {name}: {len(spdf)} rows (no oracle — rows-only)")
             continue
         try:
-            opdf = con.execute(oracles[name]).df()
+            opdf = con.execute(spec.sql).df()
         except Exception as e:
             failures.append(name)
             print(f"FAIL  {name}: duckdb error: {type(e).__name__}: {e}")

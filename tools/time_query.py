@@ -25,10 +25,8 @@ def main() -> None:
     ap.add_argument("queries", nargs="+")
     args = ap.parse_args()
 
-    import __spark_entry__ as entrymod
-    from pigout_spark import queries as qmod
+    from pigout_spark.queries import QUERIES
 
-    qs = {**qmod.extra_queries(), **entrymod.queries()}
     spark = get_spark(
         "pigout-time", extra_conf={"spark.ui.showConsoleProgress": "false"}
     )
@@ -38,7 +36,7 @@ def main() -> None:
         # the analyzed plan) rebuild every run — a cached handle would
         # time a checkpoint READ; pure plans keep the prepared-handle
         # methodology.
-        raw = getattr(qs[name], "__wrapped__", qs[name])
+        raw = QUERIES[name].fn.__wrapped__
         probe = raw(spark, args.sf)
         has_ckpt = _needs_rebuild(probe)
         fn = raw if has_ckpt else (lambda s, d, _df=probe: _df)
