@@ -56,10 +56,12 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pigout_spark.catalog import Catalog
+from pigout_spark.functions.math_fns import ROUND_HALF_UP_SQL
 from pigout_spark.operators.joins import join as op_join
 from pigout_spark.operators.relational import split as op_split
 
@@ -334,6 +336,25 @@ def _split_args(arglist: str) -> list[str]:
     return args
 
 
+def _close_paren(s: str, j: int) -> int:
+    """Index just past the ``)`` that closes the call whose arguments
+    start at ``s[j]`` (quote- and nesting-aware)."""
+    depth, quote = 1, None
+    while j < len(s) and depth:
+        ch = s[j]
+        if quote:
+            if ch == quote and s[j - 1] != "\\":
+                quote = None
+        elif ch in "'\"":
+            quote = ch
+        elif ch == "(":
+            depth += 1
+        elif ch == ")":
+            depth -= 1
+        j += 1
+    return j
+
+
 def _rewrite_functions(expr: str) -> str:
     """Rewrite Pig builtin calls (rename or template), innermost-first."""
     pattern = re.compile(r"\b([A-Za-z_][A-Za-z_0-9]*)\s*\(")
@@ -353,20 +374,7 @@ def _rewrite_functions(expr: str) -> str:
             ) else name.upper()
             if uname not in _FN_RENAME and uname not in _FN_TEMPLATE:
                 continue
-            # find matching close paren
-            depth, j, quote = 1, m.end(), None
-            while j < len(expr) and depth:
-                ch = expr[j]
-                if quote:
-                    if ch == quote and expr[j - 1] != "\\":
-                        quote = None
-                elif ch in "'\"":
-                    quote = ch
-                elif ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                j += 1
+            j = _close_paren(expr, m.end())
             inner = expr[m.end() : j - 1]
             args = _split_args(inner)
             if uname == "INDEXOF":
@@ -418,6 +426,62 @@ def _rewrite_size_typed(expr: str, dtypes: dict[str, str]) -> str:
 
 def _dtypes(df) -> dict[str, str]:
     return dict(df.dtypes)
+
+
+_ROUND_CALL = re.compile(r"(?<![\w.])round\s*\(")
+
+
+def _innermost_rounds(sql: str):
+    """(start, end, argument) of each one-argument ``round(a)`` call in
+    ``sql`` that is outside a string literal and holds no other round."""
+    in_quote, escaped, quoted = False, False, []
+    for ch in sql:
+        quoted.append(in_quote)
+        if escaped:
+            escaped = False
+        elif in_quote and ch == "\\":
+            escaped = True
+        elif ch == "'":
+            in_quote = not in_quote
+    for m in _ROUND_CALL.finditer(sql):
+        if quoted[m.start()]:
+            continue
+        j = _close_paren(sql, m.end())
+        args = _split_args(sql[m.end() : j - 1])
+        if len(args) == 1 and not _ROUND_CALL.search(args[0]):
+            yield m.start(), j, args[0]
+
+
+def _round_kernel(sqls: list[str], child: DataFrame) -> list[str]:
+    """Compile each one-argument ``round(a)`` in the translated ``sqls``
+    whose argument is a deterministic DOUBLE on ``child`` to the exact
+    half-up kernel (``math_fns.ROUND_HALF_UP_SQL``): the same value as
+    Spark's round, without its per-row ``BigDecimal``.  Any other
+    argument keeps ``round``, so an int, bigint, float or decimal result
+    keeps its type, and a ``rand()`` argument is not repeated with fresh
+    seeds.  One analysis of ``child.select(a, ...)`` decides every
+    innermost call at once; a call around a compiled one is decided in
+    the next round."""
+    sqls = list(sqls)
+    while True:
+        calls = [(i, *c) for i, sql in enumerate(sqls) for c in _innermost_rounds(sql)]
+        if not calls:
+            return sqls
+        try:
+            plan = child.select(*(F.expr(c[3]) for c in calls))._jdf.queryExecution()
+        except AnalysisException:  # e.g. a lambda variable: keep round
+            return sqls
+        exprs = plan.analyzed().expressions()
+        hits = []
+        for k, c in enumerate(calls):
+            e = exprs.apply(k)
+            if e.dataType().typeName() == "double" and e.deterministic():
+                hits.append(c)
+        if not hits:
+            return sqls
+        for i, start, end, arg in reversed(hits):
+            sqls[i] = sqls[i][:start] + ROUND_HALF_UP_SQL(arg) + sqls[i][end:]
+
 
 def _find_bincond(s: str) -> tuple[int, int, int, int] | None:
     """Locate the first closing Pig bincond `(cond ? a : b)` —
@@ -1122,7 +1186,12 @@ class PigSession:
         if isinstance(rel, _Grouped):
             return self._foreach_grouped(rel, items_s)
         child = self._get(child_name)
-        cols: list[Column] = []
+        # an int is the index of a plain expression in `sqls`, placed
+        # once every ROUND in them is compiled (one type lookup)
+        cols: list[Column | int] = []
+        sqls: list[str] = []
+        names: list[str | None] = []
+        dtypes = _dtypes(child)
         for item in _split_args(items_s):
             am = re.match(r"(.*?)\s+AS\s+(\w+)\s*$", item, re.IGNORECASE | re.DOTALL)
             expr_s, name = (am.group(1), am.group(2)) if am else (item, None)
@@ -1141,9 +1210,12 @@ class PigSession:
                 i, j = child.columns.index(rm.group(1)), child.columns.index(rm.group(2))
                 cols.extend(F.col(c) for c in child.columns[i : j + 1])
                 continue
-            c = F.expr(translate_expr(expr_s, child.columns, _dtypes(child)))
-            cols.append(c.alias(name) if name else c)
-        return child.select(*cols)
+            cols.append(len(sqls))
+            sqls.append(translate_expr(expr_s, child.columns, dtypes))
+            names.append(name)
+        exprs = [F.expr(sql) for sql in _round_kernel(sqls, child)]
+        named = [e.alias(n) if n else e for e, n in zip(exprs, names)]
+        return child.select(*(named[c] if isinstance(c, int) else c for c in cols))
 
     def _foreach_nested(self, group_alias: str, body: str) -> DataFrame:
         """Nested FOREACH block (SURVEY.md §2.2, hard-point H1):

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pigout_spark.catalog import memo
+from pigout_spark.functions.math_fns import to_cents
 
 
 def as_double(vec: Column | str) -> Column:
@@ -207,7 +208,7 @@ def _train_centroids(emb, n_centroids, n_iters, id_col, vec_col, metric):
             assigned.select("cell", F.posexplode("v").alias("dim", "x"))
             .groupBy("cell", "dim")
             .agg(
-                F.sum(F.round(F.col("x") * 10000).cast("long")).alias("s"),
+                F.sum(to_cents(F.col("x"))).alias("s"),
                 F.count(F.lit(1)).alias("n"),
             )
             .collect()

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pigout_spark.catalog import load_table, memo
+from pigout_spark.functions.math_fns import to_cents
 
 
 @dataclass(frozen=True)
@@ -69,26 +70,14 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
-def _cents(c: Column) -> Column:
-    """x → round(x·10⁴) as int64 — the same fixed-point value the
-    DECIMAL(20,4) cast produces (verified per-row identical on every
-    fixture column and product expression at sf0.01/sf0.1), but summed
-    as a plain long: one 64-bit add per row in whole-stage codegen
-    instead of a 128-bit decimal accumulate (~2× on the scan-bound
-    aggregate queries).  Overflow bound: Σ|x|·10⁴ < 2^63 ≈ 9.2e18 —
-    holds to ~1e9 rows of 1e5-magnitude values per group; beyond that,
-    swap back to the decimal accumulator."""
-    return F.round(c * 10000).cast("long")
-
-
 def dsum(col: Column | str, alias: str) -> Column:
     """Exact cross-engine double sum (see module docstring).
     SQL twin: CAST(SUM(CAST(x AS DECIMAL(20,4))) AS DOUBLE) AS alias.
-    Implementation sums int64 cents (``_cents``); the final
+    Implementation sums int64 cents (``math_fns.to_cents``); the final
     cents→double conversion (exact, < 2^53) and /10⁴ division round
     exactly like DuckDB's DECIMAL→DOUBLE cast."""
     c = F.col(col) if isinstance(col, str) else col
-    return (F.sum(_cents(c)).cast("double") / F.lit(10000.0)).alias(alias)
+    return (F.sum(to_cents(c)).cast("double") / F.lit(10000.0)).alias(alias)
 
 
 def davg(col: Column | str, alias: str) -> Column:
@@ -97,7 +86,7 @@ def davg(col: Column | str, alias: str) -> Column:
               / COUNT(x) AS alias."""
     c = F.col(col) if isinstance(col, str) else col
     return (
-        F.sum(_cents(c)).cast("double") / F.lit(10000.0) / F.count(c)
+        F.sum(to_cents(c)).cast("double") / F.lit(10000.0) / F.count(c)
     ).alias(alias)
 
 

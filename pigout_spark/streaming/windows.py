@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pigout_spark.functions.math_fns import to_cents
+
 
 def with_watermark(df: DataFrame, ts_col: str, delay: str) -> DataFrame:
     """Late-data bound (streaming state eviction).  No-op on batch
@@ -318,7 +320,7 @@ def time_weighted_avg(
         .select(
             F.col(key),
             F.unix_timestamp(ts_col).alias("__start"),
-            F.round(F.col(val_col) * 10000).cast("long").alias("__cents"),
+            to_cents(F.col(val_col)).alias("__cents"),
             *([F.col(tiebreak)] if tiebreak else []),
         )
         .withColumn("__end", F.lead("__start").over(w))
@@ -414,7 +416,7 @@ def rolling_zscore(
     100 TB: same profile as :func:`rolling_agg` — one key exchange,
     one sort, O(n) two-pointer frame evaluation for all three sums.
     """
-    c = F.round(F.col(val_col) * 10000).cast("long")
+    c = to_cents(F.col(val_col))
     w = (
         Window.partitionBy(key)
         .orderBy(F.unix_timestamp(ts_col))

@@ -290,3 +290,47 @@ def test_todate_offset_is_instant_not_zone(spark):
         assert [r.h for r in hours] == [5, 5]
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev)
+
+
+def test_cents_matches_round_on_fixture_doubles(spark, sf_dir):
+    """``to_cents`` gives ``round(x·10⁴)`` as the former ``F.round`` form
+    did, row for row, on every DOUBLE column of the sf0.01 fixture and
+    on the discounted-price product the TPC-H queries sum."""
+    from pathlib import Path
+
+    from pigout_spark.catalog import FIXTURE_TABLES, load_table
+    from pigout_spark.functions.math_fns import to_cents
+
+    sf01 = str(Path(sf_dir).parent / "sf0.01")
+    checked = 0
+    for name in FIXTURE_TABLES:
+        df = load_table(spark, sf01, name)
+        exprs = [F.col(c) for c, t in df.dtypes if t == "double"]
+        if name == "lineitem":
+            exprs.append(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+        for e in exprs:
+            bad = df.filter(
+                ~to_cents(e).eqNullSafe(F.round(e * 10000).cast("long"))
+            ).count()
+            assert bad == 0, (name, str(e), bad)
+            checked += 1
+    assert checked >= 7
+
+
+def test_cents_conversion_lives_in_math_fns():
+    """Every cents conversion goes through ``functions/math_fns.py:to_cents``,
+    so one function decides how a double becomes int64 cents."""
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "pigout_spark"
+    home = pkg / "functions" / "math_fns.py"
+    idiom = re.compile(r"F\.round\(.*\*\s*10000\b")
+    stray = [
+        f"{p.relative_to(pkg)}:{n}"
+        for p in sorted(pkg.rglob("*.py"))
+        if p != home
+        for n, line in enumerate(p.read_text().splitlines(), 1)
+        if idiom.search(line)
+    ]
+    assert not stray, stray

@@ -1317,3 +1317,51 @@ def test_script_round3_builtins_end_to_end(pig):
     assert row.g.group_1 == "Customer" and row.g.group_2.isdigit()
     assert hit.select("uid").distinct().count() == n
     assert pig.df("toks").count() == 2 * n  # 'Customer' + digits per name
+
+
+def test_round_keeps_type_and_value(pig, spark, tmp_path):
+    """ROUND compiles to the rint kernel only over a DOUBLE; over int,
+    bigint, float, decimal and double it gives what Spark's round gives,
+    value and type."""
+    uri = str(tmp_path / "nums.parquet")
+    spark.createDataFrame(
+        [
+            (7, 2**40 + 3, 2.5, "-2.500", 2.5),
+            (-7, -5, -0.5, "0.499", -2.5),
+            (0, 0, 1.4999, "-0.500", -0.3),
+            (None, None, None, None, 4503599627370495.5),
+            (1, 1, 3.5, "1.500", None),
+        ],
+        "i int, b bigint, f float, d string, x double",
+    ).selectExpr("i", "b", "f", "CAST(d AS DECIMAL(10,3)) AS d", "x").write.parquet(
+        uri
+    )
+    pig.execute(
+        f"t = LOAD '{uri}';"
+        " r = FOREACH t GENERATE ROUND(i) AS i, ROUND(b) AS b, ROUND(f) AS f,"
+        " ROUND(d) AS d, ROUND(x) AS x, ROUND(x * 10.0) AS x10,"
+        " ROUND(ROUND(x * 10.0) / 4.0) AS xn, CONCAT('round(x)', '') AS s;"
+    )
+    got = pig.df("r")
+    want = spark.read.parquet(uri).selectExpr(
+        "round(i) AS i", "round(b) AS b", "round(f) AS f", "round(d) AS d",
+        "round(x) AS x", "round(x * 10.0) AS x10",
+        "round(round(x * 10.0) / 4.0) AS xn", "concat('round(x)', '') AS s",
+    )
+    assert got.dtypes == want.dtypes
+    assert [tuple(r) for r in got.collect()] == [tuple(r) for r in want.collect()]
+    assert "-0.0" not in str(got.select("x").collect())
+    plan = got.drop("s")._jdf.queryExecution().optimizedPlan().toString()
+    assert "rint(" in plan
+    assert plan.count("round(") == 4  # int, bigint, float, decimal
+
+
+def test_round_of_random_keeps_one_rand(pig):
+    """The kernel repeats its argument, and every textual rand() gets its
+    own seed, so ROUND over a non-deterministic argument keeps round."""
+    pig.execute(
+        "r = LOAD 'region';"
+        " x = FOREACH r GENERATE r_name, ROUND(RANDOM() * 10) AS v;"
+    )
+    plan = pig.df("x")._jdf.queryExecution().analyzed().toString()
+    assert plan.count("rand(") == 1 and "round(" in plan

@@ -9,14 +9,11 @@ from __future__ import annotations
 
 import pytest
 
-import __spark_entry__ as entrymod
-
 
 def plan_of(spark, sf_dir, name: str) -> str:
     from pigout_spark import queries as qmod
 
-    fn = {**entrymod.queries(), **qmod.extra_queries()}[name]
-    df = fn(spark, sf_dir)
+    df = qmod.QUERIES[name].fn(spark, sf_dir)
     return df._jdf.queryExecution().executedPlan().toString()
 
 
@@ -501,3 +498,14 @@ def test_r14_late_op_plans(spark, sf_dir):
 
     wn = plan_of(spark, sf_dir, "x_winnow")
     assert "EvalPython" not in wn  # pure higher-order arrays
+
+
+def test_latin_q01_rounds_without_bigdecimal(spark, sf_dir):
+    """x_latin_q01's four ROUND(x * 10000.0) compile to the rint kernel,
+    so its scan stage builds no BigDecimal per row."""
+    from pigout_spark.queries import QUERIES
+
+    df = QUERIES["x_latin_q01"].fn.__wrapped__(spark, sf_dir)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "round(" not in plan
+    assert plan.count("rint(") >= 4

@@ -9,6 +9,7 @@ strategy) so the Spark round-trips stay bounded.
 
 from __future__ import annotations
 
+import math
 import re
 
 from hypothesis import given, settings, strategies as st
@@ -785,3 +786,50 @@ def test_msprt_properties(spark):
         traj = [r.p_av6 for r in out if r.p_av6 is not None]
         assert all(x >= y for x, y in zip(traj, traj[1:]))  # non-increasing
         assert check(traj), traj[-5:]
+
+
+#: ties, their neighbours, the largest fractional doubles, signed zeros,
+#: subnormals and the non-finite values
+_ROUND_EDGES = [
+    0.0, -0.0, 0.5, -0.5, 1.5, -1.5, 2.5, -2.5,
+    0.49999999999999994, -0.49999999999999994,
+    math.nextafter(0.5, 1.0), math.nextafter(-2.5, 0.0),
+    2.0**52 - 0.5, -(2.0**52 - 0.5), 2.0**52, 2.0**53 + 2.0,
+    5e-324, -5e-324, 2.2250738585072014e-308, 1e300, -1e300, -0.3,
+    math.nan, math.inf, -math.inf, None,
+]
+
+
+@settings(max_examples=1, deadline=None)
+@given(
+    st.lists(st.floats(width=64), min_size=200, max_size=200),
+    st.lists(st.integers(-(2**40), 2**40), min_size=100, max_size=100),
+)
+def test_round_half_up_matches_spark_round(spark, drawn, whole):
+    """The rint-based kernel, as a Column and as SQL text, equals
+    ``round(x, 0)`` bit for bit (the sign of zero included)."""
+    import struct
+
+    from pigout_spark.functions.math_fns import ROUND_HALF_UP_SQL, round_half_up
+
+    ties = [w + h for w in whole for h in (0.5, -0.5)]
+    ties += [math.nextafter(t, d) for t in ties[:50] for d in (-math.inf, math.inf)]
+    xs = _ROUND_EDGES + drawn + ties
+    rows = (
+        spark.createDataFrame([(x,) for x in xs], "x double")
+        .select(
+            "x",
+            F.round("x", 0).alias("want"),
+            round_half_up(F.col("x")).alias("col"),
+            F.expr(ROUND_HALF_UP_SQL("x")).alias("sql"),
+        )
+        .collect()
+    )
+
+    def bits(v):
+        if v is None or math.isnan(v):
+            return repr(v)
+        return struct.pack("<d", v)
+
+    bad = [r for r in rows if not (bits(r.want) == bits(r.col) == bits(r.sql))]
+    assert len(rows) == len(xs) and not bad, bad[:5]

@@ -8,8 +8,8 @@ import pytest
 import __spark_entry__ as entrymod
 from pigout_spark import queries as qmod
 
-#: driver-facing set + locally-verified extras (folded/subsumed queries)
-ALL_QUERIES = {**entrymod.queries(), **qmod.extra_queries()}
+#: every registered query: the driver window and the local extras
+ALL_QUERIES = {name: spec.fn for name, spec in qmod.QUERIES.items()}
 
 
 def test_entry_returns_rows(spark):

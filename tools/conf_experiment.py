@@ -27,12 +27,8 @@ QUERIES = [
 def main() -> None:
     overlay = json.loads(sys.argv[1]) if len(sys.argv) > 1 else {}
     sf_dir = "/root/testdata/sf0.1"
+    # get_spark applies the overlay at session start, static confs included
     spark = get_spark("conf-exp", extra_conf=overlay)
-    for k, v in overlay.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass
     from pigout_spark import queries as qmod
 
     _warmup(spark, sf_dir)

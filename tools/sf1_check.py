@@ -25,6 +25,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as entrymod  # noqa: E402
+from pigout_spark.queries import QUERIES  # noqa: E402
 from pigout_spark.session import get_spark  # noqa: E402
 from tools.selfcheck import TABLES, _normalize, value_hash  # noqa: E402
 
@@ -95,25 +96,13 @@ def main() -> int:
     only = set(sys.argv[4:])
 
     spark = get_spark("sf1-check")
-    qs = dict(entrymod.queries())
-    oracles = dict(entrymod.oracle_sql())
-    # explicitly-named queries may live outside the current driver
-    # window (r12: the sf3 sweep wants the heaviest data-proportional
-    # queries regardless of which round's window they anchor)
-    if only:
-        import pigout_spark.queries as qmod
-
-        for n in only:
-            if n not in qs and n in qmod.EXTRA_REGISTRY:
-                spec = qmod.EXTRA_REGISTRY[n]
-                qs[n] = spec.fn
-                if spec.sql:
-                    oracles[n] = spec.sql
+    # explicitly-named queries may live outside the driver window
+    names = [n for n in QUERIES if n in only] if only else list(entrymod.queries())
+    qs = {n: QUERIES[n].fn for n in names}
+    oracles = {n: QUERIES[n].sql for n in names if QUERIES[n].sql}
     results: dict[str, dict] = {}
     green = dnf = mismatch = 0
     for name, fn in qs.items():
-        if only and name not in only:
-            continue
         # Oracle FIRST (it carries the cap): when it DNFs there is no
         # digest to compare against, so collecting the Spark result to
         # the driver would be pure waste — at 10x data the near-dup
