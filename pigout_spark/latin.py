@@ -355,14 +355,32 @@ def _close_paren(s: str, j: int) -> int:
     return j
 
 
+def _quote_mask(s: str) -> list[bool]:
+    """``mask[i]`` is True when ``s[i]`` lies inside a single-quoted
+    string literal (backslash escapes honoured; the closing quote
+    counts as inside).  A call name found inside a literal is text, not
+    a call, and every rewrite that matches call names consults this."""
+    in_quote, escaped, mask = False, False, []
+    for ch in s:
+        mask.append(in_quote)
+        if escaped:
+            escaped = False
+        elif in_quote and ch == "\\":
+            escaped = True
+        elif ch == "'":
+            in_quote = not in_quote
+    return mask
+
+
 def _rewrite_functions(expr: str) -> str:
     """Rewrite Pig builtin calls (rename or template), innermost-first."""
     pattern = re.compile(r"\b([A-Za-z_][A-Za-z_0-9]*)\s*\(")
     while True:
         changed = False
+        quoted = _quote_mask(expr)
         for m in pattern.finditer(expr):
             name = m.group(1)
-            if name == name.lower():
+            if quoted[m.start()] or name == name.lower():
                 # all-lowercase = already Spark SQL (incl. our own rewrite
                 # output) — never re-rewrite, or substring() would gain an
                 # index shift on every pass.  Pig builtins are uppercase.
@@ -407,7 +425,7 @@ def _rewrite_size_typed(expr: str, dtypes: dict[str, str]) -> str:
     def sub(m: re.Match) -> str:
         col = m.group(1)
         dt = dtypes.get(col)
-        if dt is None:
+        if dt is None or quoted[m.start()]:
             return m.group(0)
         if dt == "string":
             return f"char_length({col})"
@@ -420,6 +438,7 @@ def _rewrite_size_typed(expr: str, dtypes: dict[str, str]) -> str:
             return f"if({col} IS NULL, NULL, {n})"
         return f"if({col} IS NULL, NULL, 1)"  # numeric/bool/timestamp → 1
 
+    quoted = _quote_mask(expr)
     return re.sub(r"\bSIZE\s*\(\s*(\w+)\s*\)", sub, expr, flags=re.IGNORECASE)
 
 
@@ -434,15 +453,7 @@ _ROUND_CALL = re.compile(r"(?<![\w.])round\s*\(")
 def _innermost_rounds(sql: str):
     """(start, end, argument) of each one-argument ``round(a)`` call in
     ``sql`` that is outside a string literal and holds no other round."""
-    in_quote, escaped, quoted = False, False, []
-    for ch in sql:
-        quoted.append(in_quote)
-        if escaped:
-            escaped = False
-        elif in_quote and ch == "\\":
-            escaped = True
-        elif ch == "'":
-            in_quote = not in_quote
+    quoted = _quote_mask(sql)
     for m in _ROUND_CALL.finditer(sql):
         if quoted[m.start()]:
             continue

@@ -4,7 +4,15 @@ All Pig joins are equi-joins; the USING clause picks a physical strategy.
 Spark mapping:
 
 - default           → df.join(...)           (Catalyst: SMJ/SHJ, AQE may
-                                               flip to broadcast at runtime)
+                                               flip to broadcast at runtime).
+                      An inner join whose input is itself a shuffle-free
+                      join output, against a side too large to
+                      broadcast, materializes that input first and
+                      broadcasts it when its stored bytes fit Spark's
+                      autoBroadcastJoinThreshold: Pig writes every
+                      join's output before the next job reads it, and
+                      Spark's estimate of a join output (the product of
+                      its inputs') never fits
 - USING 'replicated'→ broadcast(small side)  (fragment-replicate join)
 - USING 'skewed'    → per-join SALTED join for inner/left (the exact
                       analog of Pig's hot-key splitting, pinned in the
@@ -24,8 +32,11 @@ results, one shuffle instead of two.
 
 from __future__ import annotations
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from pigout_spark.pipeline.iterate import broadcast_threshold, decide, sized_checkpoint
 
 
 def _cond(left: DataFrame, right: DataFrame, on) -> Column | list[str]:
@@ -84,7 +95,68 @@ def join(
         # duplicate unmatched rows) — AQE runtime splitting covers it
     elif using is not None:
         raise ValueError(f"unknown join strategy {using!r}")
+    elif how == "inner":
+        left, right = _broadcast_sized_input(left, right)
     return left.join(right, _cond(left, right, on), how)
+
+
+def _broadcast_sized_input(left: DataFrame, right: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``(left, right)`` with an input that :func:`_sizable` admits
+    replaced by its eager checkpoint, broadcast when its stored bytes
+    are at most ``spark.sql.autoBroadcastJoinThreshold``.  Spark's
+    estimate of a join output is the product of its inputs' sizes, so
+    without this the next join shuffles the large side to meet it, and
+    adaptive execution turns that into a broadcast only after both
+    sides' shuffle stages have run.
+
+    100 TB: only a side that is one map stage (scans, filters,
+    projections, broadcast joins) is materialized; its extra cost is one
+    local write and read of that side, bounded by its own size, and it
+    is computed once, since the join reads the checkpoint.  The scan
+    of the checkpoint is projected to the columns the query uses, so
+    later shuffles stay as narrow as before.  A side larger than the
+    threshold gets today's plan over its checkpoint, and a threshold at
+    or below 0 sizes nothing."""
+    threshold = broadcast_threshold(left.sparkSession)
+    if threshold <= 0:
+        return left, right
+    sides = [left, right]
+    for i in (0, 1):
+        if _sizable(sides[i], (left, right)[1 - i], threshold):
+            cut, nbytes = sized_checkpoint(sides[i], "join: size input")
+            if decide("join input", nbytes, threshold):
+                sides[i] = F.broadcast(cut)
+                break
+            sides[i] = cut
+    return sides[0], sides[1]
+
+
+def _sizable(df: DataFrame, other: DataFrame, threshold: int) -> bool:
+    """``df`` is a join output that runs as one map stage, not
+    streaming, and ``other`` is estimated larger than ``threshold``."""
+    if df.isStreaming:
+        return False
+    if other._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() <= threshold:
+        return False
+    qe = df._jdf.queryExecution()
+    client = df.sparkSession.sparkContext._gateway._gateway_client
+    join = JavaClass("org.apache.spark.sql.catalyst.trees.TreePattern", client).JOIN()
+    if not qe.optimizedPlan().containsPattern(join):
+        return False
+    nodes = [qe.executedPlan()]
+    while nodes:
+        node = nodes.pop()
+        name = node.getClass().getSimpleName()
+        if name in ("ShuffleExchangeExec", "ShuffleQueryStageExec"):
+            return False
+        if name == "AdaptiveSparkPlanExec":
+            nodes.append(node.executedPlan())
+        elif name == "BroadcastQueryStageExec":
+            nodes.append(node.plan())
+        else:
+            kids = node.children()
+            nodes.extend(kids.apply(k) for k in range(kids.size()))
+    return True
 
 
 def cross(left: DataFrame, right: DataFrame, condition: Column | None = None) -> DataFrame:

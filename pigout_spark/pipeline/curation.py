@@ -20,7 +20,12 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from pigout_spark.pipeline.dedup import ws_tokens
-from pigout_spark.pipeline.iterate import checkpoint
+from pigout_spark.pipeline.iterate import (
+    broadcast_threshold,
+    checkpoint,
+    decide,
+    sized_checkpoint,
+)
 
 
 def _shingle_hashes(
@@ -219,16 +224,6 @@ def mixture_sample(
     )
 
 
-#: Vocabulary-type ceiling for broadcasting the DSIR weight table
-#: (r15, ADVICE r14).  A weight row is a token string + one double
-#: (~50-100 B framed), so 5M types is a few hundred MB — comfortably
-#: inside driver/executor memory on any reasonable deployment and far
-#: under Spark's 8 GB / 512M-row broadcast hard cap, while real noisy
-#: web vocabularies (10^8+) correctly fall back to the shuffle-hash
-#: path.  A ROW bound, not a local[32] byte tuning.
-_DSIR_BROADCAST_MAX_TYPES = 5_000_000
-
-
 def importance_weights(
     corpus: DataFrame,
     target: DataFrame,
@@ -303,30 +298,25 @@ def importance_weights(
     # double for every occurrence of a type, so each doc's sum is over
     # the same multiset of values — bit-compatible with the previous
     # shape (and the DuckDB twin) under the query's ROUND-6 contract.
-    wt = checkpoint(
+    # Broadcast the WEIGHT side explicitly: it is token-TYPE-sized
+    # (vocabulary; Heaps-law-bounded at any corpus scale, the bigram_lm
+    # model-side convention).  Unhinted, the planner's estimate at bench
+    # scale broadcast the exploded token STREAM, the side that grows
+    # with data.  The package's one broadcast rule (iterate.decide)
+    # applies: the table is taken as an eager checkpoint, in the one job
+    # its first consumer would have run anyway, and broadcast when its
+    # stored bytes are at most autoBroadcastJoinThreshold.  A noisy
+    # web-scale vocabulary (typos, URLs, numbers: 10^8..10^9 types) is
+    # larger, and the join takes SHUFFLE_HASH with the weight table as
+    # build side (a per-partition vocabulary slice), never the
+    # planner's default.
+    wt, nbytes = sized_checkpoint(
         cf.join(tf_, "__tok", "left")
         .crossJoin(F.broadcast(scalars))
-        .select("__tok", lr.alias("__lr"))
+        .select("__tok", lr.alias("__lr")),
+        "importance_weights: size weights",
     )
-    # r14 (guide §3.1): broadcast the WEIGHT side explicitly — it is
-    # token-TYPE-sized (vocabulary; Heaps-law-bounded at any corpus
-    # scale — the bigram_lm model-side convention, and that table is
-    # strictly larger).  Without the hint the planner's estimate at
-    # bench scale broadcast the exploded token STREAM (the side that
-    # grows with data — plan-audited BuildLeft on the Generate), which
-    # inverts exactly the side that stays small at 100 TB.
-    # r15 (ADVICE r14 curation.py:309): the broadcast is GUARDED by the
-    # actual type count — a noisy web-scale whitespace vocabulary
-    # (typos, URLs, numbers) can reach 10^8..10^9 types, past Spark's
-    # 8 GB / 512M-row broadcast hard cap.  The count is measured on the
-    # materialized checkpoint (its first consumer would have paid that
-    # materialization anyway, so the probe adds one cheap
-    # read-the-blocks job, never a stats guess — LogicalRDD carries no
-    # usable estimate).  Past the bound the join degrades to
-    # SHUFFLE_HASH with the weight table as build side (per-partition
-    # vocab slice — bounded), never to the planner's default, which is
-    # what broadcast the token stream in the first place.
-    if wt.count() <= _DSIR_BROADCAST_MAX_TYPES:
+    if decide("importance_weights", nbytes, broadcast_threshold(corpus.sparkSession)):
         wt = F.broadcast(wt)
     else:
         wt = wt.hint("shuffle_hash")

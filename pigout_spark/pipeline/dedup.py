@@ -27,7 +27,11 @@ from pyspark.sql import functions as F
 MINHASH_P = 2_147_483_647
 
 
-from pigout_spark.pipeline.iterate import checkpoint, fixpoint  # noqa: E402
+from pigout_spark.pipeline.iterate import (  # noqa: E402
+    checkpoint,
+    fixpoint,
+    job_description,
+)
 from pigout_spark.plans.partitioning import pin_partitions as _pin_partitions  # noqa: E402
 
 
@@ -853,9 +857,7 @@ def dedup_clusters(
     # generation twice.  No distinct: min-label CC is idempotent to
     # parallel edges.  Partitioned on the join key before the
     # checkpoint, so every round's request join reads it in place.
-    prev_desc = sc.getLocalProperty("spark.job.description")
-    try:
-        sc.setJobDescription("dedup_clusters round 0")
+    with job_description(sc, "dedup_clusters round 0"):
         edges = checkpoint(
             pairs.select(
                 F.explode(
@@ -927,8 +929,6 @@ def dedup_clusters(
         return state.select(
             F.col("id").alias(out_id), F.col("lbl").alias(out_root)
         )
-    finally:
-        sc.setLocalProperty("spark.job.description", prev_desc)
 
 
 def retain_per_cluster(

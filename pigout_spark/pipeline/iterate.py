@@ -1,9 +1,12 @@
-"""The package's one checkpoint, and one driver for the iterative loops
-of the pipeline operators.
+"""The package's one checkpoint, its one broadcast decision, and one
+driver for the iterative loops of the pipeline operators.
 
 Every checkpoint the package takes goes through :func:`checkpoint`, so
 one function decides its storage level, its size estimate and the
-partitioning it declares.
+partitioning it declares.  Every broadcast decided on a measured size
+goes through :func:`decide`, against Spark's own
+``spark.sql.autoBroadcastJoinThreshold``; :func:`sized_checkpoint` takes
+the measurement.
 
 :func:`fixpoint` runs a step function over a state of one DataFrame or a
 tuple of them.  It owns what every loop used to write out by hand: the
@@ -44,11 +47,14 @@ dedup_clusters      1      the probe is the first action on each round's
 
 from __future__ import annotations
 
+import gc
 import logging
-from typing import Callable
+from contextlib import contextmanager
+from typing import Callable, Iterator
 
 from py4j.java_gateway import JavaClass
-from pyspark.sql import DataFrame
+from pyspark import SparkContext
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
 log = logging.getLogger(__name__)
@@ -57,10 +63,12 @@ log = logging.getLogger(__name__)
 State = DataFrame | tuple
 
 
-def checkpoint(df: DataFrame) -> DataFrame:
-    """``df`` cut from its lineage: a lazy DISK_ONLY local checkpoint
-    that keeps the hash partitioning ``df``'s plan produced, and drops
-    the optimizer size estimate of a plan with a join.
+def checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
+    """``df`` cut from its lineage: a DISK_ONLY local checkpoint, lazy
+    unless ``eager``, that keeps the hash partitioning ``df``'s plan
+    produced, and drops the optimizer size estimate of a plan with a
+    join.  An eager checkpoint computes and stores every partition
+    before it returns, in one job.
 
     DISK_ONLY: a checkpoint block is the only copy of its data, so the
     block manager can never evict it, and memory-first checkpoints of a
@@ -96,7 +104,7 @@ def checkpoint(df: DataFrame) -> DataFrame:
     Spark canonicalizes a declared partitioning with its attribute ids,
     so two self-join copies of one such checkpoint no longer compare
     equal, and exchanges above them are not reused."""
-    cut = df.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    cut = df.localCheckpoint(eager=eager, storageLevel=StorageLevel.DISK_ONLY)
     rel = cut._jdf.queryExecution().logical()  # a LogicalRDD
     session, estimate, constraints = (rel.otherCopyArgs().apply(i) for i in range(3))
     # output, rdd, outputPartitioning, outputOrdering, isStreaming, stream
@@ -118,6 +126,65 @@ def checkpoint(df: DataFrame) -> DataFrame:
     rel = rel.copy(*fields, session, estimate, constraints)
     dataset = JavaClass("org.apache.spark.sql.classic.Dataset", client)
     return DataFrame(dataset.ofRows(session, rel), cut.sparkSession)
+
+
+@contextmanager
+def job_description(sc: SparkContext, label: str) -> Iterator[None]:
+    """Run the block's Spark jobs under the job description ``label``
+    and restore the caller's description on exit, also on raise."""
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
+
+
+def sized_checkpoint(df: DataFrame, label: str) -> tuple[DataFrame, int]:
+    """An eager :func:`checkpoint` of ``df``, taken in one job under the
+    job description ``label``, and the bytes its blocks hold on disk.
+
+    The job runs on a copy of ``df``'s plan, so ``df`` keeps a plan
+    that has not run: the broadcasts the job builds belong to the copy,
+    which nothing needs once this returns.  The copy's py4j proxies are
+    cyclic garbage (a proxy caches the methods called on it, and each
+    points back), so a young-generation collection hands them back to
+    py4j here.  Without it the copy's plan and its broadcasts stayed in
+    the driver until the next full collection: after a ``q03_join_agg``
+    run at sf1, a 5 MB broadcast relation of its customer side and
+    about 10 MB of driver heap in all.
+
+    The bytes are read from the block manager master, which every
+    executor tells of a block before the task that wrote it ends, so
+    they are complete when the job returns, and reading them starts no
+    job.  ``SparkContext.getRDDStorageInfo`` is not used: it reads the
+    status store, which a listener fills after the job has ended."""
+    sc = df.sparkSession.sparkContext
+    with job_description(sc, label):
+        cut = checkpoint(df.select("*"), eager=True)
+    gc.collect(1)
+    rdd_id = cut._jdf.queryExecution().logical().rdd().id()
+    master = sc._jvm.org.apache.spark.SparkEnv.get().blockManager().master()
+    return cut, sum(s.diskUsedByRdd(rdd_id) for s in master.getStorageStatus())
+
+
+def broadcast_threshold(spark: SparkSession) -> int:
+    """Spark's ``spark.sql.autoBroadcastJoinThreshold`` in bytes; at or
+    below 0 no relation is broadcast."""
+    return spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+
+
+def decide(name: str, measured: int, threshold: int) -> bool:
+    """The package's one broadcast rule: broadcast a relation whose
+    ``measured`` bytes are at most ``threshold``, and none when the
+    threshold is at or below 0, as Spark's own planner does.  Logs the
+    gate's ``name``, both numbers and the branch taken at DEBUG."""
+    small = 0 < threshold and measured <= threshold
+    log.debug(
+        "%s: %d bytes, threshold %d: %s",
+        name, measured, threshold, "broadcast" if small else "no broadcast",
+    )
+    return small
 
 
 def fixpoint(
@@ -143,10 +210,8 @@ def fixpoint(
     description is restored on return and on raise."""
     many = isinstance(state, tuple)
     sc = (state[0] if many else state).sparkSession.sparkContext
-    prev_desc = sc.getLocalProperty("spark.job.description")
     done = 0
-    try:
-        sc.setJobDescription(f"{label} round 0")
+    with job_description(sc, f"{label} round 0"):
         while converged is None or not converged(state):
             if done >= rounds:
                 if converged is None:
@@ -161,5 +226,3 @@ def fixpoint(
                 state = tuple(map(checkpoint, state)) if many else checkpoint(state)
         log.debug("%s ran %d rounds", label, done)
         return state
-    finally:
-        sc.setLocalProperty("spark.job.description", prev_desc)

@@ -39,6 +39,24 @@ def test_translate_expr_rewrites():
     assert r"'\\s+'" in got_1arg and "slice(" in got_1arg
 
 
+def test_builtin_names_inside_string_literals_stay_text(spark):
+    """A Pig builtin name followed by ``(`` inside a string literal is
+    text: neither the rename pass, the templates nor the typed SIZE
+    dispatch may touch it."""
+    assert (
+        translate_expr("CONCAT('ROUND(x) and UPPER(y)', s)")
+        == "concat('ROUND(x) and UPPER(y)', s)"
+    )
+    lit = "'say TOKENIZE(it) or SIZE(s)'"
+    got = translate_expr(f"CONCAT({lit}, UPPER(s))", dtypes={"s": "string"})
+    assert got == f"concat({lit}, upper(s))"
+    assert translate_expr("SIZE(s)", dtypes={"s": "string"}) == "char_length(s)"
+    row = spark.range(1).selectExpr(
+        f"{got.replace('upper(s)', 'upper(cast(id as string))')} AS v"
+    ).first()
+    assert row.v == "say TOKENIZE(it) or SIZE(s)0"
+
+
 def test_load_filter_foreach_store_roundtrip(pig, spark, sf_dir):
     pig.execute(
         """

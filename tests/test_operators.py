@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import logging
+import re
+from contextlib import contextmanager
+
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -30,6 +34,163 @@ def test_join_strategies_same_result(spark):
     assert sorted(join(a, b, "k", using="skewed").collect()) == base
     assert sorted(join(a, b, "k", using="merge").collect()) == base
     assert len(base) == 2
+
+
+@contextmanager
+def _broadcast_threshold(spark, value):
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(value))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _tpch(spark, sf_dir):
+    """BUILDING customers, orders and lineitem of the fixture; at
+    sf0.001 they hold 5.1 kB, 36 kB and 117 kB by Spark's estimate."""
+    read = lambda name: spark.read.parquet(f"{sf_dir}/{name}.parquet")  # noqa: E731
+    c = read("customer").filter(F.col("c_mktsegment") == "BUILDING")
+    return c, read("orders"), read("lineitem")
+
+
+def _sized_calls(monkeypatch):
+    """Record the inputs the default join materializes to size them."""
+    from pigout_spark.operators import joins
+
+    calls = []
+    real = joins.sized_checkpoint
+
+    def record(df, label):
+        calls.append(label)
+        return real(df, label)
+
+    monkeypatch.setattr(joins, "sized_checkpoint", record)
+    return calls
+
+
+def _rows(df):
+    return sorted(df.select("l_orderkey", "l_linenumber", "o_custkey").collect())
+
+
+def _static_plan(df):
+    return re.sub(r"plan_id=\d+", "", df._jdf.queryExecution().executedPlan().toString())
+
+
+def test_join_broadcasts_a_small_join_output(spark, sf_dir, monkeypatch, caplog):
+    """An inner join whose input is a shuffle-free join output, against
+    an input estimated above autoBroadcastJoinThreshold, reads that
+    input from an eager checkpoint taken under its own job description,
+    and broadcasts it: its stored bytes fit the threshold."""
+    from pigout_spark.pipeline import iterate
+
+    c, o, li = _tpch(spark, sf_dir)
+    keys = (["o_orderkey"], ["l_orderkey"])
+    with _broadcast_threshold(spark, -1):
+        want = _rows(join(join(c, o, (["c_custkey"], ["o_custkey"])), li, keys))
+    calls = _sized_calls(monkeypatch)
+    seen = []
+    real = iterate.checkpoint
+
+    def spy(df, eager=False):
+        seen.append(spark.sparkContext.getLocalProperty("spark.job.description"))
+        return real(df, eager)
+
+    monkeypatch.setattr(iterate, "checkpoint", spy)
+    caplog.set_level(logging.DEBUG, logger=iterate.__name__)
+    spark.sparkContext.setJobDescription("outer")
+    try:
+        with _broadcast_threshold(spark, 64 << 10):
+            out = join(join(c, o, (["c_custkey"], ["o_custkey"])), li, keys)
+        assert spark.sparkContext.getLocalProperty("spark.job.description") == "outer"
+    finally:
+        spark.sparkContext.setJobDescription(None)
+    assert calls == ["join: size input"] and seen == ["join: size input"]
+    (line,) = [r.getMessage() for r in caplog.records if r.name == iterate.__name__]
+    assert re.fullmatch(r"join input: \d+ bytes, threshold 65536: broadcast", line)
+    plan = _static_plan(out)
+    assert re.search(r"BroadcastExchange[^\n]*\n(.*\n)*?.*Scan ExistingRDD", plan)
+    assert "SortMergeJoin" not in plan
+    assert _rows(out) == want and len(want) > 0
+
+
+def test_join_sized_input_over_threshold_gets_no_hint(spark, sf_dir, monkeypatch):
+    """Below the sized input's stored bytes the join is planned unhinted
+    over the checkpoint, with the same rows."""
+    c, o, li = _tpch(spark, sf_dir)
+    co = join(o, c, (["o_custkey"], ["c_custkey"]), using="replicated")
+    keys = (["o_orderkey"], ["l_orderkey"])
+    with _broadcast_threshold(spark, -1):
+        want = _rows(join(co, li, keys))
+    calls = _sized_calls(monkeypatch)
+    with _broadcast_threshold(spark, 1024):
+        out = join(co, li, keys)
+        plan = _static_plan(out)
+    assert calls == ["join: size input"]
+    assert "Scan ExistingRDD" in plan and "BroadcastExchange" not in plan
+    assert _rows(out) == want
+
+
+def test_join_sizing_off_at_threshold_minus_one_starts_no_job(spark, sf_dir):
+    c, o, li = _tpch(spark, sf_dir)
+    sc = spark.sparkContext
+    sc.setJobGroup("join-sizing-off", "building a join")
+    try:
+        with _broadcast_threshold(spark, -1):
+            co = join(o, c, (["o_custkey"], ["c_custkey"]), using="replicated")
+            out = join(co, li, (["o_orderkey"], ["l_orderkey"]))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("join-sizing-off")) == []
+    assert "Scan ExistingRDD" not in _static_plan(out)
+
+
+def test_join_never_materializes_an_input_with_a_shuffle(spark, sf_dir, monkeypatch):
+    """A join over a groupBy is more than one map stage: it is joined
+    as it is."""
+    c, o, li = _tpch(spark, sf_dir)
+    keys = (["o_orderkey"], ["l_orderkey"])
+    per_cust = o.groupBy("o_custkey").agg(F.max("o_orderkey").alias("o_orderkey"))
+    side = join(per_cust, c, (["o_custkey"], ["c_custkey"]), using="replicated")
+    co = join(o, c, (["o_custkey"], ["c_custkey"]), using="replicated")
+    calls = _sized_calls(monkeypatch)
+    with _broadcast_threshold(spark, 64 << 10):
+        join(co, li, keys)  # the same join without the groupBy is sized
+        assert calls == ["join: size input"]
+        plan = _static_plan(join(side, li, keys))
+    assert calls == ["join: size input"] and "Scan ExistingRDD" not in plan
+
+
+def test_join_sizes_nothing_when_the_other_input_fits(spark, sf_dir, monkeypatch):
+    """At the default 10 MB threshold the fixture's lineitem already
+    fits, so Spark's own planner decides and nothing is materialized."""
+    c, o, li = _tpch(spark, sf_dir)
+    calls = _sized_calls(monkeypatch)
+    out = join(join(c, o, (["c_custkey"], ["o_custkey"])), li, (["o_orderkey"], ["l_orderkey"]))
+    assert calls == [] and "Scan ExistingRDD" not in _static_plan(out)
+
+
+def test_outer_and_using_joins_plan_as_before(spark, sf_dir, monkeypatch):
+    """Only an inner join without USING is sized: outer joins and the
+    replicated, merge and skewed strategies plan exactly as the plain
+    Spark join (or the salted join) they always were."""
+    c, o, li = _tpch(spark, sf_dir)
+    co = join(c, o, (["c_custkey"], ["o_custkey"]))
+    cond = co["o_orderkey"] == li["l_orderkey"]
+    calls = _sized_calls(monkeypatch)
+    with _broadcast_threshold(spark, 64 << 10):
+        for how in ("left", "right", "full"):
+            got = join(co, li, (["o_orderkey"], ["l_orderkey"]), how=how)
+            assert _static_plan(got) == _static_plan(co.join(li, cond, how))
+        got = join(co, li, (["o_orderkey"], ["l_orderkey"]), using="replicated")
+        assert _static_plan(got) == _static_plan(co.join(F.broadcast(li), cond))
+        got = join(co, li, (["o_orderkey"], ["l_orderkey"]), using="merge")
+        assert _static_plan(got) == _static_plan(co.hint("merge").join(li, cond))
+        got = join(co, li, (["o_orderkey"], ["l_orderkey"]), using="skewed")
+        assert "Scan ExistingRDD" not in _static_plan(got)
+    assert calls == []
 
 
 def test_outer_join_null_keys_do_not_match(spark):

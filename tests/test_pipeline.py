@@ -1462,6 +1462,41 @@ def test_mixture_sample_degenerate_domains(spark):
     assert none.count() == 0
 
 
+def test_importance_weights_broadcast_follows_stored_bytes(spark, caplog):
+    """The DSIR weight table is broadcast when its stored bytes fit
+    autoBroadcastJoinThreshold and joined by SHUFFLE_HASH otherwise,
+    with the same weights either way."""
+    import logging
+
+    from pigout_spark.pipeline import iterate
+    from pigout_spark.pipeline.curation import importance_weights
+
+    corpus = spark.createDataFrame(
+        [(1, "a b c a"), (2, "b d"), (3, "e f e")], ["doc_id", "text"]
+    )
+    target = spark.createDataFrame([(9, "a b b d")], ["doc_id", "text"])
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    caplog.set_level(logging.DEBUG, logger=iterate.__name__)
+    got = {}
+    try:
+        for threshold in (old, "1"):
+            spark.conf.set(key, threshold)
+            out = importance_weights(corpus, target)
+            got[threshold] = (
+                out._jdf.queryExecution().executedPlan().toString(),
+                sorted(out.collect()),
+            )
+    finally:
+        spark.conf.set(key, old)
+    lines = [r.getMessage() for r in caplog.records if r.name == iterate.__name__]
+    assert [line.rsplit(": ", 1)[1] for line in lines] == ["broadcast", "no broadcast"]
+    assert all(line.startswith("importance_weights: ") for line in lines)
+    (big_plan, big), (small_plan, small) = got[old], got["1"]
+    assert "ShuffledHashJoin" in small_plan and "ShuffledHashJoin" not in big_plan
+    assert small == big and len(big) == 3
+
+
 def test_importance_weights_target_equals_corpus(spark):
     """Degenerate DSIR: target == corpus ⇒ the two models coincide and
     every log-weight is ~0 (smoothing included)."""

@@ -24,6 +24,45 @@ def test_q05_broadcasts_small_dims(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
+def _exchanged_scans(plan, table: str) -> list[bool]:
+    """For each scan of ``table`` in a physical plan: whether an
+    exchange, shuffle or broadcast, lies between it and the join that
+    reads it."""
+    out, nodes = [], [(plan, False)]
+    while nodes:
+        node, exchanged = nodes.pop()
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            nodes.append((node.executedPlan(), exchanged))
+            continue
+        exchanged = exchanged or name.endswith("ExchangeExec")
+        if name.endswith("JoinExec"):
+            exchanged = False
+        if name == "FileSourceScanExec" and f"/{table}.parquet" in node.toString():
+            out.append(exchanged)
+        kids = node.children()
+        nodes.extend((kids.apply(i), exchanged) for i in range(kids.size()))
+    return out
+
+
+def test_q03_streams_lineitem_past_a_broadcast_join_output(spark, sf_dir):
+    """q03's customer ⋈ orders side is a shuffle-free join output that
+    is sized and broadcast, so the static plan streams lineitem into
+    the join, with neither a shuffle nor a broadcast of it.  The
+    threshold sits between that side's stored bytes (3.8 kB) and
+    lineitem's estimate (117 kB), as 10 MB does at sf1."""
+    from pigout_spark import queries as qmod
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(64 << 10))
+    try:
+        df = qmod.QUERIES["q03_join_agg"].fn.__wrapped__(spark, sf_dir)
+    finally:
+        spark.conf.set(key, old)
+    assert _exchanged_scans(df._jdf.queryExecution().executedPlan(), "lineitem") == [False]
+
+
 def test_q09_topk_avoids_global_sort(spark, sf_dir):
     # ORDER+LIMIT must plan TakeOrderedAndProject (per-partition top-k),
     # not a full Sort — Pig's LimitOptimizer equivalent.
