@@ -172,7 +172,10 @@ def memo(spark: SparkSession, key: tuple, build: Callable[[], object]) -> object
     that, so REWRITING a fixture path mid-application yields stale reads
     until ``invalidate_table_cache()`` is called (Spark's own ``REFRESH
     TABLE`` has the identical contract).  Tests that rewrite fixtures must
-    invalidate explicitly."""
+    invalidate explicitly.  A kept plan with a default JOIN also keeps
+    the broadcast hint ``operators/joins.py`` chose on the rows it
+    counted at build; it holds no data, and the hint changes the plan,
+    not the result."""
     app = spark.sparkContext.applicationId
     if app not in _MEMO:
         _MEMO.clear()

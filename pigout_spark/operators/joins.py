@@ -7,10 +7,10 @@ Spark mapping:
                                                flip to broadcast at runtime).
                       An inner join whose input is itself a shuffle-free
                       join output, against a side too large to
-                      broadcast, materializes that input first and
-                      broadcasts it when its stored bytes fit Spark's
-                      autoBroadcastJoinThreshold: Pig writes every
-                      join's output before the next job reads it, and
+                      broadcast, counts that input's rows first and
+                      broadcasts it when its counted bytes fit Spark's
+                      autoBroadcastJoinThreshold: Pig knows every join
+                      output's size before the next job reads it, and
                       Spark's estimate of a join output (the product of
                       its inputs') never fits
 - USING 'replicated'→ broadcast(small side)  (fragment-replicate join)
@@ -32,11 +32,10 @@ results, one shuffle instead of two.
 
 from __future__ import annotations
 
-from py4j.java_gateway import JavaClass
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from pigout_spark.pipeline.iterate import broadcast_threshold, decide, sized_checkpoint
+from pigout_spark.pipeline.iterate import broadcast_threshold, counted_bytes, decide, has_join
 
 
 def _cond(left: DataFrame, right: DataFrame, on) -> Column | list[str]:
@@ -101,33 +100,37 @@ def join(
 
 
 def _broadcast_sized_input(left: DataFrame, right: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """``(left, right)`` with an input that :func:`_sizable` admits
-    replaced by its eager checkpoint, broadcast when its stored bytes
-    are at most ``spark.sql.autoBroadcastJoinThreshold``.  Spark's
-    estimate of a join output is the product of its inputs' sizes, so
-    without this the next join shuffles the large side to meet it, and
-    adaptive execution turns that into a broadcast only after both
-    sides' shuffle stages have run.
+    """``(left, right)`` with a broadcast hint on an input that
+    :func:`_sizable` admits and whose counted bytes are at most
+    ``spark.sql.autoBroadcastJoinThreshold``.  Spark's estimate of a
+    join output is the product of its inputs' sizes, so without this
+    the next join shuffles the large side to meet it, and adaptive
+    execution turns that into a broadcast only after both sides' shuffle
+    stages have run.
 
     100 TB: only a side that is one map stage (scans, filters,
-    projections, broadcast joins) is materialized; its extra cost is one
-    local write and read of that side, bounded by its own size, and it
-    is computed once, since the join reads the checkpoint.  The scan
-    of the checkpoint is projected to the columns the query uses, so
-    later shuffles stay as narrow as before.  A side larger than the
-    threshold gets today's plan over its checkpoint, and a threshold at
-    or below 0 sizes nothing."""
+    projections, broadcast joins) is counted.  The count reads only the
+    columns its filters and join keys need, stops one row past the
+    threshold (:func:`counted_bytes`), and writes and keeps nothing.  A
+    side that fits is broadcast from its own plan, which column pruning
+    narrows to the columns the query uses, so it is computed twice:
+    once counted, once built into the broadcast.  A side that does not
+    fit gets today's plan, and the count of the few partitions that
+    showed it too large is the whole cost of having looked.  Nothing is
+    stored, so a lost executor recomputes the join as before, and a
+    memoized query holds a plan over its sources, with the broadcast
+    decision taken on the data it first counted.  A threshold at or
+    below 0 sizes nothing and starts no job."""
     threshold = broadcast_threshold(left.sparkSession)
-    if threshold <= 0:
+    if threshold is None:
         return left, right
     sides = [left, right]
     for i in (0, 1):
-        if _sizable(sides[i], (left, right)[1 - i], threshold):
-            cut, nbytes = sized_checkpoint(sides[i], "join: size input")
-            if decide("join input", nbytes, threshold):
-                sides[i] = F.broadcast(cut)
-                break
-            sides[i] = cut
+        if _sizable(sides[i], sides[1 - i], threshold) and decide(
+            "join input", counted_bytes(sides[i], threshold, "join: size input"), threshold
+        ):
+            sides[i] = F.broadcast(sides[i])
+            break
     return sides[0], sides[1]
 
 
@@ -138,12 +141,9 @@ def _sizable(df: DataFrame, other: DataFrame, threshold: int) -> bool:
         return False
     if other._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() <= threshold:
         return False
-    qe = df._jdf.queryExecution()
-    client = df.sparkSession.sparkContext._gateway._gateway_client
-    join = JavaClass("org.apache.spark.sql.catalyst.trees.TreePattern", client).JOIN()
-    if not qe.optimizedPlan().containsPattern(join):
+    if not has_join(df):
         return False
-    nodes = [qe.executedPlan()]
+    nodes = [df._jdf.queryExecution().executedPlan()]
     while nodes:
         node = nodes.pop()
         name = node.getClass().getSimpleName()

@@ -5,8 +5,9 @@ Every checkpoint the package takes goes through :func:`checkpoint`, so
 one function decides its storage level, its size estimate and the
 partitioning it declares.  Every broadcast decided on a measured size
 goes through :func:`decide`, against Spark's own
-``spark.sql.autoBroadcastJoinThreshold``; :func:`sized_checkpoint` takes
-the measurement.
+``spark.sql.autoBroadcastJoinThreshold``; :func:`sized_checkpoint`
+measures a relation the query stores anyway, and :func:`counted_bytes`
+one it does not.
 
 :func:`fixpoint` runs a step function over a state of one DataFrame or a
 tuple of them.  It owns what every loop used to write out by hand: the
@@ -47,7 +48,6 @@ dedup_clusters      1      the probe is the first action on each round's
 
 from __future__ import annotations
 
-import gc
 import logging
 from contextlib import contextmanager
 from typing import Callable, Iterator
@@ -55,6 +55,7 @@ from typing import Callable, Iterator
 from py4j.java_gateway import JavaClass
 from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 log = logging.getLogger(__name__)
@@ -120,8 +121,7 @@ def checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
     ):
         fields[2] = part
     client = cut.sparkSession.sparkContext._gateway._gateway_client
-    join = JavaClass("org.apache.spark.sql.catalyst.trees.TreePattern", client).JOIN()
-    if qe.optimizedPlan().containsPattern(join):
+    if has_join(df):
         estimate = JavaClass("scala.Option", client).empty()
     rel = rel.copy(*fields, session, estimate, constraints)
     dataset = JavaClass("org.apache.spark.sql.classic.Dataset", client)
@@ -142,17 +142,8 @@ def job_description(sc: SparkContext, label: str) -> Iterator[None]:
 
 def sized_checkpoint(df: DataFrame, label: str) -> tuple[DataFrame, int]:
     """An eager :func:`checkpoint` of ``df``, taken in one job under the
-    job description ``label``, and the bytes its blocks hold on disk.
-
-    The job runs on a copy of ``df``'s plan, so ``df`` keeps a plan
-    that has not run: the broadcasts the job builds belong to the copy,
-    which nothing needs once this returns.  The copy's py4j proxies are
-    cyclic garbage (a proxy caches the methods called on it, and each
-    points back), so a young-generation collection hands them back to
-    py4j here.  Without it the copy's plan and its broadcasts stayed in
-    the driver until the next full collection: after a ``q03_join_agg``
-    run at sf1, a 5 MB broadcast relation of its customer side and
-    about 10 MB of driver heap in all.
+    job description ``label``, and the bytes its blocks hold on disk:
+    the measure of a relation the query stores anyway.
 
     The bytes are read from the block manager master, which every
     executor tells of a block before the task that wrote it ends, so
@@ -161,27 +152,56 @@ def sized_checkpoint(df: DataFrame, label: str) -> tuple[DataFrame, int]:
     status store, which a listener fills after the job has ended."""
     sc = df.sparkSession.sparkContext
     with job_description(sc, label):
-        cut = checkpoint(df.select("*"), eager=True)
-    gc.collect(1)
+        cut = checkpoint(df, eager=True)
     rdd_id = cut._jdf.queryExecution().logical().rdd().id()
     master = sc._jvm.org.apache.spark.SparkEnv.get().blockManager().master()
     return cut, sum(s.diskUsedByRdd(rdd_id) for s in master.getStorageStatus())
 
 
-def broadcast_threshold(spark: SparkSession) -> int:
-    """Spark's ``spark.sql.autoBroadcastJoinThreshold`` in bytes; at or
-    below 0 no relation is broadcast."""
-    return spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+def counted_bytes(df: DataFrame, threshold: int, label: str) -> int:
+    """Spark's size of ``df`` with its rows counted, under the job
+    description ``label``: the measure of a relation the query does not
+    store.  The bytes are the row count times Spark's own size of a row
+    without column statistics (``EstimationUtils.getSizePerRow``: 8
+    bytes plus each column's default size).
+
+    The count stops one row past ``threshold`` bytes: it is a ``LIMIT``
+    collected the way Spark collects one, a partition first and then
+    more until it has enough rows, so a relation far larger than the
+    threshold costs the few partitions that yield that many rows, not a
+    pass over it.  It reads only the columns ``df``'s filters and join
+    keys need, writes and keeps nothing, and brings at most that many
+    rows of one constant to the driver: no more rows than the broadcast
+    it decides on would hold."""
+    width = 8 + df._jdf.schema().defaultSize()
+    probe = df.select(F.lit(1)).limit(threshold // width + 1)
+    with job_description(df.sparkSession.sparkContext, label):
+        return len(probe._jdf.collect()) * width
 
 
-def decide(name: str, measured: int, threshold: int) -> bool:
+def has_join(df: DataFrame) -> bool:
+    """``df``'s optimized plan holds a join."""
+    client = df.sparkSession.sparkContext._gateway._gateway_client
+    join = JavaClass("org.apache.spark.sql.catalyst.trees.TreePattern", client).JOIN()
+    return df._jdf.queryExecution().optimizedPlan().containsPattern(join)
+
+
+def broadcast_threshold(spark: SparkSession) -> int | None:
+    """Spark's ``spark.sql.autoBroadcastJoinThreshold`` in bytes, or
+    None when it is at or below 0 and Spark broadcasts no relation by
+    its size."""
+    threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    return threshold if threshold > 0 else None
+
+
+def decide(name: str, measured: int, threshold: int | None) -> bool:
     """The package's one broadcast rule: broadcast a relation whose
-    ``measured`` bytes are at most ``threshold``, and none when the
-    threshold is at or below 0, as Spark's own planner does.  Logs the
+    ``measured`` bytes are at most ``threshold`` (from
+    :func:`broadcast_threshold`), and none when it is None.  Logs the
     gate's ``name``, both numbers and the branch taken at DEBUG."""
-    small = 0 < threshold and measured <= threshold
+    small = threshold is not None and measured <= threshold
     log.debug(
-        "%s: %d bytes, threshold %d: %s",
+        "%s: %d bytes, threshold %s: %s",
         name, measured, threshold, "broadcast" if small else "no broadcast",
     )
     return small

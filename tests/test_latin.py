@@ -494,6 +494,47 @@ def test_nary_join(pig):
     assert pig.df("j3").count() >= 0
 
 
+def test_nary_join_broadcasts_a_sized_join_output(pig, spark, monkeypatch):
+    """A 3-way JOIN's second join meets lineitem with the first join's
+    output; with the threshold between their sizes that output is
+    counted and broadcast, and its alias-qualified keys still resolve,
+    to the same rows."""
+    from pigout_spark.operators import joins
+
+    pig.execute(
+        """
+        c = LOAD 'customer';
+        cb = FILTER c BY c_mktsegment == 'BUILDING';
+        o = LOAD 'orders';
+        li = LOAD 'lineitem';
+        """
+    )
+    script = "j3 = JOIN cb BY c_custkey, o BY o_custkey, li BY l_orderkey;"
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    calls = []
+    real = joins.counted_bytes
+
+    def record(df, threshold, label):
+        calls.append(label)
+        return real(df, threshold, label)
+
+    try:
+        spark.conf.set(key, "-1")
+        pig.execute(script)
+        want = sorted(pig.df("j3").collect())
+        monkeypatch.setattr(joins, "counted_bytes", record)
+        spark.conf.set(key, str(64 << 10))
+        pig.execute(script)
+        plan = pig.df("j3")._jdf.queryExecution().executedPlan().toString()
+        got = sorted(pig.df("j3").collect())
+    finally:
+        spark.conf.set(key, old)
+    assert calls == ["join: size input"]
+    assert "SortMergeJoin" not in plan and plan.count("BroadcastExchange") == 2
+    assert got == want and len(want) > 0
+
+
 def test_nary_outer_join_rejected(pig):
     pig.execute("c = LOAD 'customer'; o = LOAD 'orders'; n = LOAD 'nation';")
     with pytest.raises(PigSyntaxError):

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import logging
 import re
+import time
 from contextlib import contextmanager
 
 from pyspark.sql import Row
@@ -56,17 +57,17 @@ def _tpch(spark, sf_dir):
 
 
 def _sized_calls(monkeypatch):
-    """Record the inputs the default join materializes to size them."""
+    """Record the inputs the default join counts to size them."""
     from pigout_spark.operators import joins
 
     calls = []
-    real = joins.sized_checkpoint
+    real = joins.counted_bytes
 
-    def record(df, label):
+    def record(df, threshold, label):
         calls.append(label)
-        return real(df, label)
+        return real(df, threshold, label)
 
-    monkeypatch.setattr(joins, "sized_checkpoint", record)
+    monkeypatch.setattr(joins, "counted_bytes", record)
     return calls
 
 
@@ -78,11 +79,26 @@ def _static_plan(df):
     return re.sub(r"plan_id=\d+", "", df._jdf.queryExecution().executedPlan().toString())
 
 
+def _job_descriptions(sc, group):
+    """The descriptions of the jobs Spark ran in job group ``group``,
+    read once the status store has seen all of them."""
+    want = len(sc.statusTracker().getJobIdsForGroup(group))
+    for _ in range(50):
+        seen = sc._jsc.sc().statusStore().jobsList(None)
+        jobs = [seen.apply(i) for i in range(seen.size())]
+        jobs = [j for j in jobs if j.jobGroup().isDefined() and j.jobGroup().get() == group]
+        if len(jobs) == want:
+            return sorted({j.description().get() for j in jobs})
+        time.sleep(0.1)
+    raise AssertionError(f"the status store saw {len(jobs)} of {want} jobs")
+
+
 def test_join_broadcasts_a_small_join_output(spark, sf_dir, monkeypatch, caplog):
     """An inner join whose input is a shuffle-free join output, against
-    an input estimated above autoBroadcastJoinThreshold, reads that
-    input from an eager checkpoint taken under its own job description,
-    and broadcasts it: its stored bytes fit the threshold."""
+    an input estimated above autoBroadcastJoinThreshold, counts that
+    input under its own job description and broadcasts it: its counted
+    bytes fit the threshold.  Sizing stores nothing, and the large side
+    is read where it lies, with no exchange."""
     from pigout_spark.pipeline import iterate
 
     c, o, li = _tpch(spark, sf_dir)
@@ -90,45 +106,60 @@ def test_join_broadcasts_a_small_join_output(spark, sf_dir, monkeypatch, caplog)
     with _broadcast_threshold(spark, -1):
         want = _rows(join(join(c, o, (["c_custkey"], ["o_custkey"])), li, keys))
     calls = _sized_calls(monkeypatch)
-    seen = []
-    real = iterate.checkpoint
-
-    def spy(df, eager=False):
-        seen.append(spark.sparkContext.getLocalProperty("spark.job.description"))
-        return real(df, eager)
-
-    monkeypatch.setattr(iterate, "checkpoint", spy)
     caplog.set_level(logging.DEBUG, logger=iterate.__name__)
-    spark.sparkContext.setJobDescription("outer")
+    sc = spark.sparkContext
+    persisted = sc._jsc.getPersistentRDDs().size()
+    sc.setJobGroup("join-sizing-on", "outer")
     try:
         with _broadcast_threshold(spark, 64 << 10):
             out = join(join(c, o, (["c_custkey"], ["o_custkey"])), li, keys)
-        assert spark.sparkContext.getLocalProperty("spark.job.description") == "outer"
+            plan = _static_plan(out)
+        assert sc.getLocalProperty("spark.job.description") == "outer"
     finally:
-        spark.sparkContext.setJobDescription(None)
-    assert calls == ["join: size input"] and seen == ["join: size input"]
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert calls == ["join: size input"]
+    assert _job_descriptions(sc, "join-sizing-on") == ["join: size input"]
     (line,) = [r.getMessage() for r in caplog.records if r.name == iterate.__name__]
     assert re.fullmatch(r"join input: \d+ bytes, threshold 65536: broadcast", line)
-    plan = _static_plan(out)
-    assert re.search(r"BroadcastExchange[^\n]*\n(.*\n)*?.*Scan ExistingRDD", plan)
-    assert "SortMergeJoin" not in plan
+    assert sc._jsc.getPersistentRDDs().size() == persisted
+    assert plan.count("BroadcastExchange") == 2
+    assert "SortMergeJoin" not in plan and "hashpartitioning" not in plan
     assert _rows(out) == want and len(want) > 0
 
 
-def test_join_sized_input_over_threshold_gets_no_hint(spark, sf_dir, monkeypatch):
-    """Below the sized input's stored bytes the join is planned unhinted
-    over the checkpoint, with the same rows."""
+def test_join_counts_a_large_join_output_no_further_than_the_threshold(spark, sf_dir):
+    """The count behind a sizing stops one row past the threshold."""
+    from pigout_spark.pipeline.iterate import counted_bytes
+
+    c, o, _ = _tpch(spark, sf_dir)
+    co = join(o, c, (["o_custkey"], ["c_custkey"]), using="replicated")
+    width = 8 + co._jdf.schema().defaultSize()
+    rows = co.count()
+    assert counted_bytes(co, 1 << 30, "size") == rows * width
+    assert counted_bytes(co, 10 * width, "size") == 11 * width < rows * width
+
+
+def test_join_sized_input_over_threshold_plans_as_before(spark, sf_dir, monkeypatch, caplog):
+    """Below the sized input's counted bytes the join gets today's plan,
+    with the same rows."""
+    from pigout_spark.pipeline import iterate
+
     c, o, li = _tpch(spark, sf_dir)
     co = join(o, c, (["o_custkey"], ["c_custkey"]), using="replicated")
     keys = (["o_orderkey"], ["l_orderkey"])
     with _broadcast_threshold(spark, -1):
         want = _rows(join(co, li, keys))
     calls = _sized_calls(monkeypatch)
+    caplog.set_level(logging.DEBUG, logger=iterate.__name__)
     with _broadcast_threshold(spark, 1024):
         out = join(co, li, keys)
         plan = _static_plan(out)
+        plain = _static_plan(co.join(li, co["o_orderkey"] == li["l_orderkey"]))
     assert calls == ["join: size input"]
-    assert "Scan ExistingRDD" in plan and "BroadcastExchange" not in plan
+    (line,) = [r.getMessage() for r in caplog.records if r.name == iterate.__name__]
+    assert line.endswith("threshold 1024: no broadcast")
+    assert plan == plain and "SortMergeJoin" in plan
     assert _rows(out) == want
 
 
@@ -140,14 +171,15 @@ def test_join_sizing_off_at_threshold_minus_one_starts_no_job(spark, sf_dir):
         with _broadcast_threshold(spark, -1):
             co = join(o, c, (["o_custkey"], ["c_custkey"]), using="replicated")
             out = join(co, li, (["o_orderkey"], ["l_orderkey"]))
+            plain = co.join(li, co["o_orderkey"] == li["l_orderkey"])
+            assert _static_plan(out) == _static_plan(plain)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert list(sc.statusTracker().getJobIdsForGroup("join-sizing-off")) == []
-    assert "Scan ExistingRDD" not in _static_plan(out)
 
 
-def test_join_never_materializes_an_input_with_a_shuffle(spark, sf_dir, monkeypatch):
+def test_join_never_sizes_an_input_with_a_shuffle(spark, sf_dir, monkeypatch):
     """A join over a groupBy is more than one map stage: it is joined
     as it is."""
     c, o, li = _tpch(spark, sf_dir)
@@ -160,16 +192,19 @@ def test_join_never_materializes_an_input_with_a_shuffle(spark, sf_dir, monkeypa
         join(co, li, keys)  # the same join without the groupBy is sized
         assert calls == ["join: size input"]
         plan = _static_plan(join(side, li, keys))
-    assert calls == ["join: size input"] and "Scan ExistingRDD" not in plan
+        plain = _static_plan(side.join(li, side["o_orderkey"] == li["l_orderkey"]))
+    assert calls == ["join: size input"] and plan == plain
 
 
 def test_join_sizes_nothing_when_the_other_input_fits(spark, sf_dir, monkeypatch):
     """At the default 10 MB threshold the fixture's lineitem already
-    fits, so Spark's own planner decides and nothing is materialized."""
+    fits, so Spark's own planner decides and nothing is counted."""
     c, o, li = _tpch(spark, sf_dir)
+    co = join(c, o, (["c_custkey"], ["o_custkey"]))
     calls = _sized_calls(monkeypatch)
-    out = join(join(c, o, (["c_custkey"], ["o_custkey"])), li, (["o_orderkey"], ["l_orderkey"]))
-    assert calls == [] and "Scan ExistingRDD" not in _static_plan(out)
+    out = join(co, li, (["o_orderkey"], ["l_orderkey"]))
+    plain = co.join(li, co["o_orderkey"] == li["l_orderkey"])
+    assert calls == [] and _static_plan(out) == _static_plan(plain)
 
 
 def test_outer_and_using_joins_plan_as_before(spark, sf_dir, monkeypatch):
@@ -188,8 +223,7 @@ def test_outer_and_using_joins_plan_as_before(spark, sf_dir, monkeypatch):
         assert _static_plan(got) == _static_plan(co.join(F.broadcast(li), cond))
         got = join(co, li, (["o_orderkey"], ["l_orderkey"]), using="merge")
         assert _static_plan(got) == _static_plan(co.hint("merge").join(li, cond))
-        got = join(co, li, (["o_orderkey"], ["l_orderkey"]), using="skewed")
-        assert "Scan ExistingRDD" not in _static_plan(got)
+        join(co, li, (["o_orderkey"], ["l_orderkey"]), using="skewed")
     assert calls == []
 
 

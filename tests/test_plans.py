@@ -49,7 +49,7 @@ def test_q03_streams_lineitem_past_a_broadcast_join_output(spark, sf_dir):
     """q03's customer ⋈ orders side is a shuffle-free join output that
     is sized and broadcast, so the static plan streams lineitem into
     the join, with neither a shuffle nor a broadcast of it.  The
-    threshold sits between that side's stored bytes (3.8 kB) and
+    threshold sits between that side's counted bytes (under 48 kB) and
     lineitem's estimate (117 kB), as 10 MB does at sf1."""
     from pigout_spark import queries as qmod
 
