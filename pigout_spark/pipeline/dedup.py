@@ -20,17 +20,30 @@ from __future__ import annotations
 
 import random
 
-from pyspark.sql import Column, DataFrame, Window
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ByteType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 #: Mersenne prime modulus for the MinHash permutation family.
 MINHASH_P = 2_147_483_647
 
 
 from pigout_spark.pipeline.iterate import (  # noqa: E402
+    broadcast_threshold,
     checkpoint,
+    decide,
     fixpoint,
     job_description,
+    row_width,
 )
 from pigout_spark.plans.partitioning import pin_partitions as _pin_partitions  # noqa: E402
 
@@ -812,13 +825,29 @@ def dedup_clusters(
     with ``cluster_id`` = the smallest doc id in the component.  The
     step every pair generator above feeds: near-dup dedup keeps one doc
     per CLUSTER, not per pair (pair relations aren't transitive-closed).
+    A NULL in ``left`` or ``right`` raises, naming the column: a NULL
+    endpoint belongs to no component.
 
-    Min-label propagation with pointer jumping and parent hooking
-    (after Shiloach–Vishkin, J. Algorithms 1982), driver-coordinated.
-    The state is ``(id, lbl, old)``, ``old`` being the label before the
-    last round, so a node changed iff ``lbl < old`` — for any orderable
-    id type.  The initial state is round 0 (each node's label is the
-    smallest of itself and its neighbors).  Each further round sends:
+    The symmetric edge list is checkpointed first, eagerly.  When its
+    rows fit Spark's broadcast threshold
+    (``spark.sql.autoBroadcastJoinThreshold`` over
+    :func:`~pigout_spark.pipeline.iterate.row_width` bytes a row, the
+    package's one rule, :func:`~pigout_spark.pipeline.iterate.decide`)
+    and the ids are integers or binary-collated strings, whose Python
+    order is Spark's (code-point order is UTF-8 byte order), the
+    components come from a union-find on the driver and the result is a
+    local relation Spark knows the size of, so a join against it
+    broadcasts.  The collect that decides reads the checkpoint in one
+    task under the job description ``"dedup_clusters: collect edges"``
+    and stops one row past the threshold.
+
+    Otherwise min-label propagation with pointer jumping and parent
+    hooking (after Shiloach–Vishkin, J. Algorithms 1982),
+    driver-coordinated.  The state is ``(id, lbl, old)``, ``old`` being
+    the label before the last round, so a node changed iff ``lbl <
+    old`` — for any orderable id type.  The initial state is round 0
+    (each node's label is the smallest of itself and its neighbors).
+    Each further round sends:
 
     - a changed node's label along its edges (an unchanged node already
       delivered its label, and labels only shrink, so only the frontier
@@ -835,21 +864,33 @@ def dedup_clusters(
     :func:`~pigout_spark.pipeline.iterate.fixpoint`, which checkpoints
     the state every round.  Measured rounds after round 0: 7 on a
     64-node chain with sorted ids, 12 with ids shuffled by
-    ``random.Random(3)``, 6-7 on sf0.1 MinHash star graphs (8 k edges
-    over 4.6 k docs).
+    ``random.Random(3)``; the sf0.1 MinHash pair graph of
+    ``x_dedup_clusters`` (about 4.2 M directed edges) is above the
+    default threshold and takes the loop.
 
-    100 TB: every step is a key-equi join or partial agg on doc ids —
-    no broadcast of anything data-sized, no driver materialization;
-    state per round is one row per doc in any pair.  The edge list is
-    checkpointed hash-partitioned on the join key, and the checkpoint
-    keeps that partitioning (see
+    100 TB: the driver holds at most threshold / row width edge rows,
+    no more than a broadcast of the edge list would hold, and returns
+    no more nodes than those rows name.  A graph above the threshold
+    pays the eager checkpoint one job earlier than the loop would have
+    computed it, and a read of the stored blocks of its first
+    partitions until one row past the threshold.  In the loop every
+    step is a key-equi join or partial agg on doc ids, with no broadcast
+    of anything data-sized; the state per round is one row per doc in
+    any pair.  The edge list is checkpointed hash-partitioned on the
+    join key, and the checkpoint keeps that partitioning (see
     :func:`~pigout_spark.pipeline.iterate.checkpoint`), so no round
     re-exchanges it.
     """
-    sc = pairs.sparkSession.sparkContext
-    npart = int(
-        pairs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    spark = pairs.sparkSession
+    sc = spark.sparkContext
+    npart = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+
+    def endpoint(c: str) -> Column:
+        # checked inside the explode: a filter on the pair columns is
+        # pushed into the plan that made the pairs, one column to each
+        # side of a self-join, which then no longer shares its exchanges
+        return F.coalesce(F.col(c), F.raise_error(f"dedup_clusters: NULL in {c}"))
+
     # The symmetric edge list is read every round, so it is materialized
     # once (else the whole pair generation re-runs per round: 28 s →
     # 12 s on a 2 M-edge minhash graph).  Both directions come from one
@@ -857,23 +898,38 @@ def dedup_clusters(
     # generation twice.  No distinct: min-label CC is idempotent to
     # parallel edges.  Partitioned on the join key before the
     # checkpoint, so every round's request join reads it in place.
+    # Eager, so the collect below reads stored blocks: under a lazy
+    # checkpoint its one task computes the first partitions, and Spark
+    # completes the rest in a second job after it (x_dedup_clusters at
+    # sf0.1, build and run: 8.1 s eager, 10.2 s lazy, median of 3).
     with job_description(sc, "dedup_clusters round 0"):
         edges = checkpoint(
             pairs.select(
                 F.explode(
                     F.array(
                         F.struct(
-                            F.col(left).alias("u"), F.col(right).alias("v")
+                            endpoint(left).alias("u"), F.col(right).alias("v")
                         ),
                         F.struct(
-                            F.col(right).alias("u"), F.col(left).alias("v")
+                            endpoint(right).alias("u"), F.col(left).alias("v")
                         ),
                     )
                 ).alias("__e")
             )
             .select(F.col("__e.u").alias("u"), F.col("__e.v").alias("v"))
-            .repartition(npart, "u")
+            .repartition(npart, "u"),
+            eager=True,
         )
+        threshold = broadcast_threshold(spark)
+        if threshold is not None and edges.schema["u"].dataType in _DRIVER_ORDERED:
+            width = row_width(edges)
+            # one task reads the partitions in turn and stops at the limit
+            with job_description(sc, "dedup_clusters: collect edges"):
+                rows = edges.coalesce(1).limit(threshold // width + 1).toArrow()
+            if decide("dedup_clusters edges", rows.num_rows * width, threshold):
+                return _components_on_driver(
+                    spark, rows, edges.schema["u"], out_id, out_root
+                )
         state = checkpoint(
             edges.groupBy("u")
             .agg(F.least(F.col("u"), F.min("v")).alias("lbl"))
@@ -929,6 +985,49 @@ def dedup_clusters(
         return state.select(
             F.col("id").alias(out_id), F.col("lbl").alias(out_root)
         )
+
+
+#: id types whose order in Python is Spark's: integers, and strings
+#: under the default binary collation, whose code-point order is UTF-8
+#: byte order.  Doubles (NaN, -0.0), timestamps and other collations
+#: take the loop.
+_DRIVER_ORDERED = (ByteType(), ShortType(), IntegerType(), LongType(), StringType())
+
+
+def _components_on_driver(
+    spark: SparkSession,
+    edges: pa.Table,
+    id_field: StructField,
+    out_id: str,
+    out_root: str,
+) -> DataFrame:
+    """(node, smallest node of its component) over the collected
+    ``(u, v)`` edge rows, by union-find with path halving, as a local
+    relation with the loop's schema.  Every root is the smallest node of
+    its tree: a union hangs the larger root under the smaller."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = x = parent[parent[x]]
+        return x
+
+    for u, v in zip(*(c.to_pylist() for c in edges.columns)):
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    ids = list(parent)
+    schema = StructType(
+        [
+            StructField(out_id, id_field.dataType, id_field.nullable),
+            StructField(out_root, id_field.dataType, True),
+        ]
+    )
+    table = pa.table(
+        [pa.array(ids), pa.array([find(x) for x in ids])], names=schema.names
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def retain_per_cluster(

@@ -7,7 +7,12 @@ partitioning it declares.  Every broadcast decided on a measured size
 goes through :func:`decide`, against Spark's own
 ``spark.sql.autoBroadcastJoinThreshold``; :func:`sized_checkpoint`
 measures a relation the query stores anyway, and :func:`counted_bytes`
-one it does not.
+one it does not.  The gates: the default join's sized input
+(``operators/joins.py``), the DSIR weight table
+(``pipeline/curation.py``), and the edge list of
+``pipeline/dedup.py:dedup_clusters``, which collects no more of its
+rows than one past the threshold, at :func:`row_width` bytes a row, and
+solves a graph that fits on the driver instead of running its loop.
 
 :func:`fixpoint` runs a step function over a state of one DataFrame or a
 tuple of them.  It owns what every loop used to write out by hand: the
@@ -161,9 +166,7 @@ def sized_checkpoint(df: DataFrame, label: str) -> tuple[DataFrame, int]:
 def counted_bytes(df: DataFrame, threshold: int, label: str) -> int:
     """Spark's size of ``df`` with its rows counted, under the job
     description ``label``: the measure of a relation the query does not
-    store.  The bytes are the row count times Spark's own size of a row
-    without column statistics (``EstimationUtils.getSizePerRow``: 8
-    bytes plus each column's default size).
+    store.  The bytes are the row count times :func:`row_width`.
 
     The count stops one row past ``threshold`` bytes: it is a ``LIMIT``
     collected the way Spark collects one, a partition first and then
@@ -173,10 +176,17 @@ def counted_bytes(df: DataFrame, threshold: int, label: str) -> int:
     keys need, writes and keeps nothing, and brings at most that many
     rows of one constant to the driver: no more rows than the broadcast
     it decides on would hold."""
-    width = 8 + df._jdf.schema().defaultSize()
+    width = row_width(df)
     probe = df.select(F.lit(1)).limit(threshold // width + 1)
     with job_description(df.sparkSession.sparkContext, label):
         return len(probe._jdf.collect()) * width
+
+
+def row_width(df: DataFrame) -> int:
+    """Spark's own size of one of ``df``'s rows without column
+    statistics (``EstimationUtils.getSizePerRow``): 8 bytes plus each
+    column's default size."""
+    return 8 + df._jdf.schema().defaultSize()
 
 
 def has_join(df: DataFrame) -> bool:

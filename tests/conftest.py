@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import sys
+import time
 import warnings
 from pathlib import Path
 
@@ -64,3 +65,41 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def job_descriptions(spark):
+    """The descriptions of the jobs Spark ran in a job group, read once
+    the status store has seen all of them."""
+    sc = spark.sparkContext
+
+    def read(group):
+        want = len(sc.statusTracker().getJobIdsForGroup(group))
+        for _ in range(50):
+            seen = sc._jsc.sc().statusStore().jobsList(None)
+            jobs = [seen.apply(i) for i in range(seen.size())]
+            jobs = [
+                j for j in jobs if j.jobGroup().isDefined() and j.jobGroup().get() == group
+            ]
+            if len(jobs) == want:
+                return sorted({j.description().get() for j in jobs})
+            time.sleep(0.1)
+        raise AssertionError(f"the status store saw {len(jobs)} of {want} jobs")
+
+    return read
+
+
+@pytest.fixture(params=["driver", "loop"])
+def cc_branch(request, spark):
+    """Runs a connected-components test on each branch of
+    ``dedup_clusters``: at the session's broadcast threshold, where a
+    test graph fits and is solved on the driver, and at -1, which takes
+    the round loop."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    if request.param == "loop":
+        spark.conf.set(key, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)

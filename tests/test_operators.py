@@ -4,7 +4,6 @@ from __future__ import annotations
 
 import logging
 import re
-import time
 from contextlib import contextmanager
 
 from pyspark.sql import Row
@@ -79,21 +78,9 @@ def _static_plan(df):
     return re.sub(r"plan_id=\d+", "", df._jdf.queryExecution().executedPlan().toString())
 
 
-def _job_descriptions(sc, group):
-    """The descriptions of the jobs Spark ran in job group ``group``,
-    read once the status store has seen all of them."""
-    want = len(sc.statusTracker().getJobIdsForGroup(group))
-    for _ in range(50):
-        seen = sc._jsc.sc().statusStore().jobsList(None)
-        jobs = [seen.apply(i) for i in range(seen.size())]
-        jobs = [j for j in jobs if j.jobGroup().isDefined() and j.jobGroup().get() == group]
-        if len(jobs) == want:
-            return sorted({j.description().get() for j in jobs})
-        time.sleep(0.1)
-    raise AssertionError(f"the status store saw {len(jobs)} of {want} jobs")
-
-
-def test_join_broadcasts_a_small_join_output(spark, sf_dir, monkeypatch, caplog):
+def test_join_broadcasts_a_small_join_output(
+    spark, sf_dir, monkeypatch, caplog, job_descriptions
+):
     """An inner join whose input is a shuffle-free join output, against
     an input estimated above autoBroadcastJoinThreshold, counts that
     input under its own job description and broadcasts it: its counted
@@ -119,7 +106,7 @@ def test_join_broadcasts_a_small_join_output(spark, sf_dir, monkeypatch, caplog)
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert calls == ["join: size input"]
-    assert _job_descriptions(sc, "join-sizing-on") == ["join: size input"]
+    assert job_descriptions("join-sizing-on") == ["join: size input"]
     (line,) = [r.getMessage() for r in caplog.records if r.name == iterate.__name__]
     assert re.fullmatch(r"join input: \d+ bytes, threshold 65536: broadcast", line)
     assert sc._jsc.getPersistentRDDs().size() == persisted

@@ -629,7 +629,7 @@ def test_token_budget_select(spark):
     assert got == [1, 2, 4]
 
 
-def test_dedup_clusters_topologies(spark):
+def test_dedup_clusters_topologies(spark, cc_branch):
     """Connected components over pair graphs: 64-node chains (worst
     case for plain label propagation — pointer jumping and hooking must
     converge in O(log n) rounds, well under the 25-round cap) with
@@ -690,11 +690,13 @@ def _ancestors(plan: str, pattern: str) -> list[list[str]]:
 
 
 def test_dedup_clusters_single_edge_path(spark, monkeypatch):
-    """One path for every graph size gives union-find's components and
-    leaves no RDD persisted but local checkpoints; the caller's job
-    description is restored.  With broadcast off, no CC round
-    re-exchanges the edge list: nothing between the edge scan and the
-    request join is an Exchange.  The result's optimizer size estimate does not compound
+    """The round loop gives union-find's components and leaves no RDD
+    persisted but complete local checkpoints: the edge checkpoint is
+    eager, so Spark truncates its lineage, though every later reader of
+    it is a shuffle-map stage.  The caller's job description is
+    restored.  With broadcast off, no CC round re-exchanges the edge
+    list: nothing between the edge scan and the request join is an
+    Exchange.  The result's optimizer size estimate does not compound
     across rounds (squared per round, it stalled the driver for minutes
     by round ~20).  A round limit too small for the graph raises with
     the number of rounds run."""
@@ -733,11 +735,9 @@ def test_dedup_clusters_single_edge_path(spark, monkeypatch):
         for up in scans:
             below_join = up[: next(i for i, n in enumerate(up) if "Join" in n)]
             assert not any(n.startswith("Exchange") for n in below_join), up
-        # every RDD left persisted is a local checkpoint's; the edge
-        # checkpoint is read only inside shuffle-map stages, which never
-        # truncate lineage, so it is marked but not isCheckpointed()
+        # every RDD left persisted is a complete local checkpoint
         assert all(
-            rdd.rdd().checkpointData().isDefined()
+            rdd.rdd().isCheckpointed()
             for rid, rdd in sc._jsc.getPersistentRDDs().items()
             if rid not in persisted
         )
@@ -799,7 +799,7 @@ def test_minhash_star_edges_same_clusters(spark):
     assert n_star <= max(n_pairs, 1) or n_pairs == 0
 
 
-def test_dedup_clusters_merges_across_pair_sources(spark):
+def test_dedup_clusters_merges_across_pair_sources(spark, cc_branch):
     """Components bridge pairs that no single generator would link
     transitively: a-b and b-c pairs put a,c in one cluster."""
     from pigout_spark.pipeline.dedup import dedup_clusters
@@ -809,7 +809,7 @@ def test_dedup_clusters_merges_across_pair_sources(spark):
     assert got == {2: 2, 5: 2, 7: 2, 9: 2}
 
 
-def test_dedup_clusters_string_ids(spark):
+def test_dedup_clusters_string_ids(spark, cc_branch):
     """Non-numeric doc ids (string/hash/UUID — the common case in
     dedup) must not converge early: an 8-hop chain that stops after
     one round comes back half-merged."""
@@ -825,6 +825,107 @@ def test_dedup_clusters_string_ids(spark):
     assert all(got[i] == "doc-a" for i in ids)
     assert got["zz-1"] == got["zz-2"] == "zz-1"
     assert len(got) == len(ids) + 2
+
+
+def test_dedup_clusters_id_edge_cases(spark, cc_branch):
+    """Ids a float would round (longs above 2**53), non-ASCII strings
+    (the smallest by UTF-8 byte order, which Java's UTF-16 order puts
+    elsewhere: U+FF21 against U+1F600), self-loops and duplicate edges;
+    an empty input returns no rows under the same schema."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from pigout_spark.pipeline.dedup import dedup_clusters
+
+    big = 2**53
+    cases = [
+        (
+            [(big + 3, big + 1), (big + 1, 2**63 - 1), (big + 2, big + 5)],
+            {big + 3: big + 1, big + 1: big + 1, 2**63 - 1: big + 1,
+             big + 2: big + 2, big + 5: big + 2},
+        ),
+        (
+            [("\U0001f600", "\uff21"), ("z", "\u00e9"), ("\u00e9", "\u00e9")],
+            {"\U0001f600": "\uff21", "\uff21": "\uff21", "z": "z", "\u00e9": "z"},
+        ),
+        (
+            [(5, 5), (6, 7), (7, 6), (6, 7), (7, 7)],
+            {5: 5, 6: 6, 7: 6},
+        ),
+    ]
+    for edges, want in cases:
+        pairs = spark.createDataFrame(edges, ["doc_a", "doc_b"])
+        got = {r.doc_id: r.cluster_id for r in dedup_clusters(pairs).collect()}
+        assert got == want
+    empty = spark.createDataFrame([], "doc_a bigint, doc_b bigint")
+    out = dedup_clusters(empty)
+    assert out.collect() == []
+    assert out.schema == StructType(
+        [StructField("doc_id", LongType()), StructField("cluster_id", LongType())]
+    )
+
+
+def test_dedup_clusters_null_endpoint_raises(spark, cc_branch):
+    """A NULL endpoint belongs to no component: the call raises and
+    names the column."""
+    from pyspark.errors import SparkRuntimeException
+
+    from pigout_spark.pipeline.dedup import dedup_clusters
+
+    for edges, col in (
+        ([(1, 2), (2, None)], "doc_b"),
+        ([(1, 2), (None, 3)], "doc_a"),
+    ):
+        pairs = spark.createDataFrame(edges, "doc_a bigint, doc_b bigint")
+        with pytest.raises(SparkRuntimeException, match=f"dedup_clusters: NULL in {col}"):
+            dedup_clusters(pairs).collect()
+
+
+def test_dedup_clusters_broadcast_gate(spark, caplog, job_descriptions):
+    """The edge list's rows times Spark's row size decide the branch:
+    a graph of 16 directed edges (384 bytes) is solved on the driver at
+    a threshold of 384 and takes the round loop at 383.  Each decision
+    logs one DEBUG line and runs its collect under its own job
+    description; over the threshold the loop runs that one job more
+    than with broadcast off, and every branch returns the same rows."""
+    import logging
+
+    from pigout_spark.pipeline import iterate
+    from pigout_spark.pipeline.dedup import dedup_clusters
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(8)], ["doc_a", "doc_b"]
+    )
+    caplog.set_level(logging.DEBUG, logger=iterate.__name__)
+    sc = spark.sparkContext
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    got, jobs = {}, {}
+    try:
+        for threshold in (384, 383, -1):
+            spark.conf.set(key, str(threshold))
+            group = f"cc-gate-{threshold}"
+            sc.setJobGroup(group, "outer")
+            caplog.clear()
+            got[threshold] = sorted(dedup_clusters(pairs).collect())
+            jobs[threshold] = job_descriptions(group)
+            jobs[threshold, "n"] = len(sc.statusTracker().getJobIdsForGroup(group))
+            lines = [r.getMessage() for r in caplog.records if "edges" in r.getMessage()]
+            if threshold > 0:
+                branch = "broadcast" if threshold == 384 else "no broadcast"
+                assert lines == [
+                    f"dedup_clusters edges: 384 bytes, threshold {threshold}: {branch}"
+                ]
+            else:
+                assert lines == []
+    finally:
+        spark.conf.set(key, old)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert got[384] == got[383] == got[-1] == [(i, 0) for i in range(9)]
+    assert jobs[384] == ["dedup_clusters round 0", "dedup_clusters: collect edges"]
+    assert "dedup_clusters: collect edges" not in jobs[-1]
+    assert set(jobs[383]) - set(jobs[-1]) == {"dedup_clusters: collect edges"}
+    assert jobs[383, "n"] - jobs[-1, "n"] == 1
 
 
 def test_retain_per_cluster_policies(spark):
@@ -2993,12 +3094,21 @@ _LOOPS = {
         lambda g, s, n: graph.shortest_paths(g, [s], iterations=n), 4, 8, True
     ),
     "dedup_clusters": (
-        lambda g, s, n: dedup_clusters(g.where(F.col("span") <= n), "src", "dst"),
-        7,
-        1,
-        True,
+        lambda g, s, n: _cc_loop(g.where(F.col("span") <= n)), 7, 1, True
     ),
 }
+
+
+def _cc_loop(edges):
+    """dedup_clusters by its round loop: a threshold of -1 keeps a
+    graph of any size off the driver."""
+    spark = edges.sparkSession
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        return dedup_clusters(edges, "src", "dst")
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
 @pytest.mark.parametrize("loop", sorted(_LOOPS))

@@ -12,7 +12,7 @@ from __future__ import annotations
 import math
 import re
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from pigout_spark.functions.strings import INDEXOF, LAST_INDEX_OF, SUBSTRING, TOKENIZE
@@ -96,7 +96,12 @@ def test_fuzz_oracle_sample(spark):
         assert value_hash(spdf) == value_hash(opdf), sql
 
 
-@settings(max_examples=1, deadline=None)
+# cc_branch sets one conf for the whole test, so it holds for every example
+@settings(
+    max_examples=1,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
 @given(
     st.lists(
         st.tuples(st.integers(0, 40), st.integers(0, 40)),
@@ -104,10 +109,11 @@ def test_fuzz_oracle_sample(spark):
         max_size=60,
     )
 )
-def test_dedup_clusters_matches_union_find(spark, edges):
-    """Connected components (pointer-jumping label propagation) must
-    equal a reference union-find on random edge lists — including
-    self-loops, duplicate and reversed edges."""
+def test_dedup_clusters_matches_union_find(spark, cc_branch, edges):
+    """Connected components, on the driver and in the round loop
+    (pointer-jumping label propagation), must equal a reference
+    union-find on random edge lists — including self-loops, duplicate
+    and reversed edges."""
     from pigout_spark.pipeline.dedup import dedup_clusters
 
     parent: dict[int, int] = {}
